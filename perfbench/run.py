@@ -1,13 +1,13 @@
 #!/usr/bin/env python3
 """Benchmark of spark_ensemble_spark: one workload, one seed, one run.
 
-    python3 perfbench/run.py --workload boost_fit --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload boost_fit --seed 1 --seconds 8 --trace 0
 
 The run writes seeded inputs and sets the workload up several times, each
-set-up followed by one timed (cold) operation; the last set-up is kept.  It
-then runs the workload's operation cycle as a closed loop — one client, one
-operation at a time, on ``local[nproc]`` — in whole cycles for at least
-``--seconds``.  Every operation's output is checked; exceptions and wrong
+set-up followed by one timed (cold) operation; the last set-up is kept.  After
+one untimed warm-up cycle it runs the workload's operation cycle as a closed
+loop — one client, one operation at a time, on ``local[nproc]`` — in whole
+cycles for at least ``--seconds``.  Every operation's output is checked; exceptions and wrong
 outputs count as failed operations.
 
 ``--trace 0`` prints the end-to-end metrics.  ``--trace 1`` runs the loop in
@@ -274,6 +274,10 @@ class Runner:
                 colds.append(self.op(rep, "cold"))
                 if rep == 0 and colds[0]["ok"]:
                     self.verify(colds[0])
+            # One whole cycle before timing: the first cycle after the set-ups
+            # still runs up to 1.7x slower, and whether a timed loop held one
+            # or two cycles then decided the median.
+            self.loop(0, "warmup")
             sampler.reset()  # memory is reported for the loop, not the set-ups
             if args.trace:
                 traced = self.traced_loop()
