@@ -4,14 +4,17 @@ The library reads its fixtures from a directory of parquet tables
 (``sources.datasets`` for the ML fixtures, ``queries`` for the operator
 queries).  This module writes such a directory from a seed, so a run needs
 nothing outside its checkout and the same seed always yields byte-identical
-inputs.  Shapes follow the test tables the library is developed against:
+inputs.  Every distribution below reproduces one measured on the library's
+test tables (sf0.001, sf0.01 and sf0.1); README.md ("Inputs") lists the
+measurements.
 
-* ``lineitem`` — the numeric columns the ML fixtures assemble, with a unit
-  price that depends on ``l_partkey`` (so the multiclass price-bucket label is
-  learnable but not trivially) and three balanced classes.
-* ``documents`` — whitespace-token text over the same 30-word vocabulary,
-  10-100 words per document, five languages, and 5% near-duplicates of
-  earlier documents (so MinHash dedup and Bloom decontamination have work).
+* ``lineitem`` — the columns the ML fixtures read.  Key ranges scale with the
+  row count as in the test tables (``l_partkey`` < rows/30, ``l_suppkey`` <
+  rows/600, about four lines per ``l_orderkey``); ``l_extendedprice`` is
+  uniform on [900, 105000), independent of every other column.
+* ``documents`` — whitespace-token text over a 30-word vocabulary, 10-99
+  words per document, five languages, 20 sources; 5% of the documents are an
+  exact copy of another document with the token ``dup`` appended.
 """
 
 from __future__ import annotations
@@ -28,44 +31,40 @@ VOCAB = (
     "the value vector window"
 ).split()
 LANGS = ("en", "zh", "es", "fr", "de")
-LANG_P = (0.42, 0.15, 0.15, 0.14, 0.14)
+LANG_P = (0.41, 0.15, 0.15, 0.15, 0.14)
+DUP_SHARE = 0.05
+
+
+def _cents(rng: np.random.Generator, lo: float, hi: float, n: int) -> np.ndarray:
+    return np.round(rng.uniform(lo, hi, n), 2)
 
 
 def lineitem(rng: np.random.Generator, n: int) -> pa.Table:
-    partkey = rng.integers(0, 2000, n)
-    quantity = rng.integers(1, 51, n).astype(np.float64)
-    # Unit price: a per-part base rising over ~300..6000 with l_partkey plus
-    # per-line noise, so the 1350/3125 buckets of the multiclass fixture are
-    # learnable from the features with classes of about 1/2, 1/4 and 1/4.
-    base = 300.0 * np.exp(3.0 * partkey / 2000.0)
-    unit = base * np.exp(rng.normal(0.0, 0.25, n))
     return pa.table(
         {
             "l_orderkey": rng.integers(0, max(n // 4, 1), n),
-            "l_partkey": partkey,
-            "l_suppkey": rng.integers(0, 100, n),
-            "l_quantity": quantity,
-            "l_extendedprice": np.round(quantity * unit, 2),
-            "l_discount": rng.integers(0, 11, n) / 100.0,
-            "l_tax": rng.integers(0, 9, n) / 100.0,
+            "l_partkey": rng.integers(0, max(n // 30, 1), n),
+            "l_suppkey": rng.integers(0, max(n // 600, 1), n),
+            "l_quantity": rng.integers(1, 51, n).astype(np.float64),
+            "l_extendedprice": _cents(rng, 900.0, 105_000.0, n),
+            "l_discount": _cents(rng, 0.0, 0.10, n),
+            "l_tax": _cents(rng, 0.0, 0.08, n),
             "l_returnflag": rng.choice(np.array(["A", "N", "R"]), n),
         }
     )
 
 
 def documents(rng: np.random.Generator, n: int) -> pa.Table:
-    texts: list[str] = []
-    for i in range(n):
-        if i >= 20 and rng.random() < 0.05:
-            words = texts[int(rng.integers(0, i))].split()
-            words = [w for w in words if w != "dup"]
-            for j in rng.integers(0, len(words), max(1, len(words) // 25)):
-                words[j] = VOCAB[int(rng.integers(0, len(VOCAB)))]
-            words.append("dup")
-        else:
-            k = int(rng.integers(10, 101))
-            words = [VOCAB[j] for j in rng.integers(0, len(VOCAB), k)]
-        texts.append(" ".join(words))
+    texts = [
+        " ".join(VOCAB[j] for j in rng.integers(0, len(VOCAB), int(rng.integers(10, 100))))
+        for _ in range(n)
+    ]
+    # Copies are made in place, one after another, so a copy of a copy
+    # carries two markers, as a few test-table documents do.
+    for target in rng.choice(n, size=round(DUP_SHARE * n), replace=False):
+        source = int(rng.integers(0, n - 1))
+        source += source >= target
+        texts[target] = texts[source] + " dup"
     return pa.table(
         {
             "doc_id": np.arange(n, dtype=np.int64),

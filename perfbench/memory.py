@@ -1,8 +1,12 @@
 """Peak resident memory of the benchmark's process tree, sampled from /proc.
 
 The tree is this Python driver, the JVM it launches, and the Python workers
-the JVM forks.  A daemon thread sums resident pages over the tree every
-``interval`` seconds and keeps the peaks.
+the JVM forks.  A daemon thread sums resident memory over the tree every
+``interval`` seconds and keeps the peaks.  The Python workers are forked from
+one daemon and share most of their pages with it, so below the JVM each
+process counts its proportional set size (shared pages split between their
+sharers): the sum is then the memory the workers hold, not the number of
+workers alive times the daemon's size.
 """
 
 from __future__ import annotations
@@ -61,6 +65,17 @@ def _rss_mb(pid: int) -> float:
         return 0.0
 
 
+def _pss_mb(pid: int) -> float:
+    try:
+        with open(f"/proc/{pid}/smaps_rollup") as f:
+            for line in f:
+                if line.startswith("Pss:"):
+                    return int(line.split()[1]) / 1024
+    except OSError:
+        pass
+    return 0.0
+
+
 class TreeMemorySampler:
     """Samples the RSS of ``root`` and its descendants until ``stop``; the
     peaks cover the time since the last ``reset``."""
@@ -103,7 +118,7 @@ class TreeMemorySampler:
         stack = [(self.root, False)]
         while stack:
             pid, under_jvm = stack.pop()
-            rss = _rss_mb(pid)
+            rss = _pss_mb(pid) if under_jvm else _rss_mb(pid)
             comm = procs.get(pid, (0, ""))[1]
             total += rss
             if comm == "java":

@@ -1,19 +1,19 @@
 #!/usr/bin/env python3
 """Benchmark of spark_ensemble_spark: one workload, one seed, one run.
 
-    python3 perfbench/run.py --workload boost_fit --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload boost_fit --seed 1 --seconds 4 --trace 0
 
-The run writes seeded inputs and sets the workload up several times, each
-set-up followed by one timed (cold) operation; the last set-up is kept.  After
-one untimed warm-up cycle it runs the workload's operation cycle as a closed
-loop — one client, one operation at a time, on ``local[nproc]`` — in whole
-cycles for at least ``--seconds``.  Every operation's output is checked; exceptions and wrong
-outputs count as failed operations.
+The run writes seeded inputs and sets the workload up several times; the
+first set-up, in a fresh JVM, is followed by one timed (cold) operation, and
+the last set-up is kept.  After one untimed warm-up cycle it runs the workload's
+operation cycle as a closed loop — one client, one operation at a time, on
+``local[nproc]`` — for ``--seconds`` / 4 whole cycles.  Every operation's
+output is checked; exceptions and wrong outputs count as failed operations.
 
 ``--trace 0`` prints the end-to-end metrics.  ``--trace 1`` runs the loop in
-three segments — untraced, traced, untraced, each on a fresh Spark context —
-and prints the per-layer metrics of the traced segment plus the tracing
-overhead against the untraced segments.
+three segments — untraced, traced, untraced, each on a fresh Spark context
+with one warm-up cycle — and prints the per-layer metrics of the traced
+segment plus the tracing overhead against the untraced segments.
 
 The last stdout line is one JSON object: ``correct``, ``attempted``,
 ``failed`` and ``metrics``.  A full record (environment, every sample, every
@@ -34,13 +34,24 @@ import traceback
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SETUP_REPS = 3
 DRIVER_MEMORY = "2g"
+# The loop runs --seconds / LOOP_CYCLE_S whole cycles (at least one), about
+# --seconds of work on a 4-vCPU host.  A count, not a time limit: operation
+# times still fall from cycle to cycle as the JIT warms up, and under a time
+# limit a faster run measured one more, faster cycle, which moved the median
+# by up to 20%.
+LOOP_CYCLE_S = 4.0
+# The driver JVM's heap is pinned at 2 GB and collected by the parallel
+# collector with fixed generation sizes: G1 sizes its heap by GC timing, and
+# its resident size then swung by 20% between identical runs.  Eden is
+# reused from its start after each collection, so resident memory is eden
+# plus what the old generation holds plus native memory.
+DRIVER_JAVA_OPTS = ("-XX:ReservedCodeCacheSize=512m -Xms2g "
+                    "-XX:+UseParallelGC -XX:-UseAdaptiveSizePolicy")
 
-WORKLOADS = ("boost_fit", "ensemble_score", "curation_ops")
-# Model classes scored by the ensemble_score workload, which is not in
-# BENCHMARK.json: its score_s metrics are reported only when it runs.
-SCORE_CLASSES = ("BaggingRegressionModel", "BoostingRegressionModel", "GBMClassificationModel")
+WORKLOADS = ("boost_fit", "curation_ops")
+SCORE_CLASSES = ("GBMRegressionModel", "BaggingRegressionModel", "BoostingRegressionModel",
+                 "GBMClassificationModel")
 QUERIES = ("dedup_minhash_md5", "dsir_select_en", "streaming_decontaminate")
 ENGINE = ("spark.jobs_n", "spark.stages_n", "spark.tasks_n", "spark.job_busy_s", "driver.gap_s",
           "spark.task_s", "spark.gc_s", "spark.shuffle_write_bytes", "spark.shuffle_read_bytes",
@@ -73,18 +84,11 @@ def pin_environment(work: str) -> None:
     os.environ.update(
         SPARK_GRAFT_CPUS=str(len(os.sched_getaffinity(0))),
         SPARK_DRIVER_MEMORY=DRIVER_MEMORY,
+        SPARK_GRAFT_DRIVER_JAVA_OPTS=DRIVER_JAVA_OPTS,
         SPARK_LOCAL_DIRS=tmp,
         TMPDIR=tmp,
         PYSPARK_PYTHON=sys.executable,
-        # Start with the heap at its maximum, pre-touched: left to G1's
-        # timing-driven sizing, the JVM's resident size swung 20% between
-        # identical runs.  Heap pressure still shows as GC time (spark.gc_s).
-        # (InitialRAMPercentage=100 caps the initial heap at each JVM's -Xmx,
-        # so the small-heap spark-submit launcher JVM starts too.)
-        JAVA_TOOL_OPTIONS=(
-            f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
-            "-XX:InitialRAMPercentage=100 -XX:+AlwaysPreTouch"
-        ),
+        JAVA_TOOL_OPTIONS=f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
         PYSPARK_SUBMIT_ARGS=(
             "--conf spark.ui.showConsoleProgress=false "
             f"--conf spark.eventLog.dir=file://{events} "
@@ -137,6 +141,15 @@ def environment(spark) -> dict:
     }
 
 
+def steal_s() -> float:
+    """CPU seconds the hypervisor has taken from this machine's CPUs since
+    boot (``steal`` in /proc/stat): on a shared host, the run's timings move
+    with it."""
+    with open("/proc/stat") as f:
+        fields = f.readline().split()
+    return int(fields[8]) / os.sysconf("SC_CLK_TCK")
+
+
 def summary(xs) -> dict:
     """n, quartiles, and the highest percentile with >= 10 samples above it."""
     xs = sorted(xs)
@@ -171,13 +184,19 @@ class Runner:
 
     # -- session -----------------------------------------------------------
 
-    def start(self, prefit: bool, event_log: bool = False) -> dict:
-        """Stop the current context (if any) and set the workload up on a new
-        one; returns the set-up's layer timings."""
+    def stop_context(self, event_log: bool = False) -> None:
+        """Stop the current context, if any; the next one logs its events
+        only if ``event_log``."""
         if self.spark is not None:
             jvm = self.spark.sparkContext._jvm
             self.spark.stop()
+            self.spark = None
             jvm.java.lang.System.setProperty("spark.eventLog.enabled", str(event_log).lower())
+
+    def start(self, prefit: bool, event_log: bool = False) -> dict:
+        """Set the workload up on a new context (stopping the current one);
+        returns the set-up's layer timings."""
+        self.stop_context(event_log)
         t0 = time.perf_counter()
         self.spark = self.get_spark("perfbench")
         self.spark.sparkContext.setLogLevel("ERROR")
@@ -237,17 +256,14 @@ class Runner:
         return rec
 
     def loop(self, seconds: float, segment: str) -> tuple:
-        """Whole operation cycles until ``seconds`` have passed; returns the
+        """The whole operation cycles that ``seconds`` stands for; returns the
         operations and the loop wall."""
-        start, n, t0 = len(self.ops), len(self.wl.cycle), time.perf_counter()
-        i = 0
-        while True:
+        start, t0 = len(self.ops), time.perf_counter()
+        n_ops = max(1, round(seconds / LOOP_CYCLE_S)) * len(self.wl.cycle)
+        if self.args.max_ops:
+            n_ops = min(n_ops, self.args.max_ops)
+        for i in range(n_ops):
             self.op(i, segment)
-            i += 1
-            if self.args.max_ops and i >= self.args.max_ops:
-                break
-            if i % n == 0 and time.perf_counter() - t0 >= seconds:
-                break
         return self.ops[start:], time.perf_counter() - t0
 
     # -- the run -----------------------------------------------------------
@@ -258,22 +274,27 @@ class Runner:
         args = self.args
         size = self.wl.size
         sampler = TreeMemorySampler(os.getpid()).start()
-        setups, colds = [], []
+        steal0 = steal_s()
+        setups = []
         try:
-            # At least three set-ups, and one per operation of the cycle, so
-            # that every operation has run once before the loop is timed.
-            for rep in range(max(SETUP_REPS, len(self.wl.cycle))):
+            # The previous context's stop is not part of a set-up.  The cold
+            # operation is always the cycle's first; the warm-up cycle below
+            # runs every other operation once before the loop is timed.  The
+            # one-off prefit runs in the last set-up, in a warm JVM.
+            reps = self.wl.setup_reps
+            for rep in range(reps):
+                self.stop_context()
                 t0 = time.perf_counter()
                 rows = self.inputs.write_tables(self.in_dir, args.seed, size["lineitem"], size["documents"])
-                timings = self.start(prefit=rep == 0)
+                timings = self.start(prefit=rep == reps - 1)
                 timings["setup_s"] = time.perf_counter() - t0 - timings.get("setup.prefit_s", 0.0)
                 setups.append(timings)
                 if rep == 0:
                     env = environment(self.spark)
                     self.wl.reference()
-                colds.append(self.op(rep, "cold"))
-                if rep == 0 and colds[0]["ok"]:
-                    self.verify(colds[0])
+                    cold = self.op(0, "cold")
+            if cold["ok"]:
+                self.verify(cold)
             # One whole cycle before timing: the first cycle after the set-ups
             # still runs up to 1.7x slower, and whether a timed loop held one
             # or two cycles then decided the median.
@@ -294,10 +315,11 @@ class Runner:
         cycle_means = [statistics.mean(times[i:i + n]) for i in range(0, len(times), n)]
         e2e = {
             "setup_s": (statistics.median(s["setup_s"] for s in setups)
-                        + setups[0].get("setup.prefit_s", 0.0), "s"),
-            "cold_op_s": (statistics.median(r["s"] for r in colds), "s"),
+                        + setups[-1].get("setup.prefit_s", 0.0), "s"),
+            "cold_op_s": (cold["s"], "s"),
             "op_p50_s": (statistics.median(cycle_means), "s"),
             "rows_per_s": (sum(r["rows"] for r in loop_ops if r["ok"]) / loop_s, "rows/s"),
+            "peak_rss_mb": (sampler.peak_total_mb, "MB"),
         }
         attempted = len(self.ops)
         failed = sum(not r["ok"] for r in self.ops)
@@ -305,17 +327,16 @@ class Runner:
             "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
             "trace": args.trace, "scale": args.scale, "environment": env,
             "input_rows": rows, "setups": setups,
-            "samples": {"op_s": summary(times), "setup_s": summary([s["setup_s"] for s in setups]),
-                        "cold_op_s": summary([r["s"] for r in colds])},
+            "samples": {"op_s": summary(times), "setup_s": summary([s["setup_s"] for s in setups])},
             "end_to_end": {k: v for k, (v, _) in e2e.items()},
             "error_rate": failed / attempted,
-            "peak_rss_mb": sampler.peak_total_mb,
+            "host_steal_s": steal_s() - steal0,
             "operations": self.ops,
         }
         if traced is None:
             metrics = {k: {"value": v, "unit": u} for k, (v, u) in e2e.items()}
         else:
-            per_layer = self.per_layer(traced, setups, colds, sampler, failed / attempted)
+            per_layer = self.per_layer(traced, setups, sampler, failed / attempted)
             record["per_layer"] = per_layer
             metrics = {k: {"value": v, "unit": u} for k, (v, u) in per_layer.items()}
         self.report(record, e2e)
@@ -323,7 +344,8 @@ class Runner:
         return {"correct": correct, "attempted": attempted, "failed": failed, "metrics": metrics}
 
     def verify(self, cold: dict) -> None:
-        """The workload's independent reference check of the first cold op."""
+        """The workload's independent reference check, run once after the
+        set-ups and counted against the first cold op."""
         try:
             check = self.wl.verify()
             if check:
@@ -336,37 +358,41 @@ class Runner:
             print(f"perfbench: reference check failed: {cold['error']}", file=sys.stderr)
 
     def traced_loop(self) -> dict:
-        """Untraced, traced and untraced segments, each on a fresh context so
-        they start alike; the event log is on only for the traced one."""
+        """Untraced, traced and untraced segments of ``--seconds`` each, every
+        one on a fresh context after one warm-up cycle, so they start alike;
+        the event log is on only for the traced one."""
         import layers
 
-        half = self.args.seconds / 2
+        seconds = self.args.seconds
         self.start(prefit=False)
-        u1, s1 = self.loop(half, "untraced")
+        self.loop(0, "warmup")
+        u1, s1 = self.loop(seconds, "untraced")
         self.start(prefit=False, event_log=True)
         app_id = self.spark.sparkContext.applicationId
+        self.loop(0, "warmup")
         with layers.Tracer() as tracer:
             self.wl.tracer = tracer
-            t_ops, t_s = self.loop(self.args.seconds, "traced")
+            t_ops, t_s = self.loop(seconds, "traced")
             self.wl.tracer = None
             for r in t_ops:
                 r.update(tracer.op_layers(r["t0"], r["t1"], r.get("members_n", 0)))
                 fit = sum(v for k, v in r.items() if k.startswith("fit_s."))
                 r["ensemble.overhead_s"] = fit - r["base.fit_s"] if fit else 0.0
         self.start(prefit=False, event_log=False)  # stops the traced context: its log is complete
-        u2, s2 = self.loop(half, "untraced")
+        self.loop(0, "warmup")
+        u2, s2 = self.loop(seconds, "untraced")
         log_dir = os.path.join(self.work, "eventlog")
         windows = [(r["t0"], r["t1"]) for r in t_ops]
         for r, eng in zip(t_ops, layers.engine_layers(log_dir, app_id, windows)):
             r.update(eng)
         return {"ops": t_ops, "wall_s": t_s, "untraced_ops": u1 + u2, "untraced_s": s1 + s2}
 
-    def per_layer(self, traced: dict, setups: list, colds: list, sampler, error_rate: float) -> dict:
+    def per_layer(self, traced: dict, setups: list, sampler, error_rate: float) -> dict:
         ops = traced["ops"]
-        n = max(len(ops), 1)
+        fits = [r for r in ops if any(k.startswith("fit_s.") for k in r)]
 
-        def mean(key):
-            return sum(r.get(key, 0) for r in ops) / n
+        def mean(key, rs=ops):
+            return sum(r.get(key, 0) for r in rs) / max(len(rs), 1)
 
         def med(key):
             xs = [r[key] for r in ops if key in r]
@@ -380,15 +406,14 @@ class Runner:
         out = {
             "session.start_s": (setups[0]["session.start_s"], "s"),
             "sources.fixture_s": (statistics.median(s.get("sources.fixture_s", 0.0) for s in setups), "s"),
-            "cold_op.first_s": (colds[0]["s"], "s"),
             "fit_s.GBMRegressor": (med("fit_s.GBMRegressor"), "s"),
-            "score_s.GBMRegressionModel": (med("score_s.GBMRegressionModel"), "s"),
+            **{f"score_s.{c}": (med(f"score_s.{c}"), "s") for c in SCORE_CLASSES},
             "members_n": (med("members_n"), "count"),
-            "base.fit_s": (mean("base.fit_s"), "s"),
-            "base.fit_n": (mean("base.fit_n"), "count"),
-            "ensemble.overhead_s": (mean("ensemble.overhead_s"), "s"),
+            "base.fit_s": (mean("base.fit_s", fits), "s"),
+            "base.fit_n": (mean("base.fit_n", fits), "count"),
+            "ensemble.overhead_s": (mean("ensemble.overhead_s", fits), "s"),
             "fit.iter_s": (statistics.median(steps) if steps else 0.0, "s"),
-            "fit.iter_n": (mean("fit.iter_n"), "count"),
+            "fit.iter_n": (mean("fit.iter_n", fits), "count"),
             "fit.rounds_kept_ratio": (
                 sum(r.get("fit.members_kept", 0) for r in ops) / rounds if rounds else 0.0, "ratio"),
             **{k: (mean(k), "count" if k.endswith("_n") else "bytes" if k.endswith("bytes") else "s")
@@ -398,17 +423,12 @@ class Runner:
             "spark.failed_tasks_n": (sum(r["spark.failed_tasks_n"] for r in ops), "count"),
             **{f"query_s.{q}": (med(f"query_s.{q}"), "s") for q in QUERIES},
             **{k: (mean(k), "count" if k.endswith("_n") else "s") for k in STREAMING},
-            # Peak RSS swung by up to 30% between identical curation runs (the
-            # number of live Python workers varies), too much for a bound.
-            "peak_rss_mb": (sampler.peak_total_mb, "MB"),
             "jvm.rss_mb": (sampler.peak_jvm_mb, "MB"),
             "pyworkers.rss_mb": (sampler.peak_workers_mb, "MB"),
             "pyworkers.n": (sampler.peak_workers_n, "count"),
             "error_rate": (error_rate, "ratio"),
             "trace.overhead_pct": (100.0 * (traced_mean / untraced_mean - 1.0), "%"),
         }
-        if self.args.workload == "ensemble_score":
-            out.update({f"score_s.{c}": (med(f"score_s.{c}"), "s") for c in SCORE_CLASSES})
         return out
 
     def report(self, record: dict, e2e: dict) -> None:
@@ -417,7 +437,8 @@ class Runner:
               f"scale={record['scale']} nproc={env['nproc']} head={env['git_head'][:12]}")
         print(f"  pyspark {env['pyspark']}  pyarrow {env['pyarrow']}  duckdb {env['duckdb']}  "
               f"shuffle.partitions={env['spark.sql.shuffle.partitions']}  env={env['env']}")
-        print(f"  input rows {record['input_rows']}")
+        print(f"  input rows {record['input_rows']}  host CPU steal during the run "
+              f"{record['host_steal_s']:.1f} s")
         for k, (v, u) in e2e.items():
             print(f"  {k:<14} {v:>14.4f} {u}")
         for k, s in record["samples"].items():
@@ -425,7 +446,6 @@ class Runner:
                                                  for q, v in s.items()))
         print(f"  error_rate     {record['error_rate']:>14.4f} "
               f"({sum(not r['ok'] for r in record['operations'])}/{len(record['operations'])})")
-        print(f"  peak_rss_mb    {record['peak_rss_mb']:>14.4f} MB (loop)")
         if "per_layer" in record:
             for k, (v, u) in record["per_layer"].items():
                 print(f"  {k:<36} {v:>16.4f} {u}")

@@ -6,8 +6,7 @@
 Runs ``run.py --scale smoke --max-ops 1`` (sf0.001-sized inputs) for each
 workload with ``--trace 0`` and ``--trace 1`` and fails if a run exits
 non-zero, reports a wrong output, misses any metric named in
-``BENCHMARK.json`` (or any per-layer metric of the ensemble_score workload),
-or did not run its correctness gate on every operation.
+``BENCHMARK.json``, or did not run its correctness gate on every operation.
 """
 
 from __future__ import annotations
@@ -26,15 +25,10 @@ import run  # noqa: E402  (argument parsing and constants only; no Spark at impo
 REFERENCE_CHECKS = {"numpy_combine", "duckdb_oracle"}
 
 
-def expected_metrics(trace: int, workload: str) -> set:
+def expected_metrics(trace: int) -> set:
     with open(os.path.join(os.path.dirname(HERE), "BENCHMARK.json")) as f:
         bench = json.load(f)
-    if not trace:
-        return {m["name"] for m in bench["end_to_end"]}
-    names = {m["name"] for m in bench["per_layer"]}
-    if workload == "ensemble_score":
-        names |= {f"score_s.{c}" for c in run.SCORE_CLASSES}
-    return names
+    return {m["name"] for m in bench["per_layer" if trace else "end_to_end"]}
 
 
 def main() -> int:
@@ -52,7 +46,7 @@ def main() -> int:
                 problems.append(f"{tag}: exit {proc.returncode}\n{proc.stderr[-3000:]}")
                 continue
             result = json.loads(lines[-1])
-            missing = expected_metrics(trace, workload) - set(result["metrics"])
+            missing = expected_metrics(trace) - set(result["metrics"])
             if missing:
                 problems.append(f"{tag}: missing metrics {sorted(missing)}")
             if not result["correct"] or result["failed"]:

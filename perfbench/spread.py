@@ -7,8 +7,7 @@ Runs ``run.py`` once per workload and seed (untraced, ``run_seconds`` from
 BENCHMARK.json), then prints for each end-to-end metric the median, the
 quartiles, and the spread (third minus first quartile, as a share of the
 median) next to the metric's bound.  A metric is steady when its spread stays
-below a third of its bound; ``setup_s`` is exempt from the spread rule.
-Raw results are appended to ``perfbench/.work/spread.jsonl``.
+below a third of its bound.  Raw results are appended to ``perfbench/.work/spread.jsonl``.
 """
 
 from __future__ import annotations
@@ -57,12 +56,11 @@ def main() -> int:
             xs = values[m["name"]]
             q1, med, q3 = statistics.quantiles(xs, n=4)
             spread = (q3 - q1) / med
-            flag = "" if m["name"] == "setup_s" or spread < m["bound"] / 3 else "  <-- above bound/3"
-            if m["name"] != "setup_s":
-                worst = max(worst, spread / m["bound"])
+            flag = "" if spread < m["bound"] / 3 else "  <-- above bound/3"
+            worst = max(worst, spread / m["bound"])
             print(f"  {m['name']:<12} median {med:12.4f} q1 {q1:12.4f} q3 {q3:12.4f} "
                   f"spread {spread:6.3f} bound {m['bound']}{flag}")
-    print(f"worst spread / bound (setup_s exempt): {worst:.3f}")
+    print(f"worst spread / bound: {worst:.3f}")
     return 0
 
 
