@@ -1,19 +1,21 @@
 #!/usr/bin/env python3
 """Benchmark of spark_ensemble_spark: one workload, one seed, one run.
 
-    python3 perfbench/run.py --workload boost_fit --seed 1 --seconds 4 --trace 0
+    python3 perfbench/run.py --workload boost_fit --seed 1 --seconds 8 --trace 0
 
 The run writes seeded inputs and sets the workload up several times; the
 first set-up, in a fresh JVM, is followed by one timed (cold) operation, and
-the last set-up is kept.  After one untimed warm-up cycle it runs the workload's
-operation cycle as a closed loop — one client, one operation at a time, on
-``local[nproc]`` — for ``--seconds`` / 4 whole cycles.  Every operation's
-output is checked; exceptions and wrong outputs count as failed operations.
+the last set-up is kept and fits what the workload scores (the prefit).
+After one untimed warm-up cycle it runs the workload's operation cycle as a
+closed loop — one client, one operation at a time, on ``local[nproc]`` — for
+``--seconds`` / 4 whole cycles.  Every operation's output is checked;
+exceptions and wrong outputs count as failed operations.
 
 ``--trace 0`` prints the end-to-end metrics.  ``--trace 1`` runs the loop in
-three segments — untraced, traced, untraced, each on a fresh Spark context
-with one warm-up cycle — and prints the per-layer metrics of the traced
-segment plus the tracing overhead against the untraced segments.
+three segments of one cycle each — untraced, traced, untraced, each on a
+fresh Spark context with one warm-up cycle — and prints the per-layer
+metrics of the traced segment plus the tracing overhead against the
+untraced segments.
 
 The last stdout line is one JSON object: ``correct``, ``attempted``,
 ``failed`` and ``metrics``.  A full record (environment, every sample, every
@@ -35,12 +37,11 @@ import traceback
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 DRIVER_MEMORY = "2g"
-# The loop runs --seconds / LOOP_CYCLE_S whole cycles (at least one), about
-# --seconds of work on a 4-vCPU host.  A count, not a time limit: operation
-# times still fall from cycle to cycle as the JIT warms up, and under a time
-# limit a faster run measured one more, faster cycle, which moved the median
-# by up to 20%.
+# The loop runs --seconds / LOOP_CYCLE_S whole cycles (at least one).
 LOOP_CYCLE_S = 4.0
+# Each segment of a traced run holds this many cycles, the same in all three
+# segments so that the tracing overhead compares like with like.
+TRACE_CYCLES = 1
 # The driver JVM's heap is pinned at 2 GB and collected by the parallel
 # collector with fixed generation sizes: G1 sizes its heap by GC timing, and
 # its resident size then swung by 20% between identical runs.  Eden is
@@ -193,7 +194,7 @@ class Runner:
             self.spark = None
             jvm.java.lang.System.setProperty("spark.eventLog.enabled", str(event_log).lower())
 
-    def start(self, prefit: bool, event_log: bool = False) -> dict:
+    def start(self, event_log: bool = False) -> dict:
         """Set the workload up on a new context (stopping the current one);
         returns the set-up's layer timings."""
         self.stop_context(event_log)
@@ -201,8 +202,18 @@ class Runner:
         self.spark = self.get_spark("perfbench")
         self.spark.sparkContext.setLogLevel("ERROR")
         timings = {"session.start_s": time.perf_counter() - t0}
-        timings.update(self.wl.setup(self.spark, self.in_dir, prefit))
+        timings.update(self.wl.setup(self.spark, self.in_dir))
         return timings
+
+    def setup(self) -> tuple:
+        """One timed set-up: write the inputs, start a context, build the
+        fixtures.  Returns the input row counts and the set-up's timings."""
+        t0 = time.perf_counter()
+        size = self.wl.size
+        rows = self.inputs.write_tables(self.in_dir, self.args.seed, size["lineitem"], size["documents"])
+        timings = self.start()
+        timings["setup_s"] = time.perf_counter() - t0
+        return rows, timings
 
     def shutdown(self) -> None:
         """Stop Spark, the JVM and its Python workers, and wait for all."""
@@ -255,11 +266,19 @@ class Runner:
         self.ops.append(rec)
         return rec
 
-    def loop(self, seconds: float, segment: str) -> tuple:
-        """The whole operation cycles that ``seconds`` stands for; returns the
-        operations and the loop wall."""
+    def loop_cycles(self) -> int:
+        """Whole cycles in the timed loop: ``--seconds`` / ``LOOP_CYCLE_S``,
+        at least one.  A count, not a time limit: operation times still fall
+        from cycle to cycle as the JIT warms up, and under a time limit a
+        faster run measured one more, faster cycle, which moved the median
+        by up to 20%."""
+        return max(1, round(self.args.seconds / LOOP_CYCLE_S))
+
+    def loop(self, cycles: int, segment: str) -> tuple:
+        """``cycles`` whole operation cycles; returns the operations and the
+        loop wall."""
         start, t0 = len(self.ops), time.perf_counter()
-        n_ops = max(1, round(seconds / LOOP_CYCLE_S)) * len(self.wl.cycle)
+        n_ops = cycles * len(self.wl.cycle)
         if self.args.max_ops:
             n_ops = min(n_ops, self.args.max_ops)
         for i in range(n_ops):
@@ -272,50 +291,59 @@ class Runner:
         from memory import TreeMemorySampler
 
         args = self.args
-        size = self.wl.size
         sampler = TreeMemorySampler(os.getpid()).start()
         steal0 = steal_s()
-        setups = []
+        phases = {}
+        t_run = time.perf_counter()
+
+        def phase(name):
+            phases[name] = time.perf_counter() - t_run - sum(phases.values())
+
         try:
-            # The previous context's stop is not part of a set-up.  The cold
-            # operation is always the cycle's first; the warm-up cycle below
-            # runs every other operation once before the loop is timed.  The
-            # one-off prefit runs in the last set-up, in a warm JVM.
-            reps = self.wl.setup_reps
-            for rep in range(reps):
+            # The first set-up launches the JVM; the cycle's first operation
+            # right after it is the cold operation.  Each later set-up starts
+            # a new context in the warm JVM (the previous context's stop is
+            # not part of it); the last one is kept for the loop, and the
+            # one-off prefit runs on it.
+            setups = []
+            for rep in range(self.wl.setup_reps):
                 self.stop_context()
-                t0 = time.perf_counter()
-                rows = self.inputs.write_tables(self.in_dir, args.seed, size["lineitem"], size["documents"])
-                timings = self.start(prefit=rep == reps - 1)
-                timings["setup_s"] = time.perf_counter() - t0 - timings.get("setup.prefit_s", 0.0)
+                rows, timings = self.setup()
                 setups.append(timings)
                 if rep == 0:
                     env = environment(self.spark)
                     self.wl.reference()
                     cold = self.op(0, "cold")
+                    phase("first_setup_cold_op")
+            t0 = time.perf_counter()
+            self.wl.prefit()
+            prefit_s = time.perf_counter() - t0
             if cold["ok"]:
                 self.verify(cold)
-            # One whole cycle before timing: the first cycle after the set-ups
-            # still runs up to 1.7x slower, and whether a timed loop held one
-            # or two cycles then decided the median.
-            self.loop(0, "warmup")
+            phase("setups_prefit_verify")
             sampler.reset()  # memory is reported for the loop, not the set-ups
             if args.trace:
-                traced = self.traced_loop()
+                traced = self.traced_loop()  # warms each of its segments up
                 loop_ops, loop_s = traced["untraced_ops"], traced["untraced_s"]
             else:
+                # One whole cycle before timing: the first cycle after the
+                # set-ups still runs up to 1.7x slower, and whether a timed
+                # loop held one or two cycles then decided the median.
                 traced = None
-                loop_ops, loop_s = self.loop(args.seconds, "loop")
+                self.loop(1, "warmup")
+                phase("warmup")
+                loop_ops, loop_s = self.loop(self.loop_cycles(), "loop")
+            phase("loop")
         finally:
             sampler.stop()
             self.shutdown()
+        phase("shutdown")
 
         times = [r["s"] for r in loop_ops]
         n = len(self.wl.cycle)
         cycle_means = [statistics.mean(times[i:i + n]) for i in range(0, len(times), n)]
         e2e = {
-            "setup_s": (statistics.median(s["setup_s"] for s in setups)
-                        + setups[-1].get("setup.prefit_s", 0.0), "s"),
+            "setup_s": (statistics.median(s["setup_s"] for s in setups) + prefit_s, "s"),
             "cold_op_s": (cold["s"], "s"),
             "op_p50_s": (statistics.median(cycle_means), "s"),
             "rows_per_s": (sum(r["rows"] for r in loop_ops if r["ok"]) / loop_s, "rows/s"),
@@ -326,11 +354,12 @@ class Runner:
         record = {
             "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
             "trace": args.trace, "scale": args.scale, "environment": env,
-            "input_rows": rows, "setups": setups,
+            "input_rows": rows, "setups": setups, "prefit_s": prefit_s,
             "samples": {"op_s": summary(times), "setup_s": summary([s["setup_s"] for s in setups])},
             "end_to_end": {k: v for k, (v, _) in e2e.items()},
             "error_rate": failed / attempted,
             "host_steal_s": steal_s() - steal0,
+            "phases_s": phases,
             "operations": self.ops,
         }
         if traced is None:
@@ -358,29 +387,28 @@ class Runner:
             print(f"perfbench: reference check failed: {cold['error']}", file=sys.stderr)
 
     def traced_loop(self) -> dict:
-        """Untraced, traced and untraced segments of ``--seconds`` each, every
-        one on a fresh context after one warm-up cycle, so they start alike;
-        the event log is on only for the traced one."""
+        """Untraced, traced and untraced segments of ``TRACE_CYCLES`` each,
+        every one on a fresh context (the first on the kept set-up's) after
+        one warm-up cycle, so they start alike; the event log is on only for
+        the traced one."""
         import layers
 
-        seconds = self.args.seconds
-        self.start(prefit=False)
-        self.loop(0, "warmup")
-        u1, s1 = self.loop(seconds, "untraced")
-        self.start(prefit=False, event_log=True)
+        self.loop(1, "warmup")
+        u1, s1 = self.loop(TRACE_CYCLES, "untraced")
+        self.start(event_log=True)
         app_id = self.spark.sparkContext.applicationId
-        self.loop(0, "warmup")
+        self.loop(1, "warmup")
         with layers.Tracer() as tracer:
             self.wl.tracer = tracer
-            t_ops, t_s = self.loop(seconds, "traced")
+            t_ops, t_s = self.loop(TRACE_CYCLES, "traced")
             self.wl.tracer = None
             for r in t_ops:
                 r.update(tracer.op_layers(r["t0"], r["t1"], r.get("members_n", 0)))
                 fit = sum(v for k, v in r.items() if k.startswith("fit_s."))
                 r["ensemble.overhead_s"] = fit - r["base.fit_s"] if fit else 0.0
-        self.start(prefit=False, event_log=False)  # stops the traced context: its log is complete
-        self.loop(0, "warmup")
-        u2, s2 = self.loop(seconds, "untraced")
+        self.start(event_log=False)  # stops the traced context: its log is complete
+        self.loop(1, "warmup")
+        u2, s2 = self.loop(TRACE_CYCLES, "untraced")
         log_dir = os.path.join(self.work, "eventlog")
         windows = [(r["t0"], r["t1"]) for r in t_ops]
         for r, eng in zip(t_ops, layers.engine_layers(log_dir, app_id, windows)):
@@ -439,6 +467,7 @@ class Runner:
               f"shuffle.partitions={env['spark.sql.shuffle.partitions']}  env={env['env']}")
         print(f"  input rows {record['input_rows']}  host CPU steal during the run "
               f"{record['host_steal_s']:.1f} s")
+        print("  run wall by phase: " + "  ".join(f"{k} {v:.1f}s" for k, v in record["phases_s"].items()))
         for k, (v, u) in e2e.items():
             print(f"  {k:<14} {v:>14.4f} {u}")
         for k, s in record["samples"].items():

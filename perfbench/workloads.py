@@ -102,10 +102,12 @@ class _Workload:
         self.tracer = None
         self.checksums: dict = {}
 
-    def setup(self, spark, in_dir: str, prefit: bool) -> dict:
-        """Build the fixtures (and, if ``prefit``, anything fitted once per
-        run); returns layer timings of this set-up."""
+    def setup(self, spark, in_dir: str) -> dict:
+        """Build the fixtures; returns layer timings of this set-up."""
         return {}
+
+    def prefit(self) -> None:
+        """Fit what the operations use but do not fit, once per run."""
 
     def reference(self) -> None:
         """Expected results computed without Spark, before the cold op."""
@@ -134,29 +136,18 @@ class BoostFit(_Workload):
     cycle = ("gbm", "score")
     ENSEMBLES = ("bagging_mean", "adaboost_median", "gbm_softmax")
 
-    def __init__(self, seed: int, scale: str) -> None:
-        super().__init__(seed, scale)
-        self.models: dict = {}
-
-    def setup(self, spark, in_dir: str, prefit: bool) -> dict:
+    def setup(self, spark, in_dir: str) -> dict:
         t0 = time.perf_counter()
         self.reg = regression_dataset(spark, in_dir)
+        self.mc = multiclass_dataset(spark, in_dir)
         self.train, self.hold = self.reg.randomSplit([0.8, 0.2], seed=self.seed)
         self.rows = self.reg.count()
         self.train_rows = self.train.count()
-        timings = {"sources.fixture_s": time.perf_counter() - t0}
-        if prefit:
-            t0 = time.perf_counter()
-            self.prefit(spark, in_dir)
-            timings["setup.prefit_s"] = time.perf_counter() - t0
-        elif self.models:  # a context started after the prefit scores too
-            self.mc = multiclass_dataset(spark, in_dir)
-        return timings
+        return {"sources.fixture_s": time.perf_counter() - t0}
 
-    def prefit(self, spark, in_dir: str) -> None:
-        """Build the multiclass fixture and fit the scored ensembles on a
-        seeded sample, once per run: only the loop scores them."""
-        self.mc = multiclass_dataset(spark, in_dir)
+    def prefit(self) -> None:
+        """Fit the scored ensembles on a seeded sample: only the loop scores
+        them."""
         frac = min(1.0, 1.2 * self.size["prefit_rows"] / self.rows)
         small_reg = self.reg.sample(fraction=frac, seed=self.seed).limit(self.size["prefit_rows"])
         small_mc = self.mc.sample(fraction=frac, seed=self.seed).limit(self.size["prefit_rows"])
@@ -280,7 +271,7 @@ class CurationOps(_Workload):
     cycle = ("dedup_minhash_md5", "dsir_select_en", "streaming_decontaminate")
     setup_reps = 8  # a set-up is only a context start and the inputs
 
-    def setup(self, spark, in_dir: str, prefit: bool) -> dict:
+    def setup(self, spark, in_dir: str) -> dict:
         self.spark, self.in_dir = spark, in_dir
         return {}
 
