@@ -274,69 +274,74 @@ class GBMClassifier(Estimator, _GBMClassifierParams, EnsembleReadWrite):
                 if newton and hs is not None:
                     bag = bag.withColumn(
                         "__hess", F.transform(hs, lambda h: F.greatest(h, F.lit(1e-2)))
-                    ).persist()
-                    sum_hess = bag.agg(
-                        *[
-                            F.sum(F.element_at("__hess", j + 1)).alias(f"h{j}")
-                            for j in range(dim)
-                        ]
-                    ).first()
-                    persisted = bag
-                else:
-                    bag = bag.persist()
-                    sum_hess = None
-                    persisted = bag
-                persisted.count()
-                _t_bag = _time.time() - _t0
-
-                def fit_dim(j: int):
-                    if sum_hess is not None:
-                        target = F.element_at("__ng", j + 1) / F.element_at("__hess", j + 1)
-                        w = (
-                            0.5
-                            * F.element_at("__hess", j + 1)
-                            / F.lit(float(sum_hess[j]))
-                            * F.col("weight")
-                        )
+                    )
+                persisted = bag.persist()
+                try:
+                    if newton and hs is not None:
+                        sum_hess = persisted.agg(
+                            *[
+                                F.sum(F.element_at("__hess", j + 1)).alias(f"h{j}")
+                                for j in range(dim)
+                            ]
+                        ).first()
                     else:
-                        target = F.element_at("__ng", j + 1)
-                        w = F.col("weight")
-                    dfj = persisted.withColumn("__target", target).withColumn("__w", w)
-                    return fit_base_learner(
-                        self.getBaseLearner(), dfj, "__target", fcol, "__dir",
-                        weight_col="__w",
+                        sum_hess = None
+                    persisted.count()
+                    _t_bag = _time.time() - _t0
+
+                    def fit_dim(j: int):
+                        if sum_hess is not None:
+                            target = F.element_at("__ng", j + 1) / F.element_at(
+                                "__hess", j + 1
+                            )
+                            w = (
+                                0.5
+                                * F.element_at("__hess", j + 1)
+                                / F.lit(float(sum_hess[j]))
+                                * F.col("weight")
+                            )
+                        else:
+                            target = F.element_at("__ng", j + 1)
+                            w = F.col("weight")
+                        dfj = persisted.withColumn("__target", target).withColumn("__w", w)
+                        return fit_base_learner(
+                            self.getBaseLearner(), dfj, "__target", fcol, "__dir",
+                            weight_col="__w",
+                        )
+
+                    _t1 = _time.time()
+                    imodels = run_parallel(
+                        [lambda j=j: fit_dim(j) for j in range(dim)], parallelism
                     )
+                    _t_trees = _time.time() - _t1
 
-                _t1 = _time.time()
-                imodels = run_parallel(
-                    [lambda j=j: fit_dim(j) for j in range(dim)], parallelism
-                )
-                _t_trees = _time.time() - _t1
+                    # Direction array on the bag for the step-size optimization.
+                    scored = persisted
+                    dir_cols = []
+                    for j, m in enumerate(imodels):
+                        scored = m.transform(
+                            scored, {m.getParam("predictionCol"): f"__dir{j}"}
+                        )
+                        dir_cols.append(f"__dir{j}")
 
-                # Direction array on the bag for the step-size optimization.
-                scored = persisted
-                dir_cols = []
-                for j, m in enumerate(imodels):
-                    scored = m.transform(
-                        scored, {m.getParam("predictionCol"): f"__dir{j}"}
-                    )
-                    dir_cols.append(f"__dir{j}")
+                    _t2 = _time.time()
+                    if self.getOptimizedWeights():
+                        opt_df = scored.select(
+                            "label", "weight", "__praw",
+                            F.array(*[F.col(c) for c in dir_cols]).alias("__dir"),
+                        ).persist()
+                        try:
+                            opt_df.count()
+                            solution = self._lbfgsb(opt_df, gl, dim, max_iter, tol)
+                        finally:
+                            opt_df.unpersist()
+                    else:
+                        solution = [1.0] * dim
+                    iweights = [learning_rate * s for s in solution]
+                    _t_opt = _time.time() - _t2
+                finally:
+                    persisted.unpersist()
 
-                _t2 = _time.time()
-                if self.getOptimizedWeights():
-                    opt_df = scored.select(
-                        "label", "weight", "__praw",
-                        F.array(*[F.col(c) for c in dir_cols]).alias("__dir"),
-                    ).persist()
-                    opt_df.count()
-                    solution = self._lbfgsb(opt_df, gl, dim, max_iter, tol)
-                    opt_df.unpersist()
-                else:
-                    solution = [1.0] * dim
-                iweights = [learning_rate * s for s in solution]
-                _t_opt = _time.time() - _t2
-
-                persisted.unpersist()
                 models.append(imodels)
                 subspaces.append(list(subspace))
                 weights.append(iweights)

@@ -5,10 +5,16 @@
 We never leave the DataFrame API: instances are just the three columns
 ``(label double, weight double, features vector)``, with weight defaulting to
 1.0 — Catalyst prunes everything else at the parquet scan.
+
+Every ensemble fit reads its training state through here, so this is also
+where the state's width is set: an iterative fit runs tens of small jobs over
+it, and a state wider than the cluster's cores runs every one of them in
+several task waves (see ``fit_width``).
 """
 
 from __future__ import annotations
 
+import math
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -25,7 +31,9 @@ def extract_instances(
     features_col: str,
     weight_col: Optional[str] = None,
 ) -> DataFrame:
-    """Project to canonical ``(label, weight, features)`` columns.
+    """Project to canonical ``(label, weight, features)`` columns, narrowed
+    to ``fit_width`` partitions when the input is wider and its width can be
+    read without running a job.
 
     Raises the same kind of error the reference's schema validation does when a
     column is missing (``PredictorParams.validateAndTransformSchema``; negative
@@ -36,11 +44,51 @@ def extract_instances(
         if c not in cols:
             raise ValueError(f"Column '{c}' does not exist in {sorted(cols)}")
     weight = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    return df.select(
+    instances = df.select(
         F.col(label_col).cast("double").alias(LABEL),
         weight.alias(WEIGHT),
         F.col(features_col).alias(FEATURES),  # metadata rides along with the column
     )
+    qe = instances._jdf.queryExecution()
+    if not _runs_no_job(qe.executedPlan()):
+        return instances
+    width = fit_width(instances.sparkSession, qe.optimizedPlan().stats().sizeInBytes())
+    if width < qe.toRdd().getNumPartitions():
+        instances = instances.coalesce(width)
+    return instances
+
+
+def _runs_no_job(plan) -> bool:
+    """Whether reading ``plan``'s partition count runs no Spark job.
+
+    An exchange or a subquery would run its stages here and then again in
+    the fit's own jobs, so such an input keeps its width. An adaptive plan is
+    judged by its initial plan, which holds every exchange. A cached relation
+    is a leaf: its stages run once, for the cache, whoever reads it first.
+    """
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _runs_no_job(plan.executedPlan())
+    if "Exchange" in name or plan.subqueries().nonEmpty():
+        return False
+    children = plan.children()
+    return all(_runs_no_job(children.apply(k)) for k in range(children.size()))
+
+
+def fit_width(spark, size_bytes: int) -> int:
+    """Partition count a fit's training state should have: the cluster's
+    cores, or more when ``size_bytes`` (the plan's estimate) needs more
+    partitions of ``spark.sql.files.maxPartitionBytes`` each (the scan's own
+    split size, so a large input is never squeezed into a few huge
+    partitions).
+
+    ``extract_instances`` only ever narrows to it, with a ``coalesce`` that
+    merges whole partitions and adds no shuffle; an input at or below this
+    width is returned as it came. A plan without size statistics reports
+    ``Long.MaxValue`` bytes and so is never narrowed.
+    """
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return max(spark.sparkContext.defaultParallelism, math.ceil(int(size_bytes) / split))
 
 
 def get_num_features(df: DataFrame, features_col: str) -> int:

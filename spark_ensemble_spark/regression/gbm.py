@@ -13,15 +13,20 @@ Semantic parity with
 * early stopping on a validation split with tolerance ``validationTol`` and
   patience ``numRounds``; the final model keeps ``i − v`` members.
 
-DataFrame-native: the running prediction is a ``__gpred`` column; each Brent
-evaluation is ONE whole-stage-codegen'd ``agg`` over the cached bag (the
-reference pays an ``RDDLossFunction`` pass per evaluation — same job count,
-but our rows never leave Tungsten).
+DataFrame-native: the running prediction is a ``__gpred`` column. Each round
+caches ONE frame (``DFIterationCache``, the reference's
+``PeriodicRDDCheckpointer``): the new member's direction ``__dir`` scored once
+over the full training state. The step search reads the round's seeded
+``sample_bag`` of that frame — the frame is a projection of the state, with its
+partitions and row order, so the sample is exactly the rows the member was fit
+on — and evaluates a whole grid of step sizes in ONE whole-stage-codegen'd
+``agg`` per pass (the reference pays an ``RDDLossFunction`` pass per
+evaluation). The next state is the ``__gpred + w·__dir`` projection of it.
 """
 
 from __future__ import annotations
 
-import math
+import time
 from typing import List, Optional, Sequence
 
 from pyspark.ml.base import Estimator
@@ -271,38 +276,54 @@ class GBMRegressor(Estimator, _GBMRegressorParams, EnsembleReadWrite):
                 bag, fcol = slice_features(bag, "features", subspace, num_features, "__sf")
 
                 neg_grad = gl.neg_gradient(F.col("label"), F.col("__gpred"))
+                _t0 = time.time()
                 persisted_bag = None
-                if newton and gl.has_hessian:
-                    persisted_bag = bag.withColumn(
-                        "__hess",
-                        F.greatest(
-                            gl.hessian(F.col("label"), F.col("__gpred")), F.lit(1e-2)
-                        ),
-                    ).persist()
-                    sum_hess = persisted_bag.agg(F.sum("__hess")).first()[0]
-                    bag = persisted_bag.withColumn(
-                        "__target", neg_grad / F.col("__hess")
-                    ).withColumn(
-                        "__w",
-                        0.5 * F.col("__hess") / F.lit(sum_hess) * F.col("weight"),
-                    )
-                else:
-                    bag = bag.withColumn("__target", neg_grad).withColumn(
-                        "__w", F.col("weight")
-                    )
+                try:
+                    if newton and gl.has_hessian:
+                        persisted_bag = bag.withColumn(
+                            "__hess",
+                            F.greatest(
+                                gl.hessian(F.col("label"), F.col("__gpred")), F.lit(1e-2)
+                            ),
+                        ).persist()
+                        sum_hess = persisted_bag.agg(F.sum("__hess")).first()[0]
+                        bag = persisted_bag.withColumn(
+                            "__target", neg_grad / F.col("__hess")
+                        ).withColumn(
+                            "__w",
+                            0.5 * F.col("__hess") / F.lit(sum_hess) * F.col("weight"),
+                        )
+                    else:
+                        bag = bag.withColumn("__target", neg_grad).withColumn(
+                            "__w", F.col("weight")
+                        )
 
-                model = fit_base_learner(
-                    self.getBaseLearner(), bag, "__target", fcol, "__dir", weight_col="__w"
+                    model = fit_base_learner(
+                        self.getBaseLearner(), bag, "__target", fcol, "__dir",
+                        weight_col="__w",
+                    )
+                finally:
+                    if persisted_bag is not None:
+                        persisted_bag.unpersist()
+                trees_s = time.time() - _t0
+
+                # Score the new member ONCE over the full training state; this
+                # is the round's only cached frame. It is a projection of the
+                # state, so it has the state's partitions and row order. The
+                # member already reads the sliced column and writes ``__dir``.
+                full, _ = slice_features(state, "features", subspace, num_features, "__sf")
+                scored = model.transform(full).select(
+                    "label", "weight", "features", "__gpred", "__dir"
                 )
-                if persisted_bag is not None:
-                    persisted_bag.unpersist()
+                scored = cache.update(scored)
 
+                _t1 = time.time()
                 if self.getOptimizedWeights():
-                    opt_df = model.transform(bag).select(
-                        "label", "weight", "__gpred", F.col("__dir")
+                    # The same seeded sample of the same rows in the same
+                    # partitions: exactly the bag the member was fit on.
+                    opt_df = sample_bag(
+                        scored, self.getReplacement(), self.getSubsampleRatio(), seed + i
                     )
-                    opt_df = opt_df.persist()
-                    opt_df.count()
 
                     def objective_batch(xs):
                         # ONE agg evaluates every candidate step size — a grid
@@ -353,36 +374,25 @@ class GBMRegressor(Estimator, _GBMRegressorParams, EnsembleReadWrite):
                         return [(row[k + 1] or 0.0) / sw for k in range(len(xs))]
 
                     solution = minimize_scalar_batched(objective_batch, 0.0, 100.0)
-                    opt_df.unpersist()
                 else:
                     solution = 1.0
+                opt_s = time.time() - _t1
                 weight = learning_rate * solution
 
                 models.append(model)
                 subspaces.append(list(subspace))
                 weights.append(weight)
 
-                # Update running predictions over the FULL training set.
-                full, full_fcol = slice_features(
-                    state, "features", subspace, num_features, "__sf"
+                state = scored.select(
+                    "label", "weight", "features",
+                    (F.col("__gpred") + F.lit(weight) * F.col("__dir")).alias("__gpred"),
                 )
-                scored = model.transform(
-                    full, {model.getParam("featuresCol"): full_fcol,
-                           model.getParam("predictionCol"): "__dir"}
-                )
-                state = scored.withColumn(
-                    "__gpred", F.col("__gpred") + F.lit(weight) * F.col("__dir")
-                ).select("label", "weight", "features", "__gpred")
-                state = cache.update(state)
 
                 if val_state is not None:
-                    vfull, vfcol = slice_features(
+                    vfull, _ = slice_features(
                         val_state, "features", subspace, num_features, "__sf"
                     )
-                    vscored = model.transform(
-                        vfull, {model.getParam("featuresCol"): vfcol,
-                                model.getParam("predictionCol"): "__dir"}
-                    )
+                    vscored = model.transform(vfull)
                     val_state = vscored.withColumn(
                         "__gpred", F.col("__gpred") + F.lit(weight) * F.col("__dir")
                     ).select("label", "weight", "features", "__gpred")
@@ -402,10 +412,13 @@ class GBMRegressor(Estimator, _GBMRegressorParams, EnsembleReadWrite):
                         best_val_error = val_error
                         v = 0
                     instr.iteration(
-                        i, step=solution, weight=weight, val_error=val_error
+                        i, step=solution, weight=weight, val_error=val_error,
+                        trees_s=trees_s, opt_s=opt_s,
                     )
                 else:
-                    instr.iteration(i, step=solution, weight=weight)
+                    instr.iteration(
+                        i, step=solution, weight=weight, trees_s=trees_s, opt_s=opt_s
+                    )
 
                 i += 1
         finally:

@@ -242,10 +242,12 @@ def _cached_fixture_locked(spark: SparkSession, sf_dir: str, kind: str, build) -
         # The single-row-group test files scan as ~3 partitions; sequential
         # tree-fit loops (GBM/boosting) then run every stats pass 3-wide.
         # Measured at sf0.1: repartition(8) halves GBM (29→14s) and boosting
-        # (43→21s) fits and is neutral for thread-parallel bagging (whose 10
-        # concurrent fits already saturate the box — wider repartition makes
-        # it WORSE, 10×32 queued tasks). Gated: a production-scale input
-        # already has ≥8 splits and is left alone.
+        # (43→21s) fits. It only widens under-partitioned files: every
+        # ensemble fit coalesces its training state to the cluster's core
+        # count (``core/instances.fit_width``), so on a host with fewer than
+        # 8 cores the fits run at the core width, not in two task waves.
+        # Gated: a production-scale input already has ≥8 splits and is left
+        # alone.
         if df.rdd.getNumPartitions() < 8:
             df = df.repartition(8)
         df = df.persist()

@@ -6,6 +6,7 @@ all losses trainable, save/load round-trips.
 
 import random
 
+import numpy as np
 import pytest
 from pyspark.ml.evaluation import (
     MulticlassClassificationEvaluator,
@@ -25,6 +26,9 @@ from spark_ensemble_spark.boosting.losses import (
     SquaredLoss,
 )
 from spark_ensemble_spark.classification.gbm import GBMClassificationModel, GBMClassifier
+from spark_ensemble_spark.core.instances import extract_instances
+from spark_ensemble_spark.core.optim import minimize_scalar_batched
+from spark_ensemble_spark.core.subbag import sample_bag
 from spark_ensemble_spark.regression.gbm import GBMRegressionModel, GBMRegressor
 from spark_ensemble_spark.sources.datasets import multiclass_dataset, regression_dataset
 
@@ -253,3 +257,76 @@ def test_gbm_classifier_early_stopping(clf_splits):
     # depth-2 stumps stall fast on this task; validation must truncate
     assert model.numModels < 8
     assert len(model.weights) == model.numModels
+
+
+# ---- round structure: the step search and failure cleanup ------------------
+
+
+def test_gbm_regressor_step_search_reads_members_bag(reg_splits):
+    """The step size is the line search over exactly the rows the member was
+    fit on: the round's seeded bag, re-drawn from the scored state."""
+    train, _ = reg_splits
+    est = GBMRegressor(
+        baseLearner=DecisionTreeRegressor(maxDepth=3),
+        numBaseLearners=1,
+        learningRate=0.7,
+        subsampleRatio=0.6,
+        optimizedWeights=True,
+        seed=11,
+    )
+    model = est.fit(train)
+    member = model.models[0]
+    g_col, d_col = model.init.getPredictionCol(), member.getPredictionCol()
+
+    def step_over(rows):
+        """numpy re-run of the squared-loss step search over ``rows``."""
+        scored = member.transform(model.init.transform(rows))
+        pdf = scored.select("label", "weight", g_col, d_col).toPandas()
+        y, w, g, d = (pdf[c].to_numpy() for c in ("label", "weight", g_col, d_col))
+        return minimize_scalar_batched(
+            lambda xs: [
+                float(np.sum(w * (y - (g + x * d)) ** 2 / 2.0) / np.sum(w)) for x in xs
+            ],
+            0.0,
+            100.0,
+        )
+
+    state = extract_instances(train, "label", "features")
+    step = step_over(sample_bag(state, est.getReplacement(), 0.6, est.getSeed()))
+    assert model.weights[0] == pytest.approx(0.7 * step, rel=1e-9)
+    # the pin discriminates: the same search over every row lands elsewhere
+    assert step_over(state) != step
+
+
+class _FailsOnSecondFit(DecisionTreeRegressor):
+    """Tree learner whose second fit raises; ``Params.copy`` is shallow, so
+    every per-member copy shares the ``_calls`` list."""
+
+    def _fit(self, dataset):
+        self._calls.append(None)
+        if len(self._calls) == 2:
+            raise RuntimeError("base learner failed")
+        return super()._fit(dataset)
+
+
+def _cached_entries(spark):
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+@pytest.mark.parametrize("kind", ["regressor", "classifier"])
+def test_gbm_raising_round_releases_its_caches(spark, reg_splits, kind):
+    """A base learner raising mid-fit leaves no frame of the fit cached."""
+    train, _ = reg_splits
+    tree = _FailsOnSecondFit(maxDepth=2)
+    tree._calls = []
+    if kind == "regressor":
+        est = GBMRegressor(baseLearner=tree, numBaseLearners=3, updates="newton")
+    else:
+        train = train.withColumn("label", (F.col("label") > 50000).cast("double"))
+        est = GBMClassifier(
+            baseLearner=tree, numBaseLearners=3, loss="bernoulli", updates="newton"
+        )
+    before = _cached_entries(spark)
+    with pytest.raises(Exception, match="base learner failed"):
+        est.fit(train)
+    assert _cached_entries(spark) <= before
