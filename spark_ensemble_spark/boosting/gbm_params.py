@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from typing import Tuple
+
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.param.shared import (
     HasAggregationDepth,
@@ -12,7 +14,14 @@ from pyspark.ml.param.shared import (
     HasValidationIndicatorCol,
 )
 
-from spark_ensemble_spark.core.params import HasBaseLearner, HasNumBaseLearners, HasSubBag
+from spark_ensemble_spark.core.params import (
+    HasBaseLearner,
+    HasNumBaseLearners,
+    HasSubBag,
+    one_of,
+)
+
+_UPDATES = ("gradient", "newton")
 
 
 class GBMParams(
@@ -29,6 +38,11 @@ class GBMParams(
     # plans partial aggregation itself (SURVEY.md §2.4).
     HasAggregationDepth,
 ):
+    """Each twin declares its allowed ``initStrategy`` values in
+    ``_init_strategies``."""
+
+    _init_strategies: Tuple[str, ...] = ()
+
     learningRate: Param = Param(
         Params._dummy(),
         "learningRate",
@@ -95,13 +109,10 @@ class GBMParams(
         return self.getOrDefault(self.optimizedWeights)
 
     def getUpdates(self) -> str:
-        v = self.getOrDefault(self.updates).lower()
-        if v not in ("gradient", "newton"):
-            raise ValueError(f"updates must be gradient|newton, got {v}")
-        return v
+        return one_of(self, self.updates, _UPDATES)
 
     def getInitStrategy(self) -> str:
-        return self.getOrDefault(self.initStrategy).lower()
+        return one_of(self, self.initStrategy, self._init_strategies)
 
     def getAlpha(self) -> float:
         return self.getOrDefault(self.alpha)

@@ -14,9 +14,7 @@ from __future__ import annotations
 
 from typing import List, Optional, Sequence
 
-from pyspark.ml.base import Estimator
 from pyspark.ml.functions import vector_to_array
-from pyspark.ml.param.shared import HasParallelism, HasSeed
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -24,6 +22,7 @@ from pyspark.storagelevel import StorageLevel
 from spark_ensemble_spark.core.base import (
     ClassifierParams,
     EnsembleClassificationModel,
+    EnsembleEstimator,
     score_base_models,
 )
 from spark_ensemble_spark.core.instances import (
@@ -31,96 +30,21 @@ from spark_ensemble_spark.core.instances import (
     get_num_classes,
     get_num_features,
 )
-from spark_ensemble_spark.core.params import (
-    HasBaseLearner,
-    HasNumBaseLearners,
-    HasSubBag,
-    HasVotingStrategy,
-)
-from spark_ensemble_spark.core.persistence import (
-    EnsembleReadWrite,
-    load_ensemble,
-    load_instance,
-    load_metadata,
-    save_ensemble,
-    save_instance,
-    save_metadata,
-    set_params_from_metadata,
-)
+from spark_ensemble_spark.core.params import BaggingParams, HasVotingStrategy
 from spark_ensemble_spark.core.subbag import fit_bagged_models
 from spark_ensemble_spark.core.utils import scale_array, sum_arrays
 
-_VOTING = ("hard", "soft")
 
+class _BaggingClassifierParams(ClassifierParams, BaggingParams, HasVotingStrategy):
+    _voting_strategies = ("hard", "soft")
 
-class _BaggingClassifierParams(
-    ClassifierParams,
-    HasBaseLearner,
-    HasNumBaseLearners,
-    HasSubBag,
-    HasVotingStrategy,
-    HasSeed,
-    HasParallelism,
-):
     def __init__(self) -> None:
         super().__init__()
-        self._setDefault(seed=17, parallelism=1, votingStrategy="hard")
-
-    def getVotingStrategy(self) -> str:
-        v = self.getOrDefault(self.votingStrategy).lower()
-        if v not in _VOTING:
-            raise ValueError(f"votingStrategy must be one of {_VOTING}, got {v}")
-        return v
+        self._setDefault(votingStrategy="hard")
 
 
-class BaggingClassifier(Estimator, _BaggingClassifierParams, EnsembleReadWrite):
-    def __init__(self, **kwargs) -> None:
-        super().__init__()
-        if "baseLearner" in kwargs:
-            self.set(self.baseLearner, kwargs.pop("baseLearner"))
-        self._set(**kwargs)
-
-    def setParams(self, **kwargs) -> "BaggingClassifier":
-        if "baseLearner" in kwargs:
-            self.set(self.baseLearner, kwargs.pop("baseLearner"))
-        self._set(**kwargs)
-        return self
-
-    def setBaseLearner(self, v) -> "BaggingClassifier":
-        return self.setParams(baseLearner=v)
-
-    def setNumBaseLearners(self, v: int) -> "BaggingClassifier":
-        return self.setParams(numBaseLearners=v)
-
-    def setReplacement(self, v: bool) -> "BaggingClassifier":
-        return self.setParams(replacement=v)
-
-    def setSubsampleRatio(self, v: float) -> "BaggingClassifier":
-        return self.setParams(subsampleRatio=v)
-
-    def setSubspaceRatio(self, v: float) -> "BaggingClassifier":
-        return self.setParams(subspaceRatio=v)
-
-    def setVotingStrategy(self, v: str) -> "BaggingClassifier":
-        return self.setParams(votingStrategy=v)
-
-    def setSeed(self, v: int) -> "BaggingClassifier":
-        return self.setParams(seed=v)
-
-    def setParallelism(self, v: int) -> "BaggingClassifier":
-        return self.setParams(parallelism=v)
-
-    def setWeightCol(self, v: str) -> "BaggingClassifier":
-        return self.setParams(weightCol=v)
-
-    def setLabelCol(self, v: str) -> "BaggingClassifier":
-        return self.setParams(labelCol=v)
-
-    def setFeaturesCol(self, v: str) -> "BaggingClassifier":
-        return self.setParams(featuresCol=v)
-
-    def _fit(self, df: DataFrame) -> "BaggingClassificationModel":
-        self._validate_input(df, fitting=True)
+class BaggingClassifier(EnsembleEstimator, _BaggingClassifierParams):
+    def _fit_model(self, df: DataFrame) -> "BaggingClassificationModel":
         num_classes = get_num_classes(df, self.getLabelCol())
         instances = extract_instances(
             df, self.getLabelCol(), self.getFeaturesCol(), self._weight_col_or_none()
@@ -142,32 +66,17 @@ class BaggingClassifier(Estimator, _BaggingClassifierParams, EnsembleReadWrite):
             )
         finally:
             instances.unpersist()
-        model = BaggingClassificationModel(
+        return BaggingClassificationModel(
             num_classes=num_classes,
             subspaces=subspaces,
             models=models,
             num_features=num_features,
         )
-        model._resetUid(self.uid + "_model")
-        self._copyValues(model)
-        return model
-
-    def _save_impl(self, path: str) -> None:
-        save_metadata(self, path)
-        save_instance(self.getBaseLearner(), f"{path}/learner")
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "BaggingClassifier":
-        meta = load_metadata(path)
-        inst = cls()
-        set_params_from_metadata(inst, meta)
-        inst.set(inst.baseLearner, load_instance(f"{path}/learner"))
-        return inst
 
 
-class BaggingClassificationModel(
-    EnsembleClassificationModel, _BaggingClassifierParams, EnsembleReadWrite
-):
+class BaggingClassificationModel(EnsembleClassificationModel, _BaggingClassifierParams):
+    _data_fields = ("subspaces", "numFeatures", "numClasses")
+
     def __init__(
         self,
         num_classes: int = 2,
@@ -218,30 +127,3 @@ class BaggingClassificationModel(
 
     def _probability_from_raw(self, raw: Column) -> Column:
         return scale_array(raw, F.lit(1.0 / self.numModels))
-
-    def copy(self, extra=None) -> "BaggingClassificationModel":
-        copied = BaggingClassificationModel(
-            self.numClasses, self.subspaces, self.models, self.numFeatures
-        )
-        copied._resetUid(self.uid)
-        return self._copyValues(copied, extra)
-
-    def _save_impl(self, path: str) -> None:
-        save_ensemble(
-            self,
-            path,
-            self.models,
-            {
-                "subspaces": self.subspaces,
-                "numFeatures": self.numFeatures,
-                "numClasses": self.numClasses,
-            },
-        )
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "BaggingClassificationModel":
-        metadata, data, models = load_ensemble(path)
-        inst = cls(data["numClasses"], data["subspaces"], models, data["numFeatures"])
-        inst._resetUid(metadata["uid"])
-        set_params_from_metadata(inst, metadata)
-        return inst

@@ -22,20 +22,15 @@ from __future__ import annotations
 import math
 from typing import List, Optional, Sequence
 
-from pyspark.ml.base import Estimator
 from pyspark.ml.functions import vector_to_array
 from pyspark.ml.param import Param, Params, TypeConverters
-from pyspark.ml.param.shared import (
-    HasAggregationDepth,
-    HasCheckpointInterval,
-    HasSeed,
-)
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spark_ensemble_spark.core.base import (
     ClassifierParams,
     EnsembleClassificationModel,
+    EnsembleEstimator,
     score_base_models,
 )
 from spark_ensemble_spark.core.instances import (
@@ -44,17 +39,7 @@ from spark_ensemble_spark.core.instances import (
     get_num_features,
 )
 from spark_ensemble_spark.core.instrumentation import FitInstrumentation
-from spark_ensemble_spark.core.params import HasBaseLearner, HasNumBaseLearners
-from spark_ensemble_spark.core.persistence import (
-    EnsembleReadWrite,
-    load_ensemble,
-    load_instance,
-    load_metadata,
-    save_ensemble,
-    save_instance,
-    save_metadata,
-    set_params_from_metadata,
-)
+from spark_ensemble_spark.core.params import BoostingParams, one_of
 from spark_ensemble_spark.core.utils import (
     DFIterationCache,
     EPSILON,
@@ -67,16 +52,7 @@ from spark_ensemble_spark.core.utils import (
 _ALGORITHMS = ("real", "discrete")
 
 
-class _BoostingClassifierParams(
-    ClassifierParams,
-    HasBaseLearner,
-    HasNumBaseLearners,
-    HasCheckpointInterval,
-    HasSeed,
-    # Reference API parity (BoostingParams.scala treeAggregate depth); no-op
-    # under DataFrame aggregation (SURVEY.md §2.4).
-    HasAggregationDepth,
-):
+class _BoostingClassifierParams(ClassifierParams, BoostingParams):
     algorithm: Param = Param(
         Params._dummy(),
         "algorithm",
@@ -89,10 +65,7 @@ class _BoostingClassifierParams(
         self._setDefault(algorithm="real", checkpointInterval=10, seed=17)
 
     def getAlgorithm(self) -> str:
-        v = self.getOrDefault(self.algorithm).lower()
-        if v not in _ALGORITHMS:
-            raise ValueError(f"algorithm must be one of {_ALGORITHMS}, got {v}")
-        return v
+        return one_of(self, self.algorithm, _ALGORITHMS)
 
 
 def _samme_r_loss_expr(prob_arr: Column, label: Column, num_classes: int) -> Column:
@@ -110,46 +83,8 @@ def _samme_r_loss_expr(prob_arr: Column, label: Column, num_classes: int) -> Col
     )
 
 
-class BoostingClassifier(Estimator, _BoostingClassifierParams, EnsembleReadWrite):
-    def __init__(self, **kwargs) -> None:
-        super().__init__()
-        if "baseLearner" in kwargs:
-            self.set(self.baseLearner, kwargs.pop("baseLearner"))
-        self._set(**kwargs)
-
-    def setParams(self, **kwargs) -> "BoostingClassifier":
-        if "baseLearner" in kwargs:
-            self.set(self.baseLearner, kwargs.pop("baseLearner"))
-        self._set(**kwargs)
-        return self
-
-    def setBaseLearner(self, v) -> "BoostingClassifier":
-        return self.setParams(baseLearner=v)
-
-    def setNumBaseLearners(self, v: int) -> "BoostingClassifier":
-        return self.setParams(numBaseLearners=v)
-
-    def setAlgorithm(self, v: str) -> "BoostingClassifier":
-        return self.setParams(algorithm=v)
-
-    def setCheckpointInterval(self, v: int) -> "BoostingClassifier":
-        return self.setParams(checkpointInterval=v)
-
-    def setAggregationDepth(self, v: int) -> "BoostingClassifier":
-        """Accepted for reference API parity; no-op under DataFrame aggs."""
-        return self.setParams(aggregationDepth=v)
-
-    def setWeightCol(self, v: str) -> "BoostingClassifier":
-        return self.setParams(weightCol=v)
-
-    def setLabelCol(self, v: str) -> "BoostingClassifier":
-        return self.setParams(labelCol=v)
-
-    def setFeaturesCol(self, v: str) -> "BoostingClassifier":
-        return self.setParams(featuresCol=v)
-
-    def _fit(self, df: DataFrame) -> "BoostingClassificationModel":
-        self._validate_input(df, fitting=True)
+class BoostingClassifier(EnsembleEstimator, _BoostingClassifierParams):
+    def _fit_model(self, df: DataFrame) -> "BoostingClassificationModel":
         algorithm = self.getAlgorithm()
         num_learners = self.getNumBaseLearners()
         num_classes = get_num_classes(df, self.getLabelCol())
@@ -257,32 +192,17 @@ class BoostingClassifier(Estimator, _BoostingClassifierParams, EnsembleReadWrite
             cache.close()
         instr.done(len(models))
 
-        model = BoostingClassificationModel(
+        return BoostingClassificationModel(
             num_classes=num_classes,
             weights=estimator_weights,
             models=models,
             num_features=num_features,
         )
-        model._resetUid(self.uid + "_model")
-        self._copyValues(model)
-        return model
-
-    def _save_impl(self, path: str) -> None:
-        save_metadata(self, path)
-        save_instance(self.getBaseLearner(), f"{path}/learner")
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "BoostingClassifier":
-        meta = load_metadata(path)
-        inst = cls()
-        set_params_from_metadata(inst, meta)
-        inst.set(inst.baseLearner, load_instance(f"{path}/learner"))
-        return inst
 
 
-class BoostingClassificationModel(
-    EnsembleClassificationModel, _BoostingClassifierParams, EnsembleReadWrite
-):
+class BoostingClassificationModel(EnsembleClassificationModel, _BoostingClassifierParams):
+    _data_fields = ("weights", "numClasses", "numFeatures")
+
     def __init__(
         self,
         num_classes: int = 2,
@@ -342,30 +262,3 @@ class BoostingClassificationModel(
     def _probability_from_raw(self, raw: Column) -> Column:
         # softmax(raw / (K−1))  (reference :341-346)
         return softmax_array(scale_array(raw, F.lit(1.0 / (self.numClasses - 1.0))))
-
-    def copy(self, extra=None) -> "BoostingClassificationModel":
-        copied = BoostingClassificationModel(
-            self.numClasses, self.weights, self.models, self.numFeatures
-        )
-        copied._resetUid(self.uid)
-        return self._copyValues(copied, extra)
-
-    def _save_impl(self, path: str) -> None:
-        save_ensemble(
-            self,
-            path,
-            self.models,
-            {
-                "weights": self.weights,
-                "numClasses": self.numClasses,
-                "numFeatures": self.numFeatures,
-            },
-        )
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "BoostingClassificationModel":
-        metadata, data, models = load_ensemble(path)
-        inst = cls(data["numClasses"], data["weights"], models, data["numFeatures"])
-        inst._resetUid(metadata["uid"])
-        set_params_from_metadata(inst, metadata)
-        return inst

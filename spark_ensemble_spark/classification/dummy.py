@@ -12,21 +12,17 @@ from __future__ import annotations
 import math
 from typing import List
 
-from pyspark.ml.base import Estimator
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from spark_ensemble_spark.core.base import ClassifierParams, EnsembleClassificationModel
-from spark_ensemble_spark.core.instances import get_num_classes
-from spark_ensemble_spark.core.persistence import (
-    EnsembleReadWrite,
-    load_json,
-    load_metadata,
-    save_json,
-    save_metadata,
-    set_params_from_metadata,
+from spark_ensemble_spark.core.base import (
+    ClassifierParams,
+    EnsembleClassificationModel,
+    EnsembleEstimator,
 )
+from spark_ensemble_spark.core.instances import get_num_classes
+from spark_ensemble_spark.core.params import one_of
 
 _STRATEGIES = ("uniform", "prior", "constant")
 
@@ -50,38 +46,14 @@ class _DummyClassifierParams(ClassifierParams):
         self._setDefault(strategy="prior", constant=0.0)
 
     def getStrategy(self) -> str:
-        s = self.getOrDefault(self.strategy).lower()
-        if s not in _STRATEGIES:
-            raise ValueError(f"strategy must be one of {_STRATEGIES}, got {s}")
-        return s
+        return one_of(self, self.strategy, _STRATEGIES)
 
     def getConstant(self) -> float:
         return self.getOrDefault(self.constant)
 
 
-class DummyClassifier(Estimator, _DummyClassifierParams, EnsembleReadWrite):
-    def __init__(self, **kwargs) -> None:
-        super().__init__()
-        self._set(**kwargs)
-
-    def setParams(self, **kwargs) -> "DummyClassifier":
-        self._set(**kwargs)
-        return self
-
-    def setStrategy(self, v: str) -> "DummyClassifier":
-        return self.setParams(strategy=v)
-
-    def setConstant(self, v: float) -> "DummyClassifier":
-        return self.setParams(constant=v)
-
-    def setLabelCol(self, v: str) -> "DummyClassifier":
-        return self.setParams(labelCol=v)
-
-    def setFeaturesCol(self, v: str) -> "DummyClassifier":
-        return self.setParams(featuresCol=v)
-
-    def _fit(self, df: DataFrame) -> "DummyClassificationModel":
-        self._validate_input(df, fitting=True)
+class DummyClassifier(EnsembleEstimator, _DummyClassifierParams):
+    def _fit_model(self, df: DataFrame) -> "DummyClassificationModel":
         label = F.col(self.getLabelCol()).cast("double")
         num_classes = get_num_classes(df, self.getLabelCol())
         strategy = self.getStrategy()
@@ -103,27 +75,14 @@ class DummyClassifier(Estimator, _DummyClassifierParams, EnsembleReadWrite):
             raw = [0.0] * num_classes
             raw[c] = 1.0
             probability = list(raw)
-        model = DummyClassificationModel(
+        return DummyClassificationModel(
             num_classes=num_classes, raw_prediction=raw, probability=probability
         )
-        model._resetUid(self.uid + "_model")
-        self._copyValues(model)
-        return model
-
-    def _save_impl(self, path: str) -> None:
-        save_metadata(self, path)
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "DummyClassifier":
-        meta = load_metadata(path)
-        inst = cls()
-        set_params_from_metadata(inst, meta)
-        return inst
 
 
-class DummyClassificationModel(
-    EnsembleClassificationModel, _DummyClassifierParams, EnsembleReadWrite
-):
+class DummyClassificationModel(EnsembleClassificationModel, _DummyClassifierParams):
+    _data_fields = ("numClasses", "rawPrediction", "probability")
+
     def __init__(
         self,
         num_classes: int = 2,
@@ -144,30 +103,3 @@ class DummyClassificationModel(
 
     def predict(self, features=None) -> float:
         return float(max(range(self.numClasses), key=lambda i: self.probability[i]))
-
-    def copy(self, extra=None) -> "DummyClassificationModel":
-        copied = DummyClassificationModel(
-            self.numClasses, self.rawPrediction, self.probability
-        )
-        copied._resetUid(self.uid)
-        return self._copyValues(copied, extra)
-
-    def _save_impl(self, path: str) -> None:
-        save_metadata(self, path)
-        save_json(
-            path + "/data",
-            {
-                "numClasses": self.numClasses,
-                "rawPrediction": self.rawPrediction,
-                "probability": self.probability,
-            },
-        )
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "DummyClassificationModel":
-        meta = load_metadata(path)
-        data = load_json(path + "/data")
-        inst = cls(data["numClasses"], data["rawPrediction"], data["probability"])
-        inst._resetUid(meta["uid"])
-        set_params_from_metadata(inst, meta)
-        return inst

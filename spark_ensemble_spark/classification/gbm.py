@@ -23,7 +23,6 @@ from __future__ import annotations
 import math
 from typing import List, Optional, Sequence
 
-from pyspark.ml.base import Estimator
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.param.shared import HasParallelism
 from pyspark.sql import Column, DataFrame
@@ -37,6 +36,7 @@ from spark_ensemble_spark.boosting.losses import (
 from spark_ensemble_spark.core.base import (
     ClassifierParams,
     EnsembleClassificationModel,
+    EnsembleEstimator,
     score_base_models,
 )
 from spark_ensemble_spark.core.instances import (
@@ -44,17 +44,8 @@ from spark_ensemble_spark.core.instances import (
     get_num_classes,
     get_num_features,
 )
-from spark_ensemble_spark.core.persistence import (
-    EnsembleReadWrite,
-    load_ensemble,
-    load_instance,
-    load_metadata,
-    save_ensemble,
-    save_instance,
-    save_metadata,
-    set_params_from_metadata,
-)
 from spark_ensemble_spark.core.instrumentation import FitInstrumentation
+from spark_ensemble_spark.core.params import one_of
 from spark_ensemble_spark.core.subbag import draw_subspace, sample_bag, slice_features
 from spark_ensemble_spark.core.utils import (
     DFIterationCache,
@@ -67,6 +58,8 @@ _INIT = ("prior", "uniform")
 
 
 class _GBMClassifierParams(ClassifierParams, GBMParams, HasParallelism):
+    _init_strategies = _INIT
+
     loss: Param = Param(
         Params._dummy(),
         "loss",
@@ -79,99 +72,13 @@ class _GBMClassifierParams(ClassifierParams, GBMParams, HasParallelism):
         self._setDefault(loss="logloss", initStrategy="prior", parallelism=1)
 
     def getLoss(self) -> str:
-        v = self.getOrDefault(self.loss).lower()
-        if v not in _LOSSES:
-            raise ValueError(f"loss must be one of {_LOSSES}, got {v}")
-        return v
+        return one_of(self, self.loss, _LOSSES)
 
 
-class GBMClassifier(Estimator, _GBMClassifierParams, EnsembleReadWrite):
-    def __init__(self, **kwargs) -> None:
-        super().__init__()
-        if "baseLearner" in kwargs:
-            self.set(self.baseLearner, kwargs.pop("baseLearner"))
-        self._set(**kwargs)
-
-    def setParams(self, **kwargs) -> "GBMClassifier":
-        if "baseLearner" in kwargs:
-            self.set(self.baseLearner, kwargs.pop("baseLearner"))
-        self._set(**kwargs)
-        return self
-
-    def setBaseLearner(self, v) -> "GBMClassifier":
-        return self.setParams(baseLearner=v)
-
-    def setNumBaseLearners(self, v: int) -> "GBMClassifier":
-        return self.setParams(numBaseLearners=v)
-
-    def setLoss(self, v: str) -> "GBMClassifier":
-        return self.setParams(loss=v)
-
-    def setInitStrategy(self, v: str) -> "GBMClassifier":
-        return self.setParams(initStrategy=v)
-
-    def setLearningRate(self, v: float) -> "GBMClassifier":
-        return self.setParams(learningRate=v)
-
-    def setOptimizedWeights(self, v: bool) -> "GBMClassifier":
-        return self.setParams(optimizedWeights=v)
-
-    def setUpdates(self, v: str) -> "GBMClassifier":
-        return self.setParams(updates=v)
-
-    def setMaxIter(self, v: int) -> "GBMClassifier":
-        return self.setParams(maxIter=v)
-
-    def setTol(self, v: float) -> "GBMClassifier":
-        return self.setParams(tol=v)
-
-    def setSubsampleRatio(self, v: float) -> "GBMClassifier":
-        return self.setParams(subsampleRatio=v)
-
-    def setSubspaceRatio(self, v: float) -> "GBMClassifier":
-        return self.setParams(subspaceRatio=v)
-
-    def setReplacement(self, v: bool) -> "GBMClassifier":
-        return self.setParams(replacement=v)
-
-    def setValidationIndicatorCol(self, v: str) -> "GBMClassifier":
-        return self.setParams(validationIndicatorCol=v)
-
-    def setValidationTol(self, v: float) -> "GBMClassifier":
-        return self.setParams(validationTol=v)
-
-    def setNumRounds(self, v: int) -> "GBMClassifier":
-        return self.setParams(numRounds=v)
-
-    def setCheckpointInterval(self, v: int) -> "GBMClassifier":
-        return self.setParams(checkpointInterval=v)
-
-    def setAggregationDepth(self, v: int) -> "GBMClassifier":
-        """Accepted for reference API parity; no-op under DataFrame aggs."""
-        return self.setParams(aggregationDepth=v)
-
-    def setParallelism(self, v: int) -> "GBMClassifier":
-        return self.setParams(parallelism=v)
-
-    def setSeed(self, v: int) -> "GBMClassifier":
-        return self.setParams(seed=v)
-
-    def setWeightCol(self, v: str) -> "GBMClassifier":
-        return self.setParams(weightCol=v)
-
-    def setLabelCol(self, v: str) -> "GBMClassifier":
-        return self.setParams(labelCol=v)
-
-    def setFeaturesCol(self, v: str) -> "GBMClassifier":
-        return self.setParams(featuresCol=v)
-
-    # ------------------------------------------------------------------
-
+class GBMClassifier(EnsembleEstimator, _GBMClassifierParams):
     def _init_raw(self, train: DataFrame, num_classes: int, dim: int) -> List[float]:
         """Initial raw scores (``GBMClassifier.scala:275-288``)."""
         strategy = self.getInitStrategy()
-        if strategy not in _INIT:
-            raise ValueError(f"initStrategy must be one of {_INIT}")
         if strategy == "uniform":
             return [0.0] * dim
         counts = {int(r[0]): r[1] for r in train.groupBy("label").count().collect()}
@@ -199,8 +106,7 @@ class GBMClassifier(Estimator, _GBMClassifierParams, EnsembleReadWrite):
             return gl.loss_arr(label, praw)
         return gl.loss(gl.encode_label(label), F.element_at(praw, 1))
 
-    def _fit(self, df: DataFrame) -> "GBMClassificationModel":
-        self._validate_input(df, fitting=True)
+    def _fit_model(self, df: DataFrame) -> "GBMClassificationModel":
         loss_name = self.getLoss()
         tol = self.getOrDefault(self.tol)
         max_iter = self.getOrDefault(self.maxIter)
@@ -386,7 +292,7 @@ class GBMClassifier(Estimator, _GBMClassifierParams, EnsembleReadWrite):
         instr.done(i, f"kept {i - v if val_state is not None else i}")
 
         keep = i - v if val_state is not None else i
-        model = GBMClassificationModel(
+        return GBMClassificationModel(
             num_classes=num_classes,
             dim=dim,
             init_raw=init_raw,
@@ -395,9 +301,6 @@ class GBMClassifier(Estimator, _GBMClassifierParams, EnsembleReadWrite):
             models=models[:keep],
             num_features=num_features,
         )
-        model._resetUid(self.uid + "_model")
-        self._copyValues(model)
-        return model
 
     def _advance(self, state, imodels, iweights, subspace, num_features):
         """praw ← praw + w ∘ model(slice(x)) over a full dataset."""
@@ -561,22 +464,10 @@ class GBMClassifier(Estimator, _GBMClassifierParams, EnsembleReadWrite):
             losses_grad0_batch=losses_grad0_batch,
         )
 
-    def _save_impl(self, path: str) -> None:
-        save_metadata(self, path)
-        save_instance(self.getBaseLearner(), f"{path}/learner")
 
-    @classmethod
-    def _load_impl(cls, path: str) -> "GBMClassifier":
-        meta = load_metadata(path)
-        inst = cls()
-        set_params_from_metadata(inst, meta)
-        inst.set(inst.baseLearner, load_instance(f"{path}/learner"))
-        return inst
+class GBMClassificationModel(EnsembleClassificationModel, _GBMClassifierParams):
+    _data_fields = ("weights", "subspaces", "numClasses", "dim", "initRaw", "numFeatures")
 
-
-class GBMClassificationModel(
-    EnsembleClassificationModel, _GBMClassifierParams, EnsembleReadWrite
-):
     def __init__(
         self,
         num_classes: int = 2,
@@ -628,49 +519,13 @@ class GBMClassificationModel(
         gl = classification_loss(self.getLoss(), self.numClasses)
         return gl.raw_to_probability(raw, self.numClasses)
 
-    def copy(self, extra=None) -> "GBMClassificationModel":
-        copied = GBMClassificationModel(
-            self.numClasses,
-            self.dim,
-            self.initRaw,
-            self.weights,
-            self.subspaces,
-            self.models,
-            self.numFeatures,
-        )
-        copied._resetUid(self.uid)
-        return self._copyValues(copied, extra)
-
+    # ``models`` is one list of ``dim`` members per round; on disk it is the
+    # flat ``model-$i`` sequence, round-major.
     def _save_impl(self, path: str) -> None:
-        flat = [m for ms in self.models for m in ms]
-        save_ensemble(
-            self,
-            path,
-            flat,
-            {
-                "weights": self.weights,
-                "subspaces": self.subspaces,
-                "numClasses": self.numClasses,
-                "dim": self.dim,
-                "initRaw": self.initRaw,
-                "numFeatures": self.numFeatures,
-            },
-        )
+        self._save_declared(path, [m for ms in self.models for m in ms])
 
     @classmethod
     def _load_impl(cls, path: str) -> "GBMClassificationModel":
-        metadata, data, flat = load_ensemble(path)
-        dim = int(data["dim"])
-        models = [flat[i : i + dim] for i in range(0, len(flat), dim)]
-        inst = cls(
-            data["numClasses"],
-            dim,
-            data["initRaw"],
-            data["weights"],
-            data["subspaces"],
-            models,
-            data["numFeatures"],
-        )
-        inst._resetUid(metadata["uid"])
-        set_params_from_metadata(inst, metadata)
+        inst, flat = cls._load_declared(path)
+        inst.models = [flat[i : i + inst.dim] for i in range(0, len(flat), inst.dim)]
         return inst

@@ -15,36 +15,25 @@ from __future__ import annotations
 
 from typing import List, Optional, Sequence
 
-from pyspark.ml.base import Estimator, Model
 from pyspark.ml.feature import VectorAssembler
 from pyspark.ml.param import Param, Params, TypeConverters
-from pyspark.ml.param.shared import HasParallelism
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 from spark_ensemble_spark.core.base import (
+    EnsembleEstimator,
+    EnsembleModel,
     PredictorParams,
-    _ModelParamsMixin,
     score_base_models,
 )
 from spark_ensemble_spark.core.instances import extract_instances
-from spark_ensemble_spark.core.params import HasBaseLearners, HasStacker
-from spark_ensemble_spark.core.persistence import (
-    EnsembleReadWrite,
-    load_ensemble,
-    load_instance,
-    load_metadata,
-    save_ensemble,
-    save_instance,
-    save_metadata,
-    set_params_from_metadata,
-)
+from spark_ensemble_spark.core.params import StackingParams, one_of
 from spark_ensemble_spark.core.utils import fit_base_learner, run_parallel
 
 _STACK_METHODS = ("class", "raw", "proba")
 
 
-class _StackingClassifierParams(PredictorParams, HasBaseLearners, HasStacker, HasParallelism):
+class _StackingClassifierParams(PredictorParams, StackingParams):
     stackMethod: Param = Param(
         Params._dummy(),
         "stackMethod",
@@ -54,13 +43,10 @@ class _StackingClassifierParams(PredictorParams, HasBaseLearners, HasStacker, Ha
 
     def __init__(self) -> None:
         super().__init__()
-        self._setDefault(parallelism=1, stackMethod="class")
+        self._setDefault(stackMethod="class")
 
     def getStackMethod(self) -> str:
-        v = self.getOrDefault(self.stackMethod).lower()
-        if v not in _STACK_METHODS:
-            raise ValueError(f"stackMethod must be one of {_STACK_METHODS}, got {v}")
-        return v
+        return one_of(self, self.stackMethod, _STACK_METHODS)
 
 
 def _meta_feature_cols(outs: List[dict], method: str) -> List[str]:
@@ -75,44 +61,8 @@ def _meta_feature_cols(outs: List[dict], method: str) -> List[str]:
     return cols
 
 
-class StackingClassifier(Estimator, _StackingClassifierParams, EnsembleReadWrite):
-    def __init__(self, **kwargs) -> None:
-        super().__init__()
-        for est_param in ("baseLearners", "stacker"):
-            if est_param in kwargs:
-                self.set(self.getParam(est_param), kwargs.pop(est_param))
-        self._set(**kwargs)
-
-    def setParams(self, **kwargs) -> "StackingClassifier":
-        for est_param in ("baseLearners", "stacker"):
-            if est_param in kwargs:
-                self.set(self.getParam(est_param), kwargs.pop(est_param))
-        self._set(**kwargs)
-        return self
-
-    def setBaseLearners(self, v) -> "StackingClassifier":
-        return self.setParams(baseLearners=v)
-
-    def setStacker(self, v) -> "StackingClassifier":
-        return self.setParams(stacker=v)
-
-    def setStackMethod(self, v: str) -> "StackingClassifier":
-        return self.setParams(stackMethod=v)
-
-    def setParallelism(self, v: int) -> "StackingClassifier":
-        return self.setParams(parallelism=v)
-
-    def setWeightCol(self, v: str) -> "StackingClassifier":
-        return self.setParams(weightCol=v)
-
-    def setLabelCol(self, v: str) -> "StackingClassifier":
-        return self.setParams(labelCol=v)
-
-    def setFeaturesCol(self, v: str) -> "StackingClassifier":
-        return self.setParams(featuresCol=v)
-
-    def _fit(self, df: DataFrame) -> "StackingClassificationModel":
-        self._validate_input(df, fitting=True)
+class StackingClassifier(EnsembleEstimator, _StackingClassifierParams):
+    def _fit_model(self, df: DataFrame) -> "StackingClassificationModel":
         learners = list(self.getBaseLearners())
         method = self.getStackMethod()
         instances = extract_instances(
@@ -166,31 +116,12 @@ class StackingClassifier(Estimator, _StackingClassifierParams, EnsembleReadWrite
                 meta.unpersist()
         finally:
             instances.unpersist()
-        model = StackingClassificationModel(models=models, stack=stack)
-        model._resetUid(self.uid + "_model")
-        self._copyValues(model)
-        return model
-
-    def _save_impl(self, path: str) -> None:
-        save_metadata(self, path, extra={"numLearners": len(self.getBaseLearners())})
-        for i, l in enumerate(self.getBaseLearners()):
-            save_instance(l, f"{path}/learner-{i}")
-        save_instance(self.getStacker(), f"{path}/stacker")
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "StackingClassifier":
-        meta = load_metadata(path)
-        n = int(meta["numLearners"])
-        inst = cls()
-        set_params_from_metadata(inst, meta)
-        inst.set(inst.baseLearners, [load_instance(f"{path}/learner-{i}") for i in range(n)])
-        inst.set(inst.stacker, load_instance(f"{path}/stacker"))
-        return inst
+        return StackingClassificationModel(models=models, stack=stack)
 
 
-class StackingClassificationModel(
-    Model, _StackingClassifierParams, _ModelParamsMixin, EnsembleReadWrite
-):
+class StackingClassificationModel(EnsembleModel, _StackingClassifierParams):
+    _sub_instances = (("stack", "stack"),)
+
     def __init__(self, models: Optional[Sequence] = None, stack=None) -> None:
         super().__init__()
         self.models = list(models or [])
@@ -229,21 +160,3 @@ class StackingClassificationModel(
             tmp.append("__stack_prob")
         out = self.stack.transform(df, overrides)
         return out.drop(*tmp)
-
-    def copy(self, extra=None) -> "StackingClassificationModel":
-        copied = StackingClassificationModel(self.models, self.stack)
-        copied._resetUid(self.uid)
-        return self._copyValues(copied, extra)
-
-    def _save_impl(self, path: str) -> None:
-        save_ensemble(self, path, self.models, {})
-        save_instance(self.stack, f"{path}/stack")
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "StackingClassificationModel":
-        metadata, data, models = load_ensemble(path)
-        stack = load_instance(f"{path}/stack")
-        inst = cls(models, stack)
-        inst._resetUid(metadata["uid"])
-        set_params_from_metadata(inst, metadata)
-        return inst

@@ -1,5 +1,21 @@
 """Estimator/Model base classes and the shared transform-chain scorer.
 
+The estimator skeleton: every estimator twin under ``regression/`` and
+``classification/`` is an :class:`EnsembleEstimator` plus its family's Param
+mixin. The base gives each class
+
+* a ``set<Name>(value)`` for every Param it declares, generated when the class
+  is defined, so no twin writes one by hand;
+* one ``__init__(**kwargs)`` / ``setParams(**kwargs)``;
+* one fit prologue and epilogue: ``_fit`` validates the input columns, runs
+  the class's own ``_fit_model`` and hands the model the estimator's uid
+  (``+ "_model"``) and Param values;
+* save/load through :class:`~spark_ensemble_spark.core.persistence.EstimatorReadWrite`.
+
+Models derive from :class:`EnsembleModel`, whose persistence
+(:class:`~spark_ensemble_spark.core.persistence.ModelReadWrite`) reads what
+each model declares; ``copy`` is PySpark's ``Params.copy``.
+
 Scoring strategy (SURVEY.md §3.2): the reference evaluates every base model
 per row inside one executor closure; we instead chain N JVM ``transform``s,
 each writing uniquely-named columns, and combine them with Catalyst array
@@ -13,6 +29,7 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 from pyspark.ml.base import Estimator, Model
 from pyspark.ml.functions import array_to_vector
+from pyspark.ml.param import Param
 from pyspark.ml.param.shared import (
     HasFeaturesCol,
     HasLabelCol,
@@ -24,6 +41,7 @@ from pyspark.ml.param.shared import (
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spark_ensemble_spark.core.persistence import EstimatorReadWrite, ModelReadWrite
 from spark_ensemble_spark.core.subbag import is_identity, slice_features
 from spark_ensemble_spark.core.utils import argmax_array
 
@@ -53,6 +71,44 @@ class PredictorParams(HasLabelCol, HasFeaturesCol, HasPredictionCol, HasWeightCo
 
 class ClassifierParams(PredictorParams, HasRawPredictionCol, HasProbabilityCol):
     pass
+
+
+def _param_setter(name: str, setter: str):
+    def set_param(self, value):
+        return self._set(**{name: value})
+
+    set_param.__name__ = set_param.__qualname__ = setter
+    set_param.__doc__ = f"Sets the value of :py:attr:`{name}`."
+    return set_param
+
+
+class EnsembleEstimator(Estimator, EstimatorReadWrite):
+    """Base of every estimator twin; see the module docstring."""
+
+    def __init_subclass__(cls, **kwargs) -> None:
+        super().__init_subclass__(**kwargs)
+        for name in dir(cls):
+            if isinstance(getattr(cls, name, None), Param):
+                setter = "set" + name[0].upper() + name[1:]
+                if not hasattr(cls, setter):
+                    setattr(cls, setter, _param_setter(name, setter))
+
+    def __init__(self, **kwargs) -> None:
+        super().__init__()
+        self._set(**kwargs)
+
+    def setParams(self, **kwargs):
+        return self._set(**kwargs)
+
+    def _fit(self, df: DataFrame) -> Model:
+        self._validate_input(df, fitting=True)
+        model = self._fit_model(df)
+        model._resetUid(self.uid + "_model")
+        return self._copyValues(model)
+
+    def _fit_model(self, df: DataFrame) -> Model:
+        """The class's own fit body, on input already validated."""
+        raise NotImplementedError
 
 
 def score_base_models(
@@ -111,7 +167,10 @@ def score_base_models(
     return df, outs, tmp
 
 
-class _ModelParamsMixin:
+class EnsembleModel(Model, ModelReadWrite):
+    """Base of every fitted model twin: the model setters and declared
+    persistence."""
+
     def setParams(self, **kwargs):
         self._set(**kwargs)
         return self
@@ -123,7 +182,7 @@ class _ModelParamsMixin:
         return self.setParams(featuresCol=v)
 
 
-class EnsembleRegressionModel(Model, PredictorParams, _ModelParamsMixin):
+class EnsembleRegressionModel(EnsembleModel, PredictorParams):
     """Base for regression ensemble models: subclasses provide a Column with
     the combined prediction via ``_prediction_expr``."""
 
@@ -137,7 +196,7 @@ class EnsembleRegressionModel(Model, PredictorParams, _ModelParamsMixin):
         return out.drop(*tmp) if tmp else out
 
 
-class EnsembleClassificationModel(Model, ClassifierParams, _ModelParamsMixin):
+class EnsembleClassificationModel(EnsembleModel, ClassifierParams):
     """Base for probabilistic classification ensembles.
 
     Subclasses produce a raw-prediction array column (``_raw_array_setup``) and

@@ -5,11 +5,37 @@ Re-expresses the reference's param traits
 ``ensemble/HasSubBag.scala:27-86``, ``bagging/BaggingParams.scala``,
 ``boosting/BoostingParams.scala``, ``boosting/GBMParams.scala``,
 ``stacking/StackingParams.scala``) as idiomatic PySpark ``Params`` mixins.
+
+Each family (bagging, boosting, stacking; GBM lives in
+``boosting/gbm_params.py``) has one mixin that its regression and
+classification twins share, so the twins add only their column Params and
+their own enumerated Param. Every enumerated string Param is read through
+:func:`one_of`.
 """
 
 from __future__ import annotations
 
+from typing import Sequence, Tuple
+
 from pyspark.ml.param import Param, Params, TypeConverters
+from pyspark.ml.param.shared import (
+    HasAggregationDepth,
+    HasCheckpointInterval,
+    HasParallelism,
+    HasSeed,
+)
+
+
+def one_of(params: Params, param: Param, allowed: Sequence[str]) -> str:
+    """The lower-cased value of an enumerated string Param.
+
+    Raises ``ValueError`` when it is not one of ``allowed``, so a bad value
+    fails in its getter, before any fit work starts.
+    """
+    v = params.getOrDefault(param).lower()
+    if v not in allowed:
+        raise ValueError(f"{param.name} must be one of {tuple(allowed)}, got {v}")
+    return v
 
 
 class HasBaseLearner(Params):
@@ -124,9 +150,11 @@ class HasVotingStrategy(Params):
     """Voting strategy for prediction combination.
 
     Reference: ``classification/BaggingClassifier.scala:55-67`` (hard/soft) and
-    ``regression/BoostingRegressor.scala:73-86`` (median/mean); validation of
-    the allowed set is done by each estimator.
+    ``regression/BoostingRegressor.scala:73-86`` (median/mean); each class
+    declares its allowed set in ``_voting_strategies``.
     """
+
+    _voting_strategies: Tuple[str, ...] = ()
 
     votingStrategy: Param = Param(
         Params._dummy(),
@@ -136,4 +164,37 @@ class HasVotingStrategy(Params):
     )
 
     def getVotingStrategy(self) -> str:
-        return self.getOrDefault(self.votingStrategy).lower()
+        return one_of(self, self.votingStrategy, self._voting_strategies)
+
+
+class BaggingParams(HasBaseLearner, HasNumBaseLearners, HasSubBag, HasSeed, HasParallelism):
+    """Params shared by the bagging twins (reference ``bagging/BaggingParams.scala``)."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self._setDefault(seed=17, parallelism=1)
+
+
+class BoostingParams(
+    HasBaseLearner,
+    HasNumBaseLearners,
+    HasCheckpointInterval,
+    HasSeed,
+    # Reference API parity (BoostingParams.scala treeAggregate depth); no-op
+    # under DataFrame aggregation (SURVEY.md §2.4).
+    HasAggregationDepth,
+):
+    """Params shared by the AdaBoost twins (reference ``boosting/BoostingParams.scala``).
+
+    The twins set this family's defaults (``checkpointInterval=10``,
+    ``seed=17``) next to their own, which keeps each saved
+    ``defaultParamMap`` in the order it has always been written in.
+    """
+
+
+class StackingParams(HasBaseLearners, HasStacker, HasParallelism):
+    """Params shared by the stacking twins (reference ``stacking/StackingParams.scala``)."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self._setDefault(parallelism=1)

@@ -16,79 +16,27 @@ from __future__ import annotations
 
 from typing import List, Optional, Sequence
 
-from pyspark.ml.base import Estimator
-from pyspark.ml.param.shared import HasParallelism, HasSeed
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from spark_ensemble_spark.core.base import EnsembleRegressionModel, PredictorParams, score_base_models
-from spark_ensemble_spark.core.instances import extract_instances, get_num_features
-from spark_ensemble_spark.core.params import HasBaseLearner, HasNumBaseLearners, HasSubBag
-from spark_ensemble_spark.core.persistence import (
-    EnsembleReadWrite,
-    load_ensemble,
-    load_instance,
-    save_ensemble,
-    set_params_from_metadata,
+from spark_ensemble_spark.core.base import (
+    EnsembleEstimator,
+    EnsembleRegressionModel,
+    PredictorParams,
+    score_base_models,
 )
+from spark_ensemble_spark.core.instances import extract_instances, get_num_features
+from spark_ensemble_spark.core.params import BaggingParams
 from spark_ensemble_spark.core.subbag import fit_bagged_models
 from spark_ensemble_spark.core.utils import array_mean
 
 
-class _BaggingRegressorParams(
-    PredictorParams, HasBaseLearner, HasNumBaseLearners, HasSubBag, HasSeed, HasParallelism
-):
-    def __init__(self) -> None:
-        super().__init__()
-        self._setDefault(seed=17, parallelism=1)
+class _BaggingRegressorParams(PredictorParams, BaggingParams):
+    pass
 
 
-class BaggingRegressor(Estimator, _BaggingRegressorParams, EnsembleReadWrite):
-    def __init__(self, **kwargs) -> None:
-        super().__init__()
-        if "baseLearner" in kwargs:
-            self.set(self.baseLearner, kwargs.pop("baseLearner"))
-        self._set(**kwargs)
-
-    def setParams(self, **kwargs) -> "BaggingRegressor":
-        if "baseLearner" in kwargs:
-            self.set(self.baseLearner, kwargs.pop("baseLearner"))
-        self._set(**kwargs)
-        return self
-
-    def setBaseLearner(self, v) -> "BaggingRegressor":
-        return self.setParams(baseLearner=v)
-
-    def setNumBaseLearners(self, v: int) -> "BaggingRegressor":
-        return self.setParams(numBaseLearners=v)
-
-    def setReplacement(self, v: bool) -> "BaggingRegressor":
-        return self.setParams(replacement=v)
-
-    def setSubsampleRatio(self, v: float) -> "BaggingRegressor":
-        return self.setParams(subsampleRatio=v)
-
-    def setSubspaceRatio(self, v: float) -> "BaggingRegressor":
-        return self.setParams(subspaceRatio=v)
-
-    def setSeed(self, v: int) -> "BaggingRegressor":
-        return self.setParams(seed=v)
-
-    def setParallelism(self, v: int) -> "BaggingRegressor":
-        return self.setParams(parallelism=v)
-
-    def setWeightCol(self, v: str) -> "BaggingRegressor":
-        return self.setParams(weightCol=v)
-
-    def setLabelCol(self, v: str) -> "BaggingRegressor":
-        return self.setParams(labelCol=v)
-
-    def setFeaturesCol(self, v: str) -> "BaggingRegressor":
-        return self.setParams(featuresCol=v)
-
-    def _fit(self, df: DataFrame) -> "BaggingRegressionModel":
-        self._validate_input(df, fitting=True)
+class BaggingRegressor(EnsembleEstimator, _BaggingRegressorParams):
+    def _fit_model(self, df: DataFrame) -> "BaggingRegressionModel":
         instances = extract_instances(
             df, self.getLabelCol(), self.getFeaturesCol(), self._weight_col_or_none()
         )
@@ -109,31 +57,14 @@ class BaggingRegressor(Estimator, _BaggingRegressorParams, EnsembleReadWrite):
             )
         finally:
             instances.unpersist()
-        model = BaggingRegressionModel(
+        return BaggingRegressionModel(
             subspaces=subspaces, models=models, num_features=num_features
         )
-        model._resetUid(self.uid + "_model")
-        self._copyValues(model)
-        return model
-
-    def _save_impl(self, path: str) -> None:
-        from spark_ensemble_spark.core.persistence import save_instance, save_metadata
-
-        save_metadata(self, path)
-        save_instance(self.getBaseLearner(), f"{path}/learner")
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "BaggingRegressor":
-        from spark_ensemble_spark.core.persistence import load_metadata
-
-        meta = load_metadata(path)
-        inst = cls()
-        set_params_from_metadata(inst, meta)
-        inst.set(inst.baseLearner, load_instance(f"{path}/learner"))
-        return inst
 
 
-class BaggingRegressionModel(EnsembleRegressionModel, _BaggingRegressorParams, EnsembleReadWrite):
+class BaggingRegressionModel(EnsembleRegressionModel, _BaggingRegressorParams):
+    _data_fields = ("subspaces", "numFeatures")
+
     def __init__(
         self,
         subspaces: Optional[List[List[int]]] = None,
@@ -160,24 +91,3 @@ class BaggingRegressionModel(EnsembleRegressionModel, _BaggingRegressorParams, E
         )
         pred = array_mean([o["prediction"] for o in outs])
         return df, pred, tmp
-
-    def copy(self, extra=None) -> "BaggingRegressionModel":
-        copied = BaggingRegressionModel(self.subspaces, self.models, self.numFeatures)
-        copied._resetUid(self.uid)
-        return self._copyValues(copied, extra)
-
-    def _save_impl(self, path: str) -> None:
-        save_ensemble(
-            self,
-            path,
-            self.models,
-            {"subspaces": self.subspaces, "numFeatures": self.numFeatures},
-        )
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "BaggingRegressionModel":
-        metadata, data, models = load_ensemble(path)
-        inst = cls(data["subspaces"], models, data["numFeatures"])
-        inst._resetUid(metadata["uid"])
-        set_params_from_metadata(inst, metadata)
-        return inst

@@ -17,38 +17,19 @@ from __future__ import annotations
 import math
 from typing import List, Optional, Sequence
 
-from pyspark.ml.base import Estimator
 from pyspark.ml.param import Param, Params, TypeConverters
-from pyspark.ml.param.shared import (
-    HasAggregationDepth,
-    HasCheckpointInterval,
-    HasSeed,
-)
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_ensemble_spark.core.base import (
+    EnsembleEstimator,
     EnsembleRegressionModel,
     PredictorParams,
     score_base_models,
 )
 from spark_ensemble_spark.core.instances import extract_instances, get_num_features
 from spark_ensemble_spark.core.instrumentation import FitInstrumentation
-from spark_ensemble_spark.core.params import (
-    HasBaseLearner,
-    HasNumBaseLearners,
-    HasVotingStrategy,
-)
-from spark_ensemble_spark.core.persistence import (
-    EnsembleReadWrite,
-    load_ensemble,
-    load_instance,
-    load_metadata,
-    save_ensemble,
-    save_instance,
-    save_metadata,
-    set_params_from_metadata,
-)
+from spark_ensemble_spark.core.params import BoostingParams, HasVotingStrategy, one_of
 from spark_ensemble_spark.core.utils import (
     DFIterationCache,
     fit_base_learner,
@@ -57,7 +38,6 @@ from spark_ensemble_spark.core.utils import (
 )
 
 _LOSS_TYPES = ("exponential", "linear", "squared")
-_VOTING = ("median", "mean")
 
 
 def _loss_expr(loss_type: str, error):
@@ -72,23 +52,14 @@ def _loss_expr(loss_type: str, error):
     raise ValueError(f"bad loss type {loss_type}")
 
 
-class _BoostingRegressorParams(
-    PredictorParams,
-    HasBaseLearner,
-    HasNumBaseLearners,
-    HasVotingStrategy,
-    HasCheckpointInterval,
-    HasSeed,
-    # Reference API parity (BoostingParams.scala treeAggregate depth); no-op
-    # under DataFrame aggregation (SURVEY.md §2.4).
-    HasAggregationDepth,
-):
+class _BoostingRegressorParams(PredictorParams, BoostingParams, HasVotingStrategy):
     lossType: Param = Param(
         Params._dummy(),
         "lossType",
         f"boosting loss applied to the normalized error, one of {_LOSS_TYPES}",
         typeConverter=TypeConverters.toString,
     )
+    _voting_strategies = ("median", "mean")
 
     def __init__(self) -> None:
         super().__init__()
@@ -100,61 +71,11 @@ class _BoostingRegressorParams(
         )
 
     def getLossType(self) -> str:
-        v = self.getOrDefault(self.lossType).lower()
-        if v not in _LOSS_TYPES:
-            raise ValueError(f"lossType must be one of {_LOSS_TYPES}, got {v}")
-        return v
-
-    def getVotingStrategy(self) -> str:
-        v = self.getOrDefault(self.votingStrategy).lower()
-        if v not in _VOTING:
-            raise ValueError(f"votingStrategy must be one of {_VOTING}, got {v}")
-        return v
+        return one_of(self, self.lossType, _LOSS_TYPES)
 
 
-class BoostingRegressor(Estimator, _BoostingRegressorParams, EnsembleReadWrite):
-    def __init__(self, **kwargs) -> None:
-        super().__init__()
-        if "baseLearner" in kwargs:
-            self.set(self.baseLearner, kwargs.pop("baseLearner"))
-        self._set(**kwargs)
-
-    def setParams(self, **kwargs) -> "BoostingRegressor":
-        if "baseLearner" in kwargs:
-            self.set(self.baseLearner, kwargs.pop("baseLearner"))
-        self._set(**kwargs)
-        return self
-
-    def setBaseLearner(self, v) -> "BoostingRegressor":
-        return self.setParams(baseLearner=v)
-
-    def setNumBaseLearners(self, v: int) -> "BoostingRegressor":
-        return self.setParams(numBaseLearners=v)
-
-    def setLossType(self, v: str) -> "BoostingRegressor":
-        return self.setParams(lossType=v)
-
-    def setVotingStrategy(self, v: str) -> "BoostingRegressor":
-        return self.setParams(votingStrategy=v)
-
-    def setCheckpointInterval(self, v: int) -> "BoostingRegressor":
-        return self.setParams(checkpointInterval=v)
-
-    def setAggregationDepth(self, v: int) -> "BoostingRegressor":
-        """Accepted for reference API parity; no-op under DataFrame aggs."""
-        return self.setParams(aggregationDepth=v)
-
-    def setWeightCol(self, v: str) -> "BoostingRegressor":
-        return self.setParams(weightCol=v)
-
-    def setLabelCol(self, v: str) -> "BoostingRegressor":
-        return self.setParams(labelCol=v)
-
-    def setFeaturesCol(self, v: str) -> "BoostingRegressor":
-        return self.setParams(featuresCol=v)
-
-    def _fit(self, df: DataFrame) -> "BoostingRegressionModel":
-        self._validate_input(df, fitting=True)
+class BoostingRegressor(EnsembleEstimator, _BoostingRegressorParams):
+    def _fit_model(self, df: DataFrame) -> "BoostingRegressionModel":
         loss_type = self.getLossType()
         num_learners = self.getNumBaseLearners()
 
@@ -239,29 +160,14 @@ class BoostingRegressor(Estimator, _BoostingRegressorParams, EnsembleReadWrite):
             cache.close()
         instr.done(len(models), stop_reason)
 
-        model = BoostingRegressionModel(
+        return BoostingRegressionModel(
             weights=estimator_weights, models=models, num_features=num_features
         )
-        model._resetUid(self.uid + "_model")
-        self._copyValues(model)
-        return model
-
-    def _save_impl(self, path: str) -> None:
-        save_metadata(self, path)
-        save_instance(self.getBaseLearner(), f"{path}/learner")
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "BoostingRegressor":
-        meta = load_metadata(path)
-        inst = cls()
-        set_params_from_metadata(inst, meta)
-        inst.set(inst.baseLearner, load_instance(f"{path}/learner"))
-        return inst
 
 
-class BoostingRegressionModel(
-    EnsembleRegressionModel, _BoostingRegressorParams, EnsembleReadWrite
-):
+class BoostingRegressionModel(EnsembleRegressionModel, _BoostingRegressorParams):
+    _data_fields = ("weights", "numFeatures")
+
     def __init__(
         self,
         weights: Optional[Sequence[float]] = None,
@@ -292,24 +198,3 @@ class BoostingRegressionModel(
         else:
             pred = weighted_mean(pred_cols, self.weights)
         return df, pred, tmp
-
-    def copy(self, extra=None) -> "BoostingRegressionModel":
-        copied = BoostingRegressionModel(self.weights, self.models, self.numFeatures)
-        copied._resetUid(self.uid)
-        return self._copyValues(copied, extra)
-
-    def _save_impl(self, path: str) -> None:
-        save_ensemble(
-            self,
-            path,
-            self.models,
-            {"weights": self.weights, "numFeatures": self.numFeatures},
-        )
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "BoostingRegressionModel":
-        metadata, data, models = load_ensemble(path)
-        inst = cls(data["weights"], models, data["numFeatures"])
-        inst._resetUid(metadata["uid"])
-        set_params_from_metadata(inst, metadata)
-        return inst

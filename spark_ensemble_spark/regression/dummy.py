@@ -10,22 +10,16 @@ median/quantile via Greenwald-Khanna ``approxQuantile`` with relative error
 
 from __future__ import annotations
 
-from typing import Optional
-
-from pyspark.ml.base import Estimator
 from pyspark.ml.param import Param, Params, TypeConverters
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_ensemble_spark.core.base import EnsembleRegressionModel, PredictorParams
-from spark_ensemble_spark.core.persistence import (
-    EnsembleReadWrite,
-    load_json,
-    load_metadata,
-    save_json,
-    save_metadata,
-    set_params_from_metadata,
+from spark_ensemble_spark.core.base import (
+    EnsembleEstimator,
+    EnsembleRegressionModel,
+    PredictorParams,
 )
+from spark_ensemble_spark.core.params import one_of
 
 _STRATEGIES = ("mean", "median", "quantile", "constant")
 
@@ -61,10 +55,7 @@ class _DummyRegressorParams(PredictorParams):
         self._setDefault(strategy="mean", constant=0.0, quantile=0.5, tol=1e-2)
 
     def getStrategy(self) -> str:
-        s = self.getOrDefault(self.strategy).lower()
-        if s not in _STRATEGIES:
-            raise ValueError(f"strategy must be one of {_STRATEGIES}, got {s}")
-        return s
+        return one_of(self, self.strategy, _STRATEGIES)
 
     def getConstant(self) -> float:
         return self.getOrDefault(self.constant)
@@ -76,38 +67,8 @@ class _DummyRegressorParams(PredictorParams):
         return self.getOrDefault(self.tol)
 
 
-class DummyRegressor(Estimator, _DummyRegressorParams, EnsembleReadWrite):
-    def __init__(self, **kwargs) -> None:
-        super().__init__()
-        self._set(**kwargs)
-
-    def setParams(self, **kwargs) -> "DummyRegressor":
-        self._set(**kwargs)
-        return self
-
-    def setStrategy(self, v: str) -> "DummyRegressor":
-        return self.setParams(strategy=v)
-
-    def setConstant(self, v: float) -> "DummyRegressor":
-        return self.setParams(constant=v)
-
-    def setQuantile(self, v: float) -> "DummyRegressor":
-        return self.setParams(quantile=v)
-
-    def setTol(self, v: float) -> "DummyRegressor":
-        return self.setParams(tol=v)
-
-    def setLabelCol(self, v: str) -> "DummyRegressor":
-        return self.setParams(labelCol=v)
-
-    def setFeaturesCol(self, v: str) -> "DummyRegressor":
-        return self.setParams(featuresCol=v)
-
-    def setPredictionCol(self, v: str) -> "DummyRegressor":
-        return self.setParams(predictionCol=v)
-
-    def _fit(self, df: DataFrame) -> "DummyRegressionModel":
-        self._validate_input(df, fitting=True)
+class DummyRegressor(EnsembleEstimator, _DummyRegressorParams):
+    def _fit_model(self, df: DataFrame) -> "DummyRegressionModel":
         label = F.col(self.getLabelCol()).cast("double")
         strategy = self.getStrategy()
         if strategy == "mean":
@@ -119,23 +80,12 @@ class DummyRegressor(Estimator, _DummyRegressorParams, EnsembleReadWrite):
             )[0]
         else:
             prediction = self.getConstant()
-        model = DummyRegressionModel(prediction=float(prediction))
-        model._resetUid(self.uid + "_model")
-        self._copyValues(model)
-        return model
-
-    def _save_impl(self, path: str) -> None:
-        save_metadata(self, path)
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "DummyRegressor":
-        meta = load_metadata(path)
-        inst = cls()
-        set_params_from_metadata(inst, meta)
-        return inst
+        return DummyRegressionModel(prediction=float(prediction))
 
 
-class DummyRegressionModel(EnsembleRegressionModel, _DummyRegressorParams, EnsembleReadWrite):
+class DummyRegressionModel(EnsembleRegressionModel, _DummyRegressorParams):
+    _data_fields = ("prediction",)
+
     def __init__(self, prediction: float = 0.0) -> None:
         super().__init__()
         self.prediction = float(prediction)
@@ -146,21 +96,3 @@ class DummyRegressionModel(EnsembleRegressionModel, _DummyRegressorParams, Ensem
     # predict() mirrors the reference model's pure function for driver-side use.
     def predict(self, features) -> float:
         return self.prediction
-
-    def copy(self, extra=None) -> "DummyRegressionModel":
-        copied = DummyRegressionModel(self.prediction)
-        copied._resetUid(self.uid)
-        return self._copyValues(copied, extra)
-
-    def _save_impl(self, path: str) -> None:
-        save_metadata(self, path)
-        save_json(path + "/data", {"prediction": self.prediction})
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "DummyRegressionModel":
-        meta = load_metadata(path)
-        data = load_json(path + "/data")
-        inst = cls(prediction=data["prediction"])
-        inst._resetUid(meta["uid"])
-        set_params_from_metadata(inst, meta)
-        return inst

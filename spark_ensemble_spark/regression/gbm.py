@@ -29,7 +29,6 @@ from __future__ import annotations
 import time
 from typing import List, Optional, Sequence
 
-from pyspark.ml.base import Estimator
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,24 +36,16 @@ from pyspark.sql import functions as F
 from spark_ensemble_spark.boosting.gbm_params import GBMParams
 from spark_ensemble_spark.boosting.losses import GBMLoss, regression_loss
 from spark_ensemble_spark.core.base import (
+    EnsembleEstimator,
     EnsembleRegressionModel,
     PredictorParams,
     score_base_models,
 )
 from spark_ensemble_spark.core.instances import extract_instances, get_num_features
 from spark_ensemble_spark.core.instrumentation import FitInstrumentation
-from spark_ensemble_spark.core.persistence import (
-    EnsembleReadWrite,
-    load_ensemble,
-    load_instance,
-    load_metadata,
-    save_ensemble,
-    save_instance,
-    save_metadata,
-    set_params_from_metadata,
-)
 from spark_ensemble_spark.core.optim import minimize_scalar_batched
 from spark_ensemble_spark.core.subbag import draw_subspace, sample_bag, slice_features
+from spark_ensemble_spark.core.params import one_of
 from spark_ensemble_spark.core.utils import DFIterationCache, fit_base_learner
 
 _LOSSES = ("squared", "absolute", "huber", "quantile", "logcosh", "scaledlogcosh")
@@ -62,6 +53,8 @@ _INIT = ("constant", "zero", "base")
 
 
 class _GBMRegressorParams(PredictorParams, GBMParams):
+    _init_strategies = _INIT
+
     loss: Param = Param(
         Params._dummy(),
         "loss",
@@ -74,101 +67,15 @@ class _GBMRegressorParams(PredictorParams, GBMParams):
         self._setDefault(loss="squared", initStrategy="constant", alpha=0.9)
 
     def getLoss(self) -> str:
-        v = self.getOrDefault(self.loss).lower()
-        if v not in _LOSSES:
-            raise ValueError(f"loss must be one of {_LOSSES}, got {v}")
-        return v
+        return one_of(self, self.loss, _LOSSES)
 
 
-class GBMRegressor(Estimator, _GBMRegressorParams, EnsembleReadWrite):
-    def __init__(self, **kwargs) -> None:
-        super().__init__()
-        if "baseLearner" in kwargs:
-            self.set(self.baseLearner, kwargs.pop("baseLearner"))
-        self._set(**kwargs)
-
-    def setParams(self, **kwargs) -> "GBMRegressor":
-        if "baseLearner" in kwargs:
-            self.set(self.baseLearner, kwargs.pop("baseLearner"))
-        self._set(**kwargs)
-        return self
-
-    def setBaseLearner(self, v) -> "GBMRegressor":
-        return self.setParams(baseLearner=v)
-
-    def setNumBaseLearners(self, v: int) -> "GBMRegressor":
-        return self.setParams(numBaseLearners=v)
-
-    def setLoss(self, v: str) -> "GBMRegressor":
-        return self.setParams(loss=v)
-
-    def setAlpha(self, v: float) -> "GBMRegressor":
-        return self.setParams(alpha=v)
-
-    def setInitStrategy(self, v: str) -> "GBMRegressor":
-        return self.setParams(initStrategy=v)
-
-    def setLearningRate(self, v: float) -> "GBMRegressor":
-        return self.setParams(learningRate=v)
-
-    def setOptimizedWeights(self, v: bool) -> "GBMRegressor":
-        return self.setParams(optimizedWeights=v)
-
-    def setUpdates(self, v: str) -> "GBMRegressor":
-        return self.setParams(updates=v)
-
-    def setMaxIter(self, v: int) -> "GBMRegressor":
-        return self.setParams(maxIter=v)
-
-    def setTol(self, v: float) -> "GBMRegressor":
-        return self.setParams(tol=v)
-
-    def setSubsampleRatio(self, v: float) -> "GBMRegressor":
-        return self.setParams(subsampleRatio=v)
-
-    def setSubspaceRatio(self, v: float) -> "GBMRegressor":
-        return self.setParams(subspaceRatio=v)
-
-    def setReplacement(self, v: bool) -> "GBMRegressor":
-        return self.setParams(replacement=v)
-
-    def setValidationIndicatorCol(self, v: str) -> "GBMRegressor":
-        return self.setParams(validationIndicatorCol=v)
-
-    def setValidationTol(self, v: float) -> "GBMRegressor":
-        return self.setParams(validationTol=v)
-
-    def setNumRounds(self, v: int) -> "GBMRegressor":
-        return self.setParams(numRounds=v)
-
-    def setCheckpointInterval(self, v: int) -> "GBMRegressor":
-        return self.setParams(checkpointInterval=v)
-
-    def setAggregationDepth(self, v: int) -> "GBMRegressor":
-        """Accepted for reference API parity; no-op under DataFrame aggs."""
-        return self.setParams(aggregationDepth=v)
-
-    def setSeed(self, v: int) -> "GBMRegressor":
-        return self.setParams(seed=v)
-
-    def setWeightCol(self, v: str) -> "GBMRegressor":
-        return self.setParams(weightCol=v)
-
-    def setLabelCol(self, v: str) -> "GBMRegressor":
-        return self.setParams(labelCol=v)
-
-    def setFeaturesCol(self, v: str) -> "GBMRegressor":
-        return self.setParams(featuresCol=v)
-
-    # ------------------------------------------------------------------
-
+class GBMRegressor(EnsembleEstimator, _GBMRegressorParams):
     def _fit_init_model(self, train: DataFrame, loss_name: str):
         """Init strategies (``GBMRegressor.scala:287-303``)."""
         from spark_ensemble_spark.regression.dummy import DummyRegressor
 
         strategy = self.getInitStrategy()
-        if strategy not in _INIT:
-            raise ValueError(f"initStrategy must be one of {_INIT}")
         if strategy == "base":
             return fit_base_learner(
                 self.getBaseLearner(), train, "label", "features", "__init_pred",
@@ -190,8 +97,7 @@ class GBMRegressor(Estimator, _GBMRegressorParams, EnsembleReadWrite):
             dummy, train, "label", "features", "__init_pred", weight_col="weight"
         )
 
-    def _fit(self, df: DataFrame) -> "GBMRegressionModel":
-        self._validate_input(df, fitting=True)
+    def _fit_model(self, df: DataFrame) -> "GBMRegressionModel":
         loss_name = self.getLoss()
         alpha = self.getAlpha()
         tol = self.getOrDefault(self.tol)
@@ -427,31 +333,19 @@ class GBMRegressor(Estimator, _GBMRegressorParams, EnsembleReadWrite):
 
         instr.done(i, f"kept {i - v if val_state is not None else i}")
         keep = i - v if val_state is not None else i
-        model = GBMRegressionModel(
+        return GBMRegressionModel(
             weights=weights[:keep],
             subspaces=subspaces[:keep],
             models=models[:keep],
             init_model=init,
             num_features=num_features,
         )
-        model._resetUid(self.uid + "_model")
-        self._copyValues(model)
-        return model
-
-    def _save_impl(self, path: str) -> None:
-        save_metadata(self, path)
-        save_instance(self.getBaseLearner(), f"{path}/learner")
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "GBMRegressor":
-        meta = load_metadata(path)
-        inst = cls()
-        set_params_from_metadata(inst, meta)
-        inst.set(inst.baseLearner, load_instance(f"{path}/learner"))
-        return inst
 
 
-class GBMRegressionModel(EnsembleRegressionModel, _GBMRegressorParams, EnsembleReadWrite):
+class GBMRegressionModel(EnsembleRegressionModel, _GBMRegressorParams):
+    _data_fields = ("weights", "subspaces", "numFeatures")
+    _sub_instances = (("init", "init"),)
+
     def __init__(
         self,
         weights: Optional[Sequence[float]] = None,
@@ -490,32 +384,3 @@ class GBMRegressionModel(EnsembleRegressionModel, _GBMRegressorParams, EnsembleR
         for o, w in zip(outs, self.weights):
             pred = pred + F.lit(w) * F.col(o["prediction"])
         return df, pred, tmp + tmp2
-
-    def copy(self, extra=None) -> "GBMRegressionModel":
-        copied = GBMRegressionModel(
-            self.weights, self.subspaces, self.models, self.init, self.numFeatures
-        )
-        copied._resetUid(self.uid)
-        return self._copyValues(copied, extra)
-
-    def _save_impl(self, path: str) -> None:
-        save_ensemble(
-            self,
-            path,
-            self.models,
-            {
-                "weights": self.weights,
-                "subspaces": self.subspaces,
-                "numFeatures": self.numFeatures,
-            },
-        )
-        save_instance(self.init, f"{path}/init")
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "GBMRegressionModel":
-        metadata, data, models = load_ensemble(path)
-        init = load_instance(f"{path}/init")
-        inst = cls(data["weights"], data["subspaces"], models, init, data["numFeatures"])
-        inst._resetUid(metadata["uid"])
-        set_params_from_metadata(inst, metadata)
-        return inst

@@ -12,72 +12,29 @@ per-row Python, and the meta-feature build is lazy until the stacker fit.
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Optional, Sequence
 
-from pyspark.ml.base import Estimator, Model
 from pyspark.ml.feature import VectorAssembler
-from pyspark.ml.param.shared import HasParallelism
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from spark_ensemble_spark.core.base import PredictorParams, _ModelParamsMixin, score_base_models
-from spark_ensemble_spark.core.instances import extract_instances
-from spark_ensemble_spark.core.params import HasBaseLearners, HasStacker
-from spark_ensemble_spark.core.persistence import (
-    EnsembleReadWrite,
-    load_ensemble,
-    load_instance,
-    load_metadata,
-    save_ensemble,
-    save_instance,
-    save_metadata,
-    set_params_from_metadata,
+from spark_ensemble_spark.core.base import (
+    EnsembleEstimator,
+    EnsembleModel,
+    PredictorParams,
+    score_base_models,
 )
+from spark_ensemble_spark.core.instances import extract_instances
+from spark_ensemble_spark.core.params import StackingParams
 from spark_ensemble_spark.core.utils import fit_base_learner, run_parallel
 
 
-class _StackingRegressorParams(PredictorParams, HasBaseLearners, HasStacker, HasParallelism):
-    def __init__(self) -> None:
-        super().__init__()
-        self._setDefault(parallelism=1)
+class _StackingRegressorParams(PredictorParams, StackingParams):
+    pass
 
 
-class StackingRegressor(Estimator, _StackingRegressorParams, EnsembleReadWrite):
-    def __init__(self, **kwargs) -> None:
-        super().__init__()
-        for est_param in ("baseLearners", "stacker"):
-            if est_param in kwargs:
-                self.set(self.getParam(est_param), kwargs.pop(est_param))
-        self._set(**kwargs)
-
-    def setParams(self, **kwargs) -> "StackingRegressor":
-        for est_param in ("baseLearners", "stacker"):
-            if est_param in kwargs:
-                self.set(self.getParam(est_param), kwargs.pop(est_param))
-        self._set(**kwargs)
-        return self
-
-    def setBaseLearners(self, v) -> "StackingRegressor":
-        return self.setParams(baseLearners=v)
-
-    def setStacker(self, v) -> "StackingRegressor":
-        return self.setParams(stacker=v)
-
-    def setParallelism(self, v: int) -> "StackingRegressor":
-        return self.setParams(parallelism=v)
-
-    def setWeightCol(self, v: str) -> "StackingRegressor":
-        return self.setParams(weightCol=v)
-
-    def setLabelCol(self, v: str) -> "StackingRegressor":
-        return self.setParams(labelCol=v)
-
-    def setFeaturesCol(self, v: str) -> "StackingRegressor":
-        return self.setParams(featuresCol=v)
-
-    def _fit(self, df: DataFrame) -> "StackingRegressionModel":
-        self._validate_input(df, fitting=True)
+class StackingRegressor(EnsembleEstimator, _StackingRegressorParams):
+    def _fit_model(self, df: DataFrame) -> "StackingRegressionModel":
         learners = list(self.getBaseLearners())
         instances = extract_instances(
             df, self.getLabelCol(), self.getFeaturesCol(), self._weight_col_or_none()
@@ -115,31 +72,12 @@ class StackingRegressor(Estimator, _StackingRegressorParams, EnsembleReadWrite):
                 meta.unpersist()
         finally:
             instances.unpersist()
-        model = StackingRegressionModel(models=models, stack=stack)
-        model._resetUid(self.uid + "_model")
-        self._copyValues(model)
-        return model
-
-    def _save_impl(self, path: str) -> None:
-        save_metadata(self, path, extra={"numLearners": len(self.getBaseLearners())})
-        for i, l in enumerate(self.getBaseLearners()):
-            save_instance(l, f"{path}/learner-{i}")
-        save_instance(self.getStacker(), f"{path}/stacker")
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "StackingRegressor":
-        meta = load_metadata(path)
-        n = int(meta["numLearners"])
-        inst = cls()
-        set_params_from_metadata(inst, meta)
-        inst.set(inst.baseLearners, [load_instance(f"{path}/learner-{i}") for i in range(n)])
-        inst.set(inst.stacker, load_instance(f"{path}/stacker"))
-        return inst
+        return StackingRegressionModel(models=models, stack=stack)
 
 
-class StackingRegressionModel(
-    Model, _StackingRegressorParams, _ModelParamsMixin, EnsembleReadWrite
-):
+class StackingRegressionModel(EnsembleModel, _StackingRegressorParams):
+    _sub_instances = (("stack", "stack"),)
+
     def __init__(self, models: Optional[Sequence] = None, stack=None) -> None:
         super().__init__()
         self.models = list(models or [])
@@ -164,21 +102,3 @@ class StackingRegressionModel(
         }
         out = self.stack.transform(df, overrides)
         return out.drop(*tmp)
-
-    def copy(self, extra=None) -> "StackingRegressionModel":
-        copied = StackingRegressionModel(self.models, self.stack)
-        copied._resetUid(self.uid)
-        return self._copyValues(copied, extra)
-
-    def _save_impl(self, path: str) -> None:
-        save_ensemble(self, path, self.models, {})
-        save_instance(self.stack, f"{path}/stack")
-
-    @classmethod
-    def _load_impl(cls, path: str) -> "StackingRegressionModel":
-        metadata, data, models = load_ensemble(path)
-        stack = load_instance(f"{path}/stack")
-        inst = cls(models, stack)
-        inst._resetUid(metadata["uid"])
-        set_params_from_metadata(inst, metadata)
-        return inst
