@@ -7,7 +7,9 @@ hard vote = sum of one-hot predicted classes; soft vote = sum of base
 
 Votes are combined as array-column expressions (one K-vector per model via
 ``F.transform`` over a class-index sequence, summed with ``zip_with``) — all
-JVM-side, no per-row Python.
+JVM-side, no per-row Python. The fit is the bagging family's shared
+:func:`~spark_ensemble_spark.core.subbag.fit_bagged_models`; this twin adds
+the class count and the vote.
 """
 
 from __future__ import annotations
@@ -17,19 +19,15 @@ from typing import List, Optional, Sequence
 from pyspark.ml.functions import vector_to_array
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from spark_ensemble_spark.core.base import (
     ClassifierParams,
     EnsembleClassificationModel,
     EnsembleEstimator,
+    HasMembers,
     score_base_models,
 )
-from spark_ensemble_spark.core.instances import (
-    extract_instances,
-    get_num_classes,
-    get_num_features,
-)
+from spark_ensemble_spark.core.instances import get_num_classes
 from spark_ensemble_spark.core.params import BaggingParams, HasVotingStrategy
 from spark_ensemble_spark.core.subbag import fit_bagged_models
 from spark_ensemble_spark.core.utils import scale_array, sum_arrays
@@ -46,35 +44,12 @@ class _BaggingClassifierParams(ClassifierParams, BaggingParams, HasVotingStrateg
 class BaggingClassifier(EnsembleEstimator, _BaggingClassifierParams):
     def _fit_model(self, df: DataFrame) -> "BaggingClassificationModel":
         num_classes = get_num_classes(df, self.getLabelCol())
-        instances = extract_instances(
-            df, self.getLabelCol(), self.getFeaturesCol(), self._weight_col_or_none()
-        )
-        instances.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            instances.count()
-            num_features = get_num_features(instances, "features")
-            subspaces, models = fit_bagged_models(
-                instances,
-                num_features,
-                self.getBaseLearner(),
-                self.getNumBaseLearners(),
-                self.getReplacement(),
-                self.getSubsampleRatio(),
-                self.getSubspaceRatio(),
-                self.getOrDefault(self.seed),
-                self.getOrDefault(self.parallelism),
-            )
-        finally:
-            instances.unpersist()
-        return BaggingClassificationModel(
-            num_classes=num_classes,
-            subspaces=subspaces,
-            models=models,
-            num_features=num_features,
-        )
+        return BaggingClassificationModel(num_classes=num_classes, **fit_bagged_models(self, df))
 
 
-class BaggingClassificationModel(EnsembleClassificationModel, _BaggingClassifierParams):
+class BaggingClassificationModel(
+    HasMembers, EnsembleClassificationModel, _BaggingClassifierParams
+):
     _data_fields = ("subspaces", "numFeatures", "numClasses")
 
     def __init__(
@@ -89,10 +64,6 @@ class BaggingClassificationModel(EnsembleClassificationModel, _BaggingClassifier
         self.subspaces = [list(s) for s in (subspaces or [])]
         self.models = list(models or [])
         self.numFeatures = int(num_features)
-
-    @property
-    def numModels(self) -> int:
-        return len(self.models)
 
     def _raw_array_setup(self, df: DataFrame):
         voting = self.getVotingStrategy()

@@ -13,14 +13,18 @@ Semantic parity with
 * probability = softmax(raw / (K−1)).
 
 All per-row math is array-column expressions over the base models'
-probability/prediction columns; the evolving weight lives in a ``__bw``
-column, persisted/truncated via :class:`DFIterationCache`.
+probability/prediction columns. The reweighting loop (the ``__bw`` weight
+column, its per-round normalisation, caching and instrumentation) is the
+AdaBoost family's shared
+:class:`~spark_ensemble_spark.core.families.BoostingEstimator`; this twin
+supplies the SAMME and SAMME.R rounds. A round with no weighted error ends the
+fit after its weight update.
 """
 
 from __future__ import annotations
 
 import math
-from typing import List, Optional, Sequence
+from typing import Optional, Sequence
 
 from pyspark.ml.functions import vector_to_array
 from pyspark.ml.param import Param, Params, TypeConverters
@@ -30,24 +34,13 @@ from pyspark.sql import functions as F
 from spark_ensemble_spark.core.base import (
     ClassifierParams,
     EnsembleClassificationModel,
-    EnsembleEstimator,
+    HasMembers,
     score_base_models,
 )
-from spark_ensemble_spark.core.instances import (
-    extract_instances,
-    get_num_classes,
-    get_num_features,
-)
-from spark_ensemble_spark.core.instrumentation import FitInstrumentation
+from spark_ensemble_spark.core.families import BoostingEstimator, RoundResult
+from spark_ensemble_spark.core.instances import get_num_classes
 from spark_ensemble_spark.core.params import BoostingParams, one_of
-from spark_ensemble_spark.core.utils import (
-    DFIterationCache,
-    EPSILON,
-    fit_base_learner,
-    scale_array,
-    softmax_array,
-    sum_arrays,
-)
+from spark_ensemble_spark.core.utils import EPSILON, scale_array, softmax_array, sum_arrays
 
 _ALGORITHMS = ("real", "discrete")
 
@@ -83,124 +76,70 @@ def _samme_r_loss_expr(prob_arr: Column, label: Column, num_classes: int) -> Col
     )
 
 
-class BoostingClassifier(EnsembleEstimator, _BoostingClassifierParams):
+class BoostingClassifier(BoostingEstimator, _BoostingClassifierParams):
     def _fit_model(self, df: DataFrame) -> "BoostingClassificationModel":
         algorithm = self.getAlgorithm()
-        num_learners = self.getNumBaseLearners()
         num_classes = get_num_classes(df, self.getLabelCol())
         k = num_classes
+        misclassified = F.when(F.col("__pred") != F.col("label"), 1.0).otherwise(0.0)
 
-        instances = extract_instances(
-            df, self.getLabelCol(), self.getFeaturesCol(), self._weight_col_or_none()
-        ).withColumn("__bw", F.col("weight"))
-        num_features = get_num_features(instances, "features")
+        def samme_r_round(model, state: DataFrame, cache) -> RoundResult:
+            if not model.hasParam("probabilityCol"):
+                raise ValueError("algorithm='real' requires a probabilistic base learner")
+            scored = model.transform(state).withColumn(
+                "__prob_arr", vector_to_array(F.col("__prob"))
+            )
+            scored = cache.update(scored)
+            estimator_error = (
+                scored.agg(F.sum(F.col("__wnorm") * misclassified)).first()[0] or 0.0
+            )
+            loss = _samme_r_loss_expr(F.col("__prob_arr"), F.col("label"), k)
+            next_state = scored.withColumn(
+                "__bw", F.col("__wnorm") * F.exp(F.lit(-(k - 1.0) / k) * loss)
+            ).select("label", "weight", "features", "__bw")
+            stop = "perfect fit" if estimator_error <= 0 else None
+            return estimator_error, 1.0, next_state, stop
 
-        cache = DFIterationCache(self.getOrDefault(self.checkpointInterval))
-        state = cache.update(instances)
-        sum_weights = state.agg(F.sum("__bw")).first()[0] or 0.0
+        def samme_round(model, state: DataFrame, cache) -> RoundResult:
+            scored = model.transform(state).withColumn("__err", misclassified)
+            scored = cache.update(scored)
+            estimator_error = (
+                scored.agg(F.sum(F.col("__wnorm") * F.col("__err"))).first()[0] or 0.0
+            )
+            beta = (
+                estimator_error / ((1 - estimator_error) * (k - 1))
+                if estimator_error < 1.0
+                else 1e18
+            )
+            if estimator_error >= 1.0 - 1.0 / k:
+                # Worse than chance: discard this round and stop
+                # (reference :252-255 net behavior).
+                return estimator_error, None, None, "worse than chance"
+            estimator_weight = 1.0 if beta == 0.0 else math.log(1.0 / beta)
+            inv_beta = 1.0 / beta if beta > 0 else 1.0
+            next_state = scored.withColumn(
+                "__bw", F.col("__wnorm") * F.pow(F.lit(inv_beta), F.col("__err"))
+            ).select("label", "weight", "features", "__bw")
+            stop = "perfect fit" if estimator_error <= 0 else None
+            return estimator_error, estimator_weight, next_state, stop
 
-        instr = FitInstrumentation(self.uid, num_learners)
-        models: List = []
-        estimator_weights: List[float] = []
-        try:
-            i = 0
-            done = False
-            while i < num_learners and not done and sum_weights > 0:
-                state = state.withColumn("__wnorm", F.col("__bw") / F.lit(sum_weights))
-                model = fit_base_learner(
-                    self.getBaseLearner(),
-                    state,
-                    "label",
-                    "features",
-                    "__pred",
-                    weight_col="__wnorm",
-                    raw_prediction_col="__raw",
-                    probability_col="__prob",
-                )
-
-                if algorithm == "real":
-                    if not model.hasParam("probabilityCol"):
-                        raise ValueError(
-                            "algorithm='real' requires a probabilistic base learner"
-                        )
-                    scored = model.transform(state).withColumn(
-                        "__prob_arr", vector_to_array(F.col("__prob"))
-                    )
-                    scored = cache.update(scored)
-                    estimator_error = (
-                        scored.agg(
-                            F.sum(
-                                F.col("__wnorm")
-                                * F.when(
-                                    F.col("__pred") != F.col("label"), 1.0
-                                ).otherwise(0.0)
-                            )
-                        ).first()[0]
-                        or 0.0
-                    )
-                    models.append(model)
-                    estimator_weights.append(1.0)
-                    if estimator_error <= 0:
-                        done = True
-                    loss = _samme_r_loss_expr(
-                        F.col("__prob_arr"), F.col("label"), k
-                    )
-                    state = scored.withColumn(
-                        "__bw",
-                        F.col("__wnorm") * F.exp(F.lit(-(k - 1.0) / k) * loss),
-                    ).select("label", "weight", "features", "__bw")
-                else:
-                    scored = model.transform(state).withColumn(
-                        "__err",
-                        F.when(F.col("__pred") != F.col("label"), 1.0).otherwise(0.0),
-                    )
-                    scored = cache.update(scored)
-                    estimator_error = (
-                        scored.agg(F.sum(F.col("__wnorm") * F.col("__err"))).first()[0]
-                        or 0.0
-                    )
-                    if estimator_error <= 0:
-                        done = True
-                    beta = (
-                        estimator_error / ((1 - estimator_error) * (k - 1))
-                        if estimator_error < 1.0
-                        else 1e18
-                    )
-                    if estimator_error >= 1.0 - 1.0 / k:
-                        # Worse than chance: discard this round and stop
-                        # (reference :252-255 net behavior).
-                        break
-                    estimator_weight = 1.0 if beta == 0.0 else math.log(1.0 / beta)
-                    models.append(model)
-                    estimator_weights.append(estimator_weight)
-                    inv_beta = 1.0 / beta if beta > 0 else 1.0
-                    state = scored.withColumn(
-                        "__bw",
-                        F.col("__wnorm") * F.pow(F.lit(inv_beta), F.col("__err")),
-                    ).select("label", "weight", "features", "__bw")
-
-                state = cache.update(state)
-                sum_weights = state.agg(F.sum("__bw")).first()[0] or 0.0
-                instr.iteration(
-                    i,
-                    estimator_error=estimator_error,
-                    estimator_weight=estimator_weights[-1] if estimator_weights else None,
-                    sum_weights=sum_weights,
-                )
-                i += 1
-        finally:
-            cache.close()
-        instr.done(len(models))
-
+        models, weights, num_features = self._reweight(
+            df,
+            samme_r_round if algorithm == "real" else samme_round,
+            raw_prediction_col="__raw",
+            probability_col="__prob",
+        )
         return BoostingClassificationModel(
             num_classes=num_classes,
-            weights=estimator_weights,
+            weights=weights,
             models=models,
             num_features=num_features,
         )
 
 
-class BoostingClassificationModel(EnsembleClassificationModel, _BoostingClassifierParams):
+class BoostingClassificationModel(
+    HasMembers, EnsembleClassificationModel, _BoostingClassifierParams
+):
     _data_fields = ("weights", "numClasses", "numFeatures")
 
     def __init__(
@@ -215,10 +154,6 @@ class BoostingClassificationModel(EnsembleClassificationModel, _BoostingClassifi
         self.weights = [float(w) for w in (weights or [])]
         self.models = list(models or [])
         self.numFeatures = int(num_features)
-
-    @property
-    def numModels(self) -> int:
-        return len(self.models)
 
     def _raw_array_setup(self, df: DataFrame):
         algorithm = self.getAlgorithm()

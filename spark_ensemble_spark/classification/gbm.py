@@ -15,7 +15,11 @@ Semantic parity with
   ``agg`` computing the loss sum and all dim gradient sums;
 * binary raw output is ``(−r, r)``; probability via the loss link.
 
-The running raw-score vector lives in a ``__praw`` array column.
+The running raw-score vector lives in a ``__praw`` array column. The
+validation split and early stopping are the GBM family's shared
+``GBMParams._split_instances`` and
+:class:`~spark_ensemble_spark.boosting.gbm_params.EarlyStopping`, as in
+GBMRegressor.
 """
 
 from __future__ import annotations
@@ -28,7 +32,7 @@ from pyspark.ml.param.shared import HasParallelism
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from spark_ensemble_spark.boosting.gbm_params import GBMParams
+from spark_ensemble_spark.boosting.gbm_params import EarlyStopping, GBMParams
 from spark_ensemble_spark.boosting.losses import (
     LogLoss,
     classification_loss,
@@ -37,13 +41,10 @@ from spark_ensemble_spark.core.base import (
     ClassifierParams,
     EnsembleClassificationModel,
     EnsembleEstimator,
+    HasMembers,
     score_base_models,
 )
-from spark_ensemble_spark.core.instances import (
-    extract_instances,
-    get_num_classes,
-    get_num_features,
-)
+from spark_ensemble_spark.core.instances import get_num_classes, get_num_features
 from spark_ensemble_spark.core.instrumentation import FitInstrumentation
 from spark_ensemble_spark.core.params import one_of
 from spark_ensemble_spark.core.subbag import draw_subspace, sample_bag, slice_features
@@ -122,40 +123,19 @@ class GBMClassifier(EnsembleEstimator, _GBMClassifierParams):
         gl = classification_loss(loss_name, num_classes)
         dim = gl.dim
 
-        val_col = self._validation_col_or_none()
-        if val_col is not None:
-            train_raw = df.filter(~F.col(val_col))
-            val_raw = df.filter(F.col(val_col))
-        else:
-            train_raw, val_raw = df, None
-
-        train = extract_instances(
-            train_raw, self.getLabelCol(), self.getFeaturesCol(), self._weight_col_or_none()
-        )
+        train, val_rows = self._split_instances(df)
         num_features = get_num_features(train, "features")
         init_raw = self._init_raw(train, num_classes, dim)
 
         cache = DFIterationCache(self.getOrDefault(self.checkpointInterval))
-        val_cache = DFIterationCache(self.getOrDefault(self.checkpointInterval))
-
         praw0 = F.array(*[F.lit(v) for v in init_raw])
-        state = train.withColumn("__praw", praw0)
-        state = cache.update(state)
-
-        val_state = None
-        best_val_error = 0.0
-        if val_raw is not None:
-            val = extract_instances(
-                val_raw, self.getLabelCol(), self.getFeaturesCol(), self._weight_col_or_none()
-            )
-            val_state = val.withColumn("__praw", praw0)
-            val_state = val_cache.update(val_state)
-            best_val_error = (
-                val_state.agg(
-                    F.avg(self._loss_expr(gl, F.col("label"), F.col("__praw")))
-                ).first()[0]
-                or 0.0
-            )
+        state = cache.update(train.withColumn("__praw", praw0))
+        stop = EarlyStopping(
+            self,
+            val_rows,
+            lambda val: val.withColumn("__praw", praw0),
+            lambda: self._loss_expr(gl, F.col("label"), F.col("__praw")),
+        )
 
         models: List[List] = []
         subspaces: List[List[int]] = []
@@ -166,8 +146,7 @@ class GBMClassifier(EnsembleEstimator, _GBMClassifierParams):
             import time as _time
 
             i = 0
-            v = 0
-            while i < num_learners and v < self.getNumRounds():
+            while i < num_learners and stop.patient():
                 _t0 = _time.time()
                 subspace = draw_subspace(self.getSubspaceRatio(), num_features, seed + i)
                 bag = sample_bag(
@@ -255,43 +234,20 @@ class GBMClassifier(EnsembleEstimator, _GBMClassifierParams):
                 state = self._advance(state, imodels, iweights, subspace, num_features)
                 state = cache.update(state)
 
-                if val_state is not None:
-                    val_state = self._advance(
-                        val_state, imodels, iweights, subspace, num_features
-                    )
-                    val_state = val_cache.update(val_state)
-                    val_error = (
-                        val_state.agg(
-                            F.avg(self._loss_expr(gl, F.col("label"), F.col("__praw")))
-                        ).first()[0]
-                        or 0.0
-                    )
-                    if best_val_error - val_error < self.getValidationTol() * max(
-                        val_error, 0.01
-                    ):
-                        v += 1
-                    elif val_error < best_val_error:
-                        best_val_error = val_error
-                        v = 0
-                    instr.iteration(
-                        i,
-                        val_error=val_error,
-                        bag_s=_t_bag,
-                        trees_s=_t_trees,
-                        opt_s=_t_opt,
-                    )
-                else:
-                    instr.iteration(
-                        i, bag_s=_t_bag, trees_s=_t_trees, opt_s=_t_opt
-                    )
-
+                val_error = stop.update(
+                    lambda vs: self._advance(vs, imodels, iweights, subspace, num_features),
+                    lambda: self._loss_expr(gl, F.col("label"), F.col("__praw")),
+                )
+                instr.iteration(
+                    i, val_error=val_error, bag_s=_t_bag, trees_s=_t_trees, opt_s=_t_opt
+                )
                 i += 1
         finally:
             cache.close()
-            val_cache.close()
-        instr.done(i, f"kept {i - v if val_state is not None else i}")
+            stop.close()
 
-        keep = i - v if val_state is not None else i
+        keep = stop.keep(i)
+        instr.done(i, f"kept {keep}")
         return GBMClassificationModel(
             num_classes=num_classes,
             dim=dim,
@@ -371,50 +327,10 @@ class GBMClassifier(EnsembleEstimator, _GBMClassifierParams):
             y = gl.encode_label(label)
             return gl.loss(y, newp[0]), None
 
-        def fun_and_grad(x):
-            loss_e, probs = loss_terms(x)
+        def grad_sums(x, probs):
+            """Gradient sum expressions at step vector x."""
             if isinstance(gl, LogLoss):
                 # ∂loss/∂p_j = softmax_j − 1[label=j]
-                grad_sums = [
-                    F.sum(
-                        w
-                        * F.element_at("__dir", j + 1)
-                        * (probs[j] - (label == j).cast("double"))
-                    )
-                    for j in range(dim)
-                ]
-            else:
-                y = gl.encode_label(label)
-                grad_sums = [
-                    F.sum(
-                        w * F.element_at("__dir", 1) * gl.gradient(y, newp_scalars(x)[0])
-                    )
-                ]
-            row = opt_df.agg(
-                F.sum(w * loss_e).alias("l"), F.sum(w).alias("sw"), *grad_sums
-            ).first()
-            sw = row["sw"] or 1.0
-            f = (row["l"] or 0.0) / sw
-            g = [(row[2 + j] or 0.0) / sw for j in range(dim)]
-            return f, g
-
-        def losses_batch(points):
-            row = opt_df.agg(
-                F.sum(w).alias("sw"),
-                *[
-                    F.sum(w * loss_terms(x)[0]).alias(f"l{i}")
-                    for i, x in enumerate(points)
-                ],
-            ).first()
-            sw = row["sw"] or 1.0
-            return [(row[1 + i] or 0.0) / sw for i in range(len(points))]
-
-        def _grad_sums(x):
-            """Gradient sum expressions at step vector x — the same
-            expressions fun_and_grad aggregates, factored out so the fused
-            ladder pass can evaluate them in the SAME agg."""
-            loss_e, probs = loss_terms(x)
-            if isinstance(gl, LogLoss):
                 return [
                     F.sum(
                         w
@@ -430,42 +346,47 @@ class GBMClassifier(EnsembleEstimator, _GBMClassifierParams):
                 )
             ]
 
-        def losses_grad0_batch(points):
-            """ONE agg returns every rung's loss AND the gradient at rung 0
-            (the reference GBMLossAggregator's one-pass loss+grad trick,
+        def sums(points, with_grad: bool):
+            """ONE agg returning the mean loss at every point and, with
+            ``with_grad``, the mean gradient at ``points[0]`` (the reference
+            GBMLossAggregator's one-pass loss+grad trick,
             GBMLoss.scala:34-76): BB step sizing accepts rung 0 almost
             always, so the common-case line-search iteration pays a single
-            full-frame pass instead of ladder-agg + gradient-agg."""
-            n = len(points)
-            row = opt_df.agg(
-                F.sum(w).alias("sw"),
-                *[
-                    F.sum(w * loss_terms(x)[0]).alias(f"l{i}")
-                    for i, x in enumerate(points)
-                ],
-                *[
+            full-frame pass instead of ladder-agg + gradient-agg. Every
+            optimizer evaluation is built here, so the loss and gradient
+            expressions are the same in each of them."""
+            terms = [loss_terms(x) for x in points]
+            cols = [F.sum(w).alias("sw")]
+            cols += [F.sum(w * t[0]).alias(f"l{i}") for i, t in enumerate(terms)]
+            if with_grad:
+                cols += [
                     e.alias(f"g{j}")
-                    for j, e in enumerate(_grad_sums(points[0]))
-                ],
-            ).first()
+                    for j, e in enumerate(grad_sums(points[0], terms[0][1]))
+                ]
+            row = opt_df.agg(*cols).first()
             sw = row["sw"] or 1.0
+            n = len(points)
             losses = [(row[1 + i] or 0.0) / sw for i in range(n)]
-            grad0 = [(row[1 + n + j] or 0.0) / sw for j in range(dim)]
-            return losses, grad0
+            grad = [(row[1 + n + j] or 0.0) / sw for j in range(dim)] if with_grad else None
+            return losses, grad
+
+        def fun_and_grad(x):
+            (f,), g = sums([x], True)
+            return f, g
 
         from spark_ensemble_spark.core.optim import minimize_nonneg_batched
 
         return minimize_nonneg_batched(
             fun_and_grad,
-            losses_batch,
+            lambda points: sums(points, False)[0],
             [1.0] * dim,
             min(max_iter, 15),
             tol,
-            losses_grad0_batch=losses_grad0_batch,
+            losses_grad0_batch=lambda points: sums(points, True),
         )
 
 
-class GBMClassificationModel(EnsembleClassificationModel, _GBMClassifierParams):
+class GBMClassificationModel(HasMembers, EnsembleClassificationModel, _GBMClassifierParams):
     _data_fields = ("weights", "subspaces", "numClasses", "dim", "initRaw", "numFeatures")
 
     def __init__(
@@ -486,10 +407,6 @@ class GBMClassificationModel(EnsembleClassificationModel, _GBMClassifierParams):
         self.subspaces = [list(s) for s in (subspaces or [])]
         self.models = [list(ms) for ms in (models or [])]
         self.numFeatures = int(num_features)
-
-    @property
-    def numModels(self) -> int:
-        return len(self.models)
 
     def _raw_array_setup(self, df: DataFrame):
         flat_models = [m for ms in self.models for m in ms]

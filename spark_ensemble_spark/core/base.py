@@ -10,11 +10,19 @@ mixin. The base gives each class
 * one fit prologue and epilogue: ``_fit`` validates the input columns, runs
   the class's own ``_fit_model`` and hands the model the estimator's uid
   (``+ "_model"``) and Param values;
+* ``_extract_instances``, the fit's canonical instances of its columns;
 * save/load through :class:`~spark_ensemble_spark.core.persistence.EstimatorReadWrite`.
 
 Models derive from :class:`EnsembleModel`, whose persistence
 (:class:`~spark_ensemble_spark.core.persistence.ModelReadWrite`) reads what
-each model declares; ``copy`` is PySpark's ``Params.copy``.
+each model declares; ``copy`` is PySpark's ``Params.copy``. A model holding
+members in ``models`` adds :class:`HasMembers` for ``numModels``.
+
+Each family's fit body is shared by its twins too: bagging's is
+:func:`~spark_ensemble_spark.core.subbag.fit_bagged_models`, stacking's and
+AdaBoost's are in :mod:`~spark_ensemble_spark.core.families`, and GBM's
+validation split and early stopping are in
+:mod:`~spark_ensemble_spark.boosting.gbm_params`.
 
 Scoring strategy (SURVEY.md §3.2): the reference evaluates every base model
 per row inside one executor closure; we instead chain N JVM ``transform``s,
@@ -41,6 +49,7 @@ from pyspark.ml.param.shared import (
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spark_ensemble_spark.core.instances import extract_instances
 from spark_ensemble_spark.core.persistence import EstimatorReadWrite, ModelReadWrite
 from spark_ensemble_spark.core.subbag import is_identity, slice_features
 from spark_ensemble_spark.core.utils import argmax_array
@@ -109,6 +118,13 @@ class EnsembleEstimator(Estimator, EstimatorReadWrite):
     def _fit_model(self, df: DataFrame) -> Model:
         """The class's own fit body, on input already validated."""
         raise NotImplementedError
+
+    def _extract_instances(self, df: DataFrame) -> DataFrame:
+        """``df`` as the canonical ``(label, weight, features)`` instances of
+        this estimator's columns."""
+        return extract_instances(
+            df, self.getLabelCol(), self.getFeaturesCol(), self._weight_col_or_none()
+        )
 
 
 def score_base_models(
@@ -180,6 +196,14 @@ class EnsembleModel(Model, ModelReadWrite):
 
     def setFeaturesCol(self, v: str):
         return self.setParams(featuresCol=v)
+
+
+class HasMembers:
+    """A fitted model that holds its members in ``models``."""
+
+    @property
+    def numModels(self) -> int:
+        return len(self.models)
 
 
 class EnsembleRegressionModel(EnsembleModel, PredictorParams):

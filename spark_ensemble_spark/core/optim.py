@@ -1,109 +1,21 @@
 """Driver-side optimizers for GBM step sizes.
 
 The reference uses commons-math3 Brent (``GBMRegressor.scala:311,412-421``) and
-breeze L-BFGS-B (``GBMClassifier.scala:290-292``). scipy is not guaranteed in
-this environment, so we ship self-contained implementations and use scipy when
-importable:
+breeze L-BFGS-B (``GBMClassifier.scala:290-292``). Here every objective
+evaluation is a cluster-wide Spark ``agg``, so both optimizers take objectives
+that evaluate a whole BATCH of candidates in one call:
 
-* :func:`minimize_scalar_bounded` — golden-section search on [lo, hi];
-* :func:`minimize_nonneg` — projected gradient descent with Armijo
-  backtracking on x ≥ 0 (each function evaluation is one Spark ``agg`` for the
-  caller, so iteration counts are kept small).
+* :func:`minimize_nonneg_batched` — projected gradient on x ≥ 0 with
+  Barzilai-Borwein step sizes and a batched Armijo backtracking ladder
+  (GBMClassifier);
+* :func:`minimize_scalar_batched` — grid refinement of a scalar step size on
+  [lo, hi] (GBMRegressor).
 """
 
 from __future__ import annotations
 
 import math
 from typing import Callable, List, Sequence, Tuple
-
-try:  # pragma: no cover - scipy absent in the target env
-    from scipy.optimize import minimize as _scipy_minimize
-    from scipy.optimize import minimize_scalar as _scipy_minimize_scalar
-
-    _HAVE_SCIPY = True
-except ImportError:
-    _HAVE_SCIPY = False
-
-_PHI = (math.sqrt(5) - 1) / 2
-
-
-def minimize_scalar_bounded(
-    fun: Callable[[float], float],
-    lo: float = 0.0,
-    hi: float = 100.0,
-    max_iter: int = 100,
-    tol: float = 1e-6,
-) -> float:
-    if _HAVE_SCIPY:  # pragma: no cover
-        res = _scipy_minimize_scalar(
-            fun,
-            bounds=(lo, hi),
-            method="bounded",
-            options={"maxiter": max_iter, "xatol": max(tol, 1e-8)},
-        )
-        return float(res.x)
-    a, b = lo, hi
-    c, d = b - _PHI * (b - a), a + _PHI * (b - a)
-    fc, fd = fun(c), fun(d)
-    evals = 2
-    while evals < max_iter and abs(b - a) > max(tol, 1e-8):
-        if fc < fd:
-            b, d, fd = d, c, fc
-            c = b - _PHI * (b - a)
-            fc = fun(c)
-        else:
-            a, c, fc = c, d, fd
-            d = a + _PHI * (b - a)
-            fd = fun(d)
-        evals += 1
-    return (a + b) / 2
-
-
-def minimize_nonneg(
-    fun_and_grad: Callable[[Sequence[float]], Tuple[float, List[float]]],
-    x0: Sequence[float],
-    max_iter: int = 25,
-    tol: float = 1e-6,
-) -> List[float]:
-    """min f(x) s.t. x >= 0 via projected gradient + Armijo backtracking."""
-    if _HAVE_SCIPY:  # pragma: no cover
-        import numpy as np
-
-        res = _scipy_minimize(
-            lambda x: fun_and_grad(x),
-            x0=np.asarray(x0, dtype=float),
-            jac=True,
-            method="L-BFGS-B",
-            bounds=[(0.0, None)] * len(x0),
-            options={"maxiter": max_iter, "gtol": tol},
-        )
-        return [float(v) for v in res.x]
-
-    x = [max(float(v), 0.0) for v in x0]
-    f, g = fun_and_grad(x)
-    step = 1.0
-    for _ in range(max_iter):
-        gnorm = math.sqrt(sum(gi * gi for gi in g))
-        if gnorm < tol:
-            break
-        # projected step with backtracking on the Armijo condition
-        improved = False
-        s = step
-        for _ in range(12):
-            cand = [max(xi - s * gi, 0.0) for xi, gi in zip(x, g)]
-            if all(abs(c - xi) < 1e-15 for c, xi in zip(cand, x)):
-                break
-            fc, gc = fun_and_grad(cand)
-            desc = sum(gi * (ci - xi) for gi, ci, xi in zip(g, cand, x))
-            if fc <= f + 1e-4 * desc:
-                x, f, g = cand, fc, gc
-                step = s * 1.5  # allow growth after a good step
-                improved = True
-                break
-            s *= 0.3
-        if not improved:
-            break
-    return x
 
 
 def minimize_nonneg_batched(
@@ -122,8 +34,8 @@ def minimize_nonneg_batched(
     is evaluated in batched ``losses_batch`` calls.
 
     Motivation (r6, measured): for the GBM classifier every function
-    evaluation is a cluster-wide ``agg``; the sequential
-    :func:`minimize_nonneg` spent up to 12 aggs inside a single backtracking
+    evaluation is a cluster-wide ``agg``; a sequential projected-gradient
+    search spent up to 12 aggs inside a single backtracking
     loop (one fit iteration burned 32 evals / 12.7s at sf0.1). r10
     (profiled: the batched agg's per-row cost is LINEAR in ladder width and
     the line search was 70-75% of fit wall time): the ladder is evaluated

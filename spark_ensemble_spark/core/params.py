@@ -10,11 +10,12 @@ Each family (bagging, boosting, stacking; GBM lives in
 ``boosting/gbm_params.py``) has one mixin that its regression and
 classification twins share, so the twins add only their column Params and
 their own enumerated Param. Every enumerated string Param is read through
-:func:`one_of`.
+:func:`one_of`, and every size Param through :func:`in_range`.
 """
 
 from __future__ import annotations
 
+import math
 from typing import Sequence, Tuple
 
 from pyspark.ml.param import Param, Params, TypeConverters
@@ -35,6 +36,22 @@ def one_of(params: Params, param: Param, allowed: Sequence[str]) -> str:
     v = params.getOrDefault(param).lower()
     if v not in allowed:
         raise ValueError(f"{param.name} must be one of {tuple(allowed)}, got {v}")
+    return v
+
+
+def in_range(
+    params: Params, param: Param, low: float, high: float = math.inf, low_open: bool = False
+):
+    """The value of a numeric Param that must lie in ``[low, high]``, or in
+    ``(low, high]`` with ``low_open``.
+
+    Raises ``ValueError`` otherwise (NaN included), so an out-of-range size
+    fails in its getter instead of later inside a fit or a transform.
+    """
+    v = params.getOrDefault(param)
+    if not ((low < v if low_open else low <= v) and v <= high):
+        bounds = f"{'(' if low_open else '['}{low}, {high}]"
+        raise ValueError(f"{param.name} must be in {bounds}, got {v}")
     return v
 
 
@@ -101,7 +118,7 @@ class HasNumBaseLearners(Params):
         self._setDefault(numBaseLearners=10)
 
     def getNumBaseLearners(self) -> int:
-        return self.getOrDefault(self.numBaseLearners)
+        return in_range(self, self.numBaseLearners, 1)
 
 
 class HasSubBag(Params):
@@ -140,10 +157,10 @@ class HasSubBag(Params):
         return self.getOrDefault(self.replacement)
 
     def getSubsampleRatio(self) -> float:
-        return self.getOrDefault(self.subsampleRatio)
+        return in_range(self, self.subsampleRatio, 0.0, 1.0, low_open=True)
 
     def getSubspaceRatio(self) -> float:
-        return self.getOrDefault(self.subspaceRatio)
+        return in_range(self, self.subspaceRatio, 0.0, 1.0, low_open=True)
 
 
 class HasVotingStrategy(Params):
@@ -198,3 +215,8 @@ class StackingParams(HasBaseLearners, HasStacker, HasParallelism):
     def __init__(self) -> None:
         super().__init__()
         self._setDefault(parallelism=1)
+
+    def _stack_method(self) -> str:
+        """Which base-model output the stacker reads: predicted values here,
+        the ``"class"`` case of the classifier's ``stackMethod``."""
+        return "class"

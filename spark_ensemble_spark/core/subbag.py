@@ -1,4 +1,5 @@
-"""SubBag primitives: seeded feature-subspace draws and vector slicing.
+"""SubBag primitives (seeded feature-subspace draws, vector slicing, row
+bags) and the bagging twins' shared fit body, :func:`fit_bagged_models`.
 
 Reference semantics: ``/root/reference/core/src/main/scala/org/apache/spark/ml/ensemble/HasSubBag.scala:73-84``
 (subspace = filter [0, d) by rng.nextDouble < ratio; slice = dense map /
@@ -19,10 +20,14 @@ Deviations from the reference (documented, deliberate):
 from __future__ import annotations
 
 import random
-from typing import List, Optional, Sequence, Tuple
+from typing import Any, Dict, List, Sequence, Tuple
 
 from pyspark.ml.feature import VectorSlicer
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
+
+from spark_ensemble_spark.core.instances import FEATURES, LABEL, WEIGHT, get_num_features
+from spark_ensemble_spark.core.utils import fit_base_learner, run_parallel
 
 
 def draw_subspace(ratio: float, num_features: int, seed: int) -> List[int]:
@@ -70,41 +75,41 @@ def sample_bag(
     return df.sample(withReplacement=replacement, fraction=float(ratio), seed=seed)
 
 
-def fit_bagged_models(
-    instances_df: DataFrame,
-    num_features: int,
-    base_learner,
-    num_learners: int,
-    replacement: bool,
-    subsample_ratio: float,
-    subspace_ratio: float,
-    seed: int,
-    parallelism: int,
-):
-    """Draw per-learner subspaces and fit N base learners on independent
-    SubBags via a bounded thread pool (reference pattern:
-    ``BaggingRegressor.scala:141-166``; seeds vary per learner — see module
-    docstring for the documented deviation).
+def fit_bagged_models(est, df: DataFrame) -> Dict[str, Any]:
+    """The one fit body of the bagging twins, reading ``est``'s
+    :class:`~spark_ensemble_spark.core.params.BaggingParams`.
 
-    Returns ``(subspaces, models)``.
+    The instances are cached and counted once, then per-learner subspaces are
+    drawn and N base learners fitted on independent SubBags via a bounded
+    thread pool (reference pattern: ``BaggingRegressor.scala:141-166``; seeds
+    vary per learner — see module docstring for the documented deviation).
+
+    Returns the model fields ``subspaces``, ``models`` and ``num_features``.
     """
-    from spark_ensemble_spark.core.instances import FEATURES, LABEL, WEIGHT
-    from spark_ensemble_spark.core.utils import fit_base_learner, run_parallel
+    base_learner = est.getBaseLearner()
+    num_learners = est.getNumBaseLearners()
+    replacement = est.getReplacement()
+    subsample_ratio = est.getSubsampleRatio()
+    subspace_ratio = est.getSubspaceRatio()
+    seed = est.getOrDefault(est.seed)
+    instances = est._extract_instances(df)
+    instances.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        instances.count()
+        num_features = get_num_features(instances, FEATURES)
+        subspaces = [
+            draw_subspace(subspace_ratio, num_features, seed + i) for i in range(num_learners)
+        ]
 
-    subspaces = [
-        draw_subspace(subspace_ratio, num_features, seed + i) for i in range(num_learners)
-    ]
+        def fit_one(i: int):
+            bag = sample_bag(instances, replacement, subsample_ratio, seed + i)
+            bag, fcol = slice_features(bag, FEATURES, subspaces[i], num_features, "__sliced")
+            return fit_base_learner(base_learner, bag, LABEL, fcol, "__pred", weight_col=WEIGHT)
 
-    def fit_one(i: int):
-        bag = sample_bag(instances_df, replacement, subsample_ratio, seed + i)
-        bag, fcol = slice_features(
-            bag, FEATURES, subspaces[i], num_features, "__sliced"
+        models = run_parallel(
+            [lambda i=i: fit_one(i) for i in range(num_learners)],
+            est.getOrDefault(est.parallelism),
         )
-        return fit_base_learner(
-            base_learner, bag, LABEL, fcol, "__pred", weight_col=WEIGHT
-        )
-
-    models = run_parallel(
-        [lambda i=i: fit_one(i) for i in range(num_learners)], parallelism
-    )
-    return subspaces, models
+    finally:
+        instances.unpersist()
+    return dict(subspaces=subspaces, models=models, num_features=num_features)

@@ -9,7 +9,8 @@ predictions on the per-model sliced features.
 PySpark-first execution: the bags are ``df.sample`` (partition-local, no
 shuffle), slicing is ``VectorSlicer`` (JVM), scoring is a chain of N JVM
 ``transform``s combined with one column expression — at 100 TB the only data
-movement is whatever the base learner itself shuffles.
+movement is whatever the base learner itself shuffles. The fit is the bagging
+family's shared :func:`~spark_ensemble_spark.core.subbag.fit_bagged_models`.
 """
 
 from __future__ import annotations
@@ -17,15 +18,14 @@ from __future__ import annotations
 from typing import List, Optional, Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
 
 from spark_ensemble_spark.core.base import (
     EnsembleEstimator,
     EnsembleRegressionModel,
+    HasMembers,
     PredictorParams,
     score_base_models,
 )
-from spark_ensemble_spark.core.instances import extract_instances, get_num_features
 from spark_ensemble_spark.core.params import BaggingParams
 from spark_ensemble_spark.core.subbag import fit_bagged_models
 from spark_ensemble_spark.core.utils import array_mean
@@ -37,32 +37,10 @@ class _BaggingRegressorParams(PredictorParams, BaggingParams):
 
 class BaggingRegressor(EnsembleEstimator, _BaggingRegressorParams):
     def _fit_model(self, df: DataFrame) -> "BaggingRegressionModel":
-        instances = extract_instances(
-            df, self.getLabelCol(), self.getFeaturesCol(), self._weight_col_or_none()
-        )
-        instances.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            instances.count()
-            num_features = get_num_features(instances, "features")
-            subspaces, models = fit_bagged_models(
-                instances,
-                num_features,
-                self.getBaseLearner(),
-                self.getNumBaseLearners(),
-                self.getReplacement(),
-                self.getSubsampleRatio(),
-                self.getSubspaceRatio(),
-                self.getOrDefault(self.seed),
-                self.getOrDefault(self.parallelism),
-            )
-        finally:
-            instances.unpersist()
-        return BaggingRegressionModel(
-            subspaces=subspaces, models=models, num_features=num_features
-        )
+        return BaggingRegressionModel(**fit_bagged_models(self, df))
 
 
-class BaggingRegressionModel(EnsembleRegressionModel, _BaggingRegressorParams):
+class BaggingRegressionModel(HasMembers, EnsembleRegressionModel, _BaggingRegressorParams):
     _data_fields = ("subspaces", "numFeatures")
 
     def __init__(
@@ -75,10 +53,6 @@ class BaggingRegressionModel(EnsembleRegressionModel, _BaggingRegressorParams):
         self.subspaces = [list(s) for s in (subspaces or [])]
         self.models = list(models or [])
         self.numFeatures = int(num_features)
-
-    @property
-    def numModels(self) -> int:
-        return len(self.models)
 
     def _prediction_setup(self, df: DataFrame):
         df, outs, tmp = score_base_models(

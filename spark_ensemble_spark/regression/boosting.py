@@ -7,35 +7,31 @@ linear, squared}; stops early when max error is 0 (perfect fit) or estimator
 error >= 0.5 (the offending model is still kept, as the reference does);
 prediction = weighted median (default) or weighted mean of base predictions.
 
-DataFrame-native state: the evolving boosting weight is a column updated with
-``withColumn`` each round (never an ``RDD.zip`` — SURVEY.md §2.4), persisted
-and lineage-truncated via :class:`DFIterationCache`.
+The reweighting loop (the ``__bw`` weight column, its per-round
+normalisation, caching and instrumentation) is the AdaBoost family's shared
+:class:`~spark_ensemble_spark.core.families.BoostingEstimator`; this twin
+supplies the R2 round: relative absolute error, loss, ``β`` and the next
+weights.
 """
 
 from __future__ import annotations
 
 import math
-from typing import List, Optional, Sequence
+from typing import Optional, Sequence
 
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_ensemble_spark.core.base import (
-    EnsembleEstimator,
     EnsembleRegressionModel,
+    HasMembers,
     PredictorParams,
     score_base_models,
 )
-from spark_ensemble_spark.core.instances import extract_instances, get_num_features
-from spark_ensemble_spark.core.instrumentation import FitInstrumentation
+from spark_ensemble_spark.core.families import BoostingEstimator, RoundResult
 from spark_ensemble_spark.core.params import BoostingParams, HasVotingStrategy, one_of
-from spark_ensemble_spark.core.utils import (
-    DFIterationCache,
-    fit_base_learner,
-    weighted_mean,
-    weighted_median,
-)
+from spark_ensemble_spark.core.utils import weighted_mean, weighted_median
 
 _LOSS_TYPES = ("exponential", "linear", "squared")
 
@@ -74,98 +70,50 @@ class _BoostingRegressorParams(PredictorParams, BoostingParams, HasVotingStrateg
         return one_of(self, self.lossType, _LOSS_TYPES)
 
 
-class BoostingRegressor(EnsembleEstimator, _BoostingRegressorParams):
+class BoostingRegressor(BoostingEstimator, _BoostingRegressorParams):
     def _fit_model(self, df: DataFrame) -> "BoostingRegressionModel":
         loss_type = self.getLossType()
-        num_learners = self.getNumBaseLearners()
 
-        instances = extract_instances(
-            df, self.getLabelCol(), self.getFeaturesCol(), self._weight_col_or_none()
-        ).withColumn("__bw", F.col("weight"))
-        num_features = get_num_features(instances, "features")
+        def r2_round(model, state: DataFrame, cache) -> RoundResult:
+            scored = model.transform(
+                state, {model.getParam("predictionCol"): "__pred"}
+            ).withColumn("__err", F.abs(F.col("label") - F.col("__pred")))
+            scored = cache.update(scored)
 
-        cache = DFIterationCache(self.getOrDefault(self.checkpointInterval))
-        state = cache.update(instances)
-        sum_weights = state.agg(F.sum("__bw")).first()[0] or 0.0
+            max_error = scored.agg(F.max("__err")).first()[0]
+            if max_error == 0:
+                # Perfect fit: loss(0) = 0 → estimatorError 0 → beta 0 →
+                # weight 1.0, then stop (reference :236-239,253-254).
+                return 0.0, 1.0, None, "perfect fit"
 
-        instr = FitInstrumentation(self.uid, num_learners)
-        models: List = []
-        estimator_weights: List[float] = []
-        stop_reason = "completed"
-        try:
-            i = 0
-            while i < num_learners and sum_weights > 0:
-                # Normalized per-round weights (reference :218-221).
-                state = state.withColumn("__wnorm", F.col("__bw") / F.lit(sum_weights))
-                model = fit_base_learner(
-                    self.getBaseLearner(),
-                    state,
-                    "label",
-                    "features",
-                    "__pred",
-                    weight_col="__wnorm",
-                )
-                scored = model.transform(
-                    state, {model.getParam("predictionCol"): "__pred"}
-                ).withColumn("__err", F.abs(F.col("label") - F.col("__pred")))
-                scored = cache.update(scored)
+            scored = scored.withColumn(
+                "__loss", _loss_expr(loss_type, F.col("__err") / F.lit(max_error))
+            )
+            estimator_error = (
+                scored.agg(F.sum(F.col("__wnorm") * F.col("__loss"))).first()[0] or 0.0
+            )
+            beta = (
+                estimator_error / (1 - estimator_error)
+                if estimator_error < 1.0
+                else 1e18  # degenerate: all-wrong round; weight → large negative
+            )
+            estimator_weight = 1.0 if beta == 0.0 else math.log(1.0 / beta)
+            if estimator_error >= 0.5:
+                # Keep the model (matching the reference's net behavior at
+                # :251-269) but stop boosting.
+                return estimator_error, estimator_weight, None, "estimator_error >= 0.5"
+            next_state = scored.withColumn(
+                "__bw", F.col("__wnorm") * F.pow(F.lit(beta), 1 - F.col("__loss"))
+            ).select("label", "weight", "features", "__bw")
+            return estimator_error, estimator_weight, next_state, None
 
-                max_error = scored.agg(F.max("__err")).first()[0]
-                if max_error == 0:
-                    # Perfect fit: loss(0) = 0 → estimatorError 0 → beta 0 →
-                    # weight 1.0, then stop (reference :236-239,253-254).
-                    models.append(model)
-                    estimator_weights.append(1.0)
-                    instr.iteration(i, estimator_error=0.0, estimator_weight=1.0)
-                    stop_reason = "perfect fit"
-                    break
-
-                scored = scored.withColumn(
-                    "__loss", _loss_expr(loss_type, F.col("__err") / F.lit(max_error))
-                )
-                estimator_error = (
-                    scored.agg(F.sum(F.col("__wnorm") * F.col("__loss"))).first()[0]
-                    or 0.0
-                )
-
-                beta = (
-                    estimator_error / (1 - estimator_error)
-                    if estimator_error < 1.0
-                    else 1e18  # degenerate: all-wrong round; weight → large negative
-                )
-                estimator_weight = 1.0 if beta == 0.0 else math.log(1.0 / beta)
-                models.append(model)
-                estimator_weights.append(estimator_weight)
-                instr.iteration(
-                    i,
-                    estimator_error=estimator_error,
-                    estimator_weight=estimator_weight,
-                    sum_weights=sum_weights,
-                )
-
-                if estimator_error >= 0.5:
-                    # Keep the model (matching the reference's net behavior at
-                    # :251-269) but stop boosting.
-                    stop_reason = "estimator_error >= 0.5"
-                    break
-
-                state = scored.withColumn(
-                    "__bw",
-                    F.col("__wnorm") * F.pow(F.lit(beta), 1 - F.col("__loss")),
-                ).select("label", "weight", "features", "__bw")
-                state = cache.update(state)
-                sum_weights = state.agg(F.sum("__bw")).first()[0] or 0.0
-                i += 1
-        finally:
-            cache.close()
-        instr.done(len(models), stop_reason)
-
+        models, weights, num_features = self._reweight(df, r2_round)
         return BoostingRegressionModel(
-            weights=estimator_weights, models=models, num_features=num_features
+            weights=weights, models=models, num_features=num_features
         )
 
 
-class BoostingRegressionModel(EnsembleRegressionModel, _BoostingRegressorParams):
+class BoostingRegressionModel(HasMembers, EnsembleRegressionModel, _BoostingRegressorParams):
     _data_fields = ("weights", "numFeatures")
 
     def __init__(
@@ -178,10 +126,6 @@ class BoostingRegressionModel(EnsembleRegressionModel, _BoostingRegressorParams)
         self.weights = [float(w) for w in (weights or [])]
         self.models = list(models or [])
         self.numFeatures = int(num_features)
-
-    @property
-    def numModels(self) -> int:
-        return len(self.models)
 
     def _prediction_setup(self, df: DataFrame):
         df, outs, tmp = score_base_models(

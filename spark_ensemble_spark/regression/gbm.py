@@ -11,7 +11,9 @@ Semantic parity with
   the step size in [0, 100], shrinkage by ``learningRate``, running-prediction
   update;
 * early stopping on a validation split with tolerance ``validationTol`` and
-  patience ``numRounds``; the final model keeps ``i − v`` members.
+  patience ``numRounds``; the final model keeps ``i − v`` members. The split
+  and this bookkeeping are the GBM family's shared ``GBMParams._split_instances``
+  and :class:`~spark_ensemble_spark.boosting.gbm_params.EarlyStopping`.
 
 DataFrame-native: the running prediction is a ``__gpred`` column. Each round
 caches ONE frame (``DFIterationCache``, the reference's
@@ -33,15 +35,16 @@ from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_ensemble_spark.boosting.gbm_params import GBMParams
+from spark_ensemble_spark.boosting.gbm_params import EarlyStopping, GBMParams
 from spark_ensemble_spark.boosting.losses import GBMLoss, regression_loss
 from spark_ensemble_spark.core.base import (
     EnsembleEstimator,
     EnsembleRegressionModel,
+    HasMembers,
     PredictorParams,
     score_base_models,
 )
-from spark_ensemble_spark.core.instances import extract_instances, get_num_features
+from spark_ensemble_spark.core.instances import get_num_features
 from spark_ensemble_spark.core.instrumentation import FitInstrumentation
 from spark_ensemble_spark.core.optim import minimize_scalar_batched
 from spark_ensemble_spark.core.subbag import draw_subspace, sample_bag, slice_features
@@ -101,23 +104,12 @@ class GBMRegressor(EnsembleEstimator, _GBMRegressorParams):
         loss_name = self.getLoss()
         alpha = self.getAlpha()
         tol = self.getOrDefault(self.tol)
-        max_iter = self.getOrDefault(self.maxIter)
         num_learners = self.getNumBaseLearners()
         learning_rate = self.getLearningRate()
         newton = self.getUpdates() == "newton"
         seed = self.getOrDefault(self.seed)
 
-        val_col = self._validation_col_or_none()
-        base = df
-        if val_col is not None:
-            train_raw = base.filter(~F.col(val_col))
-            val_raw = base.filter(F.col(val_col))
-        else:
-            train_raw, val_raw = base, None
-
-        train = extract_instances(
-            train_raw, self.getLabelCol(), self.getFeaturesCol(), self._weight_col_or_none()
-        )
+        train, val_rows = self._split_instances(df)
         num_features = get_num_features(train, "features")
 
         # δ for huber starts as the α-quantile of the label (reference :305-308)
@@ -132,31 +124,16 @@ class GBMRegressor(EnsembleEstimator, _GBMRegressorParams):
 
         init = self._fit_init_model(train, loss_name)
 
-        cache = DFIterationCache(self.getOrDefault(self.checkpointInterval))
-        val_cache = DFIterationCache(self.getOrDefault(self.checkpointInterval))
-
-        state = init.transform(
-            train, {init.getParam("predictionCol"): "__gpred"}
-        ).select("label", "weight", "features", "__gpred")
-        state = cache.update(state)
-
-        val_state = None
-        best_val_error = 0.0
-        if val_raw is not None:
-            val = extract_instances(
-                val_raw, self.getLabelCol(), self.getFeaturesCol(), self._weight_col_or_none()
-            )
-            val_state = init.transform(
-                val, {init.getParam("predictionCol"): "__gpred"}
+        def start(instances: DataFrame) -> DataFrame:
+            return init.transform(
+                instances, {init.getParam("predictionCol"): "__gpred"}
             ).select("label", "weight", "features", "__gpred")
-            val_state = val_cache.update(val_state)
-            gl = current_loss()
-            best_val_error = (
-                val_state.agg(
-                    F.avg(gl.loss(F.col("label"), F.col("__gpred")))
-                ).first()[0]
-                or 0.0
-            )
+
+        cache = DFIterationCache(self.getOrDefault(self.checkpointInterval))
+        state = cache.update(start(train))
+        stop = EarlyStopping(
+            self, val_rows, start, lambda: current_loss().loss(F.col("label"), F.col("__gpred"))
+        )
 
         instr = FitInstrumentation(self.uid, num_learners)
         models: List = []
@@ -165,8 +142,7 @@ class GBMRegressor(EnsembleEstimator, _GBMRegressorParams):
 
         try:
             i = 0
-            v = 0
-            while i < num_learners and v < self.getNumRounds():
+            while i < num_learners and stop.patient():
                 if loss_name == "huber":
                     delta = (
                         state.select(
@@ -294,45 +270,28 @@ class GBMRegressor(EnsembleEstimator, _GBMRegressorParams):
                     (F.col("__gpred") + F.lit(weight) * F.col("__dir")).alias("__gpred"),
                 )
 
-                if val_state is not None:
+                def advance(val_state: DataFrame) -> DataFrame:
                     vfull, _ = slice_features(
                         val_state, "features", subspace, num_features, "__sf"
                     )
-                    vscored = model.transform(vfull)
-                    val_state = vscored.withColumn(
+                    return model.transform(vfull).withColumn(
                         "__gpred", F.col("__gpred") + F.lit(weight) * F.col("__dir")
                     ).select("label", "weight", "features", "__gpred")
-                    val_state = val_cache.update(val_state)
-                    val_error = (
-                        val_state.agg(
-                            F.avg(gl.loss(F.col("label"), F.col("__gpred")))
-                        ).first()[0]
-                        or 0.0
-                    )
-                    # Early-stopping bookkeeping (reference :444-465).
-                    if best_val_error - val_error < self.getValidationTol() * max(
-                        val_error, 0.01
-                    ):
-                        v += 1
-                    elif val_error < best_val_error:
-                        best_val_error = val_error
-                        v = 0
-                    instr.iteration(
-                        i, step=solution, weight=weight, val_error=val_error,
-                        trees_s=trees_s, opt_s=opt_s,
-                    )
-                else:
-                    instr.iteration(
-                        i, step=solution, weight=weight, trees_s=trees_s, opt_s=opt_s
-                    )
 
+                val_error = stop.update(
+                    advance, lambda: gl.loss(F.col("label"), F.col("__gpred"))
+                )
+                instr.iteration(
+                    i, step=solution, weight=weight, val_error=val_error,
+                    trees_s=trees_s, opt_s=opt_s,
+                )
                 i += 1
         finally:
             cache.close()
-            val_cache.close()
+            stop.close()
 
-        instr.done(i, f"kept {i - v if val_state is not None else i}")
-        keep = i - v if val_state is not None else i
+        keep = stop.keep(i)
+        instr.done(i, f"kept {keep}")
         return GBMRegressionModel(
             weights=weights[:keep],
             subspaces=subspaces[:keep],
@@ -342,7 +301,7 @@ class GBMRegressor(EnsembleEstimator, _GBMRegressorParams):
         )
 
 
-class GBMRegressionModel(EnsembleRegressionModel, _GBMRegressorParams):
+class GBMRegressionModel(HasMembers, EnsembleRegressionModel, _GBMRegressorParams):
     _data_fields = ("weights", "subspaces", "numFeatures")
     _sub_instances = (("init", "init"),)
 
@@ -360,10 +319,6 @@ class GBMRegressionModel(EnsembleRegressionModel, _GBMRegressorParams):
         self.models = list(models or [])
         self.init = init_model
         self.numFeatures = int(num_features)
-
-    @property
-    def numModels(self) -> int:
-        return len(self.models)
 
     def _prediction_setup(self, df: DataFrame):
         init_col = "__gbm_init"

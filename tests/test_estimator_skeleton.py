@@ -1,9 +1,12 @@
-"""The shared estimator skeleton (``core/base.py``, ``core/persistence.py``):
-every declared Param has a setter, every twin round-trips through save/load,
-model ``copy`` keeps the original intact, enumerated string Params fail in
-their getters, and the on-disk layout of all twenty classes stays pinned.
+"""The shared estimator skeleton (``core/base.py``, ``core/persistence.py``,
+``core/families.py``): every declared Param has a setter, every twin
+round-trips through save/load, model ``copy`` keeps the original intact,
+enumerated string Params fail in their getters and size Params out of their
+range too, the on-disk layout of all twenty classes stays pinned, and so do
+the fitted values of the shared fit bodies.
 """
 
+import math
 import os
 
 import pytest
@@ -318,6 +321,80 @@ SETTERS_BEFORE = {
 }
 
 
+# Captured before the families' fit bodies were shared, for the ESTIMATORS
+# above fitted on make_frames (plus one GBMClassifier with optimized step
+# sizes): every ``_data_fields`` value, then sum(prediction) of the model over
+# its own training frame.
+FITTED_VALUES = {
+    "BaggingClassifier": (
+        {"numClasses": 3, "numFeatures": 4, "subspaces": [[0, 1, 2, 3], [0, 1, 2, 3]]},
+        87.0,
+    ),
+    "BaggingRegressor": (
+        {"numFeatures": 4, "subspaces": [[0, 1, 2, 3], [0, 1, 2, 3]]},
+        149.00830808080804,
+    ),
+    "BoostingClassifier": (
+        {
+            "numClasses": 3,
+            "numFeatures": 4,
+            "weights": [2.737903164251891, 1.5875791186216008],
+        },
+        87.0,
+    ),
+    "BoostingRegressor": (
+        {"numFeatures": 4, "weights": [0.9741000367636818, 0.8665860084824994]},
+        148.59999999999997,
+    ),
+    "DummyClassifier": (
+        {
+            "numClasses": 3,
+            "probability": [0.3541666666666667, 0.3645833333333333, 0.28125],
+            "rawPrediction": [
+                -1.0379876668516748, -1.0090001299784226, -1.2685113254635072
+            ],
+        },
+        96.0,
+    ),
+    "DummyRegressor": ({"prediction": 1.3000000000000007}, 124.80000000000007),
+    "GBMClassifier": (
+        {
+            "dim": 3,
+            "initRaw": [-1.0379876668516748, -1.0090001299784226, -1.2685113254635072],
+            "numClasses": 3,
+            "numFeatures": 4,
+            "subspaces": [[0, 1, 2, 3], [0, 1, 2, 3]],
+            "weights": [[1.0, 1.0, 1.0], [1.0, 1.0, 1.0]],
+        },
+        87.0,
+    ),
+    "GBMRegressor": (
+        {
+            "numFeatures": 4,
+            "subspaces": [[0, 1, 2, 3], [0, 1, 2, 3]],
+            "weights": [1.0, 1.0],
+        },
+        148.60000000000008,
+    ),
+    "StackingClassifier": ({}, 87.0),
+    "StackingRegressor": ({}, 148.60000000000008),
+    "GBMClassifier(optimizedWeights=True)": (
+        {
+            "dim": 3,
+            "initRaw": [-1.0379876668516748, -1.0090001299784226, -1.2685113254635072],
+            "numClasses": 3,
+            "numFeatures": 4,
+            "subspaces": [[0, 1, 2, 3], [0, 1, 2, 3]],
+            "weights": [
+                [4.021151927281199, 3.1273438410247456, 3.8835434496913934],
+                [10.294180174268702, 6.239752795696593, 6.0305758352891825],
+            ],
+        },
+        87.0,
+    ),
+}
+
+
 ENUMERATED = [
     (BaggingClassifier, "votingStrategy"),
     (BoostingRegressor, "lossType"),
@@ -387,15 +464,19 @@ def test_setter_surface(spark, name):
 
 
 def test_twins_hold_no_plumbing():
-    """Setters, constructors, setParams, fit epilogues, copy and persistence
-    live in ``core/``; only GBMClassificationModel keeps a save/load pair."""
+    """Setters, constructors, setParams, fit epilogues, copy, persistence,
+    ``numModels`` and the stacking fit and scoring live in ``core/``; only
+    GBMClassificationModel keeps a save/load pair."""
     import spark_ensemble_spark as pkg
 
+    assert pkg.StackingRegressor._fit_model is pkg.StackingClassifier._fit_model
+    assert pkg.StackingRegressionModel._transform is pkg.StackingClassificationModel._transform
     for name in pkg.__all__:
         cls = getattr(pkg, name)
         own = set(vars(cls))
         if name.endswith("Model"):
             assert "copy" not in own, name
+            assert "numModels" not in own, name
             kept = {"_save_impl", "_load_impl"} & own
             assert kept == ({"_save_impl", "_load_impl"} if name == "GBMClassificationModel" else set())
         else:
@@ -479,3 +560,91 @@ def test_enumerated_param_fails_in_its_getter(cls, param):
     assert isinstance(getattr(cls(), getter)(), str)
     with pytest.raises(ValueError, match=param):
         getattr(cls(**{param: "bogus"}), getter)()
+
+
+def _assert_pinned(got, want, where):
+    if isinstance(want, float):
+        assert got == pytest.approx(want, rel=1e-12), where
+    elif isinstance(want, list):
+        assert len(got) == len(want), where
+        for k, (g, w) in enumerate(zip(got, want)):
+            _assert_pinned(g, w, f"{where}[{k}]")
+    else:
+        assert got == want, where
+
+
+def _check_fitted_values(model, frame, key):
+    from pyspark.sql import functions as F
+
+    fields, prediction_sum = FITTED_VALUES[key]
+    assert set(fields) == set(type(model)._data_fields), key
+    for f, want in fields.items():
+        _assert_pinned(getattr(model, f), want, f"{key}.{f}")
+    got = model.transform(frame).agg(F.sum("prediction")).first()[0]
+    _assert_pinned(got, prediction_sum, f"{key} sum(prediction)")
+
+
+@pytest.mark.parametrize("name", NAMES)
+def test_fitted_values_are_pinned(fitted, name):
+    frames, models = fitted
+    _check_fitted_values(models[name], frames[_kind(name)], name)
+
+
+def test_optimized_gbm_classifier_values_are_pinned(fitted):
+    """The L-BFGS-B step search builds every aggregate through one builder;
+    its trajectory, and so the fitted step sizes, stay the same."""
+    frames, _ = fitted
+    model = GBMClassifier(
+        baseLearner=DecisionTreeRegressor(maxDepth=2),
+        numBaseLearners=2,
+        optimizedWeights=True,
+    ).fit(frames["clf"])
+    _check_fitted_values(model, frames["clf"], "GBMClassifier(optimizedWeights=True)")
+
+
+# (estimator, size Param, out-of-range values); the docs give the ranges
+# numBaseLearners >= 1 and subsampleRatio, subspaceRatio in (0, 1].
+_RATIOS_OUT = [0.0, -0.5, 1.5, math.nan]
+OUT_OF_RANGE = [
+    (cls, param, bad)
+    for cls in (
+        BaggingRegressor,
+        BaggingClassifier,
+        BoostingRegressor,
+        BoostingClassifier,
+        GBMRegressor,
+        GBMClassifier,
+    )
+    for param, values in (
+        ("numBaseLearners", [0, -3]),
+        ("subsampleRatio", _RATIOS_OUT),
+        ("subspaceRatio", _RATIOS_OUT),
+    )
+    if hasattr(cls, param)
+    for bad in values
+]
+
+
+@pytest.mark.parametrize(
+    "cls,param,bad",
+    OUT_OF_RANGE,
+    ids=[f"{c.__name__}.{p}={v}" for c, p, v in OUT_OF_RANGE],
+)
+def test_size_param_out_of_range_fails_in_its_getter(cls, param, bad):
+    getter = "get" + _cap(param)
+    edge = 1 if param == "numBaseLearners" else 1.0
+    assert getattr(cls(**{param: edge}), getter)() == edge
+    with pytest.raises(ValueError, match=param):
+        getattr(cls(**{param: bad}), getter)()
+
+
+@pytest.mark.parametrize(
+    "name", [n for n in NAMES if not n.startswith(("Stacking", "Dummy"))]
+)
+def test_fit_without_members_fails(fitted, name):
+    """A fit with no members used to succeed, or fail only later, in
+    ``transform``; it now fails in the getter it reads the count through."""
+    frames, _ = fitted
+    est = ESTIMATORS[name][0]().setNumBaseLearners(0)
+    with pytest.raises(ValueError, match="numBaseLearners"):
+        est.fit(frames[_kind(name)])

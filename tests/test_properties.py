@@ -11,10 +11,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from spark_ensemble_spark.core.optim import (
-    minimize_nonneg,
-    minimize_scalar_bounded,
-)
 from spark_ensemble_spark.core.subbag import draw_subspace, is_identity
 
 
@@ -47,38 +43,6 @@ def test_subspace_expected_size():
     assert abs(sum(sizes) / n - ratio * d) < 0.1 * d
 
 
-@given(
-    center=st.floats(min_value=0.0, max_value=50.0),
-    scale=st.floats(min_value=0.1, max_value=10.0),
-)
-@settings(max_examples=50, deadline=None)
-def test_scalar_minimizer_parabola(center, scale):
-    got = minimize_scalar_bounded(
-        lambda x: scale * (x - center) ** 2, 0.0, 100.0, max_iter=60, tol=1e-6
-    )
-    assert got == pytest.approx(center, abs=1e-2)
-
-
-@given(
-    centers=st.lists(
-        st.floats(min_value=-2.0, max_value=5.0), min_size=1, max_size=6
-    )
-)
-@settings(max_examples=50, deadline=None)
-def test_nonneg_minimizer_quadratic(centers):
-    """min Σ (x_i − c_i)² s.t. x ≥ 0 has solution max(c_i, 0)."""
-
-    def fg(x):
-        f = sum((xi - ci) ** 2 for xi, ci in zip(x, centers))
-        g = [2 * (xi - ci) for xi, ci in zip(x, centers)]
-        return f, g
-
-    got = minimize_nonneg(fg, [1.0] * len(centers), max_iter=100, tol=1e-10)
-    expected = [max(c, 0.0) for c in centers]
-    for g, e in zip(got, expected):
-        assert g == pytest.approx(e, abs=0.05)
-
-
 def test_batched_minimizer_matches_sequential():
     from spark_ensemble_spark.core.optim import minimize_scalar_batched
 
@@ -100,8 +64,8 @@ def test_batched_minimizer_matches_sequential():
 )
 @settings(max_examples=50, deadline=None)
 def test_nonneg_batched_minimizer_quadratic(centers):
-    """The ladder-batched BB variant solves the same constrained quadratic
-    as the sequential minimizer (solution max(c_i, 0)) — and with few
+    """The ladder-batched BB minimizer solves min Σ (x_i − c_i)² s.t.
+    x ≥ 0 (solution max(c_i, 0)) — and with few
     evaluations (each losses_batch call is one cluster agg in production,
     so the eval budget IS the cost model)."""
     from spark_ensemble_spark.core.optim import minimize_nonneg_batched
