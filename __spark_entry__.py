@@ -3,8 +3,7 @@
 ``entry(spark)`` runs the flagship pricing-summary query at sf0.001.
 ``queries()`` maps operator names → (spark, sf_dir) → DataFrame.
 ``oracle_sql()`` maps the same names → DuckDB SQL over the pre-registered
-views (region nation customer supplier part orders lineitem events documents
-embeddings).
+views, one per table in ``spark_ensemble_spark.sources.datasets.TABLES``.
 
 Conventions shared by both sides so the order-insensitive value hash matches:
   * every computed column is aliased identically in Spark and SQL;
@@ -19,9 +18,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-_REGRESSION_LABEL_SQL = "l_extendedprice * (1 - l_discount)"
 
 
 def _registry():

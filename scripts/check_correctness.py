@@ -1,218 +1,83 @@
-"""Local stand-in for the driver's t2 correctness gate.
+"""Local stand-in for the driver's correctness gate.
 
-Runs every ``queries()`` entry on Spark and, where an ``oracle_sql()`` entry
-exists, the oracle on DuckDB over the same parquet tables; compares row count,
-column names, and order-insensitive values — on TWO fetch lanes:
-
-* the Python-object lane (``.collect()`` vs ``.fetchall()``) — full
-  precision, the r1-r3 discipline;
-* the pandas/Arrow lane (``.toPandas()`` vs ``.df()``, stringified) — the
-  driver's hash path canonicalizes results through Arrow/pandas, where
-  DECIMAL and HUGEINT render differently per engine (the r4 HUGEINT and
-  r7-r11 DECIMAL red classes — both invisible to the object lane by
-  construction).  ``SPARK_GRAFT_PANDAS_LANE=0`` disables the second lane.
-
-Structural type gates (hard local fails, like the HUGEINT audit):
-DECIMAL-typed output columns on EITHER side — the driver renders DECIMAL
-via float64 on one fetch path and scale-preserving strings on another, so
-any trailing-zero value (0.015625000 vs 0.015625) goes red regardless of
-arithmetic (VERDICT r11 #1: predicted red set == actual red set 50/50).
-Emit exact BIGINT micro-units instead.
+Runs each selected query on Spark and, where it has an oracle, the oracle on
+DuckDB over the same parquet tables, through the one gate in
+``spark_ensemble_spark/oracle.py`` (type audits, names, row counts, and both
+fetch lanes). With no names it checks the driver's 50-row window; named rows
+may come from the whole ``@query`` registry, and an unknown name is an error.
 
     python scripts/check_correctness.py [sf_dir] [name ...]
+
+Prints one OK/ROWS/FAIL line per row, then a summary line; exits 1 when a row
+fails and 2 when a name is unknown.
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import duckdb
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ONLY = set(sys.argv[2:])
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _decimal_cols(schema):
-    """Top-level or nested DECIMAL-typed columns of a Spark schema."""
-    import pyspark.sql.types as T
+def select(names):
+    """``({name: (query fn, oracle SQL or None)}, unknown names)``: the
+    driver's window (through its entry module) when ``names`` is empty, else
+    the named rows from the whole registry."""
+    if not names:
+        import __spark_entry__ as entry
 
-    def has_dec(dt):
-        if isinstance(dt, T.DecimalType):
-            return True
-        if isinstance(dt, T.ArrayType):
-            return has_dec(dt.elementType)
-        if isinstance(dt, T.StructType):
-            return any(has_dec(f.dataType) for f in dt.fields)
-        if isinstance(dt, T.MapType):
-            return has_dec(dt.keyType) or has_dec(dt.valueType)
-        return False
+        oracles = entry.oracle_sql()
+        return {n: (fn, oracles.get(n)) for n, fn in entry.queries().items()}, []
+    from spark_ensemble_spark.queries import ALL_ORACLES, ALL_SPARK_QUERIES
 
-    return [
-        (f.name, f.dataType.simpleString())
-        for f in schema.fields
-        if has_dec(f.dataType)
-    ]
+    known = [n for n in names if n in ALL_SPARK_QUERIES]
+    rows = {n: (ALL_SPARK_QUERIES[n], ALL_ORACLES.get(n)) for n in known}
+    return rows, [n for n in names if n not in ALL_SPARK_QUERIES]
 
 
-def _pandas_lane_diff(sdf, rel, spark_cols, duck_cols):
-    """Second compare lane through the Arrow/pandas fetch path — the route
-    the driver's hash walks.  Stringify every cell (nan-safe), sort rows,
-    compare.  Returns a problem string or None."""
-    try:
-        pd_spark = sdf.toPandas()
-        pd_duck = rel.df()
-    except Exception as e:  # pragma: no cover - lane must not mask the gate
-        return f"pandas lane error: {e}"
+def main(argv) -> int:
+    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
+    rows, unknown = select(argv[1:])
+    if unknown:
+        print(f"unknown query name(s): {' '.join(unknown)}")
+        return 2
 
-    def cells(df, cols):
-        out = []
-        for row in df[cols].itertuples(index=False, name=None):
-            out.append(
-                tuple(
-                    "nan"
-                    if isinstance(v, float) and math.isnan(v)
-                    else ("<null>" if v is None else str(v))
-                    for v in row
-                )
-            )
-        return sorted(out)
-
-    s_cols = sorted(spark_cols, key=str.lower)
-    d_cols = sorted(duck_cols, key=str.lower)
-    s_vals = cells(pd_spark, s_cols)
-    d_vals = cells(pd_duck, d_cols)
-    if s_vals != d_vals:
-        diffs = [(a, b) for a, b in zip(s_vals, d_vals) if a != b][:3]
-        return f"pandas-lane values differ, first diffs: {diffs}"
-    return None
-
-
-def norm(v):
-    # Full-precision compare: the driver hashes exact values, so the local
-    # gate must not be weaker (r1 verdict: 9-sig-fig normalization masked
-    # sub-ulp round() drift in 5 queries). repr() is exact for doubles.
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return repr(v)
-    if v is None:
-        return "<null>"
-    return str(v)
-
-
-def main() -> int:
-    import __spark_entry__ as entrymod
+    from spark_ensemble_spark import oracle
     from spark_ensemble_spark.session import get_spark
 
     spark = get_spark("correctness-check", cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
+    con = oracle.connect(sf_dir)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'"
-        )
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     n_pass = n_fail = n_rowsonly = 0
-    for name, fn in qs.items():
-        if ONLY and name not in ONLY:
-            continue
+    for name, (fn, sql) in rows.items():
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR)
-            spark_rows = sdf.collect()
-            spark_cols = sdf.columns
-            spark_dec_cols = _decimal_cols(sdf.schema)
+            sdf = fn(spark, sf_dir)
+            got = oracle.spark_result(sdf)
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
             n_fail += 1
             continue
-        if name not in oracles:
-            print(f"ROWS  {name}: {len(spark_rows)} rows (no oracle) [{time.time()-t0:.1f}s]")
+        if sql is None:
+            print(f"ROWS  {name}: {len(got.rows)} rows (no oracle) [{time.time()-t0:.1f}s]")
             n_rowsonly += 1
             continue
         try:
-            rel = con.sql(oracles[name])
-            duck_cols = [d[0] for d in rel.description]
-            # Logical-type audit BEFORE fetch: HUGEINT (DuckDB's promotion of
-            # integer sum()) round-trips through the driver's Arrow/pandas
-            # hash path as float64 ("123.0" vs Spark's "123"), a mismatch the
-            # Python-object value compare below provably cannot see (r4: five
-            # red rows, one cause). Any flagged column is a hard local fail.
-            hugeint_cols = [
-                (d[0], str(t))
-                for d, t in zip(rel.description, rel.types)
-                if "HUGEINT" in str(t).upper()
-            ]
-            # DECIMAL audit, same class as HUGEINT: the driver's two fetch
-            # paths canonicalize DECIMAL differently (float64 repr vs
-            # scale-preserving string) — any trailing-zero value goes red
-            # with both engines' arithmetic identical (VERDICT r11 #1).
-            duck_dec_cols = [
-                (d[0], str(t))
-                for d, t in zip(rel.description, rel.types)
-                if "DECIMAL" in str(t).upper()
-            ]
-            duck_rows = rel.fetchall()
+            rel = con.sql(sql)
+            want = oracle.duck_result(rel)
         except Exception as e:
             print(f"FAIL  {name}: duckdb error: {e}")
             n_fail += 1
             continue
-
-        problems = []
-        if hugeint_cols:
-            problems.append(
-                f"oracle emits HUGEINT {hugeint_cols} — CAST(... AS BIGINT)"
-            )
-        if duck_dec_cols:
-            problems.append(
-                f"oracle emits DECIMAL {duck_dec_cols} — emit BIGINT "
-                "micro-units instead (driver fetch-path hazard)"
-            )
-        if spark_dec_cols:
-            problems.append(
-                f"spark emits DECIMAL {spark_dec_cols} — emit BIGINT "
-                "micro-units instead (driver fetch-path hazard)"
-            )
-        if sorted(c.lower() for c in spark_cols) != sorted(c.lower() for c in duck_cols):
-            problems.append(f"columns spark={spark_cols} duck={duck_cols}")
-        if len(spark_rows) != len(duck_rows):
-            problems.append(f"rowcount spark={len(spark_rows)} duck={len(duck_rows)}")
-        if not problems:
-            s_sorted = sorted(spark_cols, key=str.lower)
-            d_sorted = sorted(duck_cols, key=str.lower)
-            s_vals = sorted(
-                tuple(norm(row[c]) for c in s_sorted) for row in spark_rows
-            )
-            d_vals = sorted(
-                tuple(norm(v) for v in (dict(zip(duck_cols, row))[c] for c in d_sorted))
-                for row in duck_rows
-            )
-            if s_vals != d_vals:
-                diffs = [
-                    (a, b) for a, b in zip(s_vals, d_vals) if a != b
-                ][:3]
-                problems.append(f"values differ, first diffs: {diffs}")
-            elif os.environ.get("SPARK_GRAFT_PANDAS_LANE", "1") != "0":
-                lane = _pandas_lane_diff(sdf, con.sql(oracles[name]), spark_cols, duck_cols)
-                if lane:
-                    problems.append(lane)
+        problems = oracle.audit_types(rel, sdf.schema) + oracle.compare(got, want)
         if problems:
             print(f"FAIL  {name}: {'; '.join(problems)}")
             n_fail += 1
         else:
-            print(f"OK    {name}: {len(spark_rows)} rows [{time.time()-t0:.1f}s]")
+            print(f"OK    {name}: {len(got.rows)} rows [{time.time()-t0:.1f}s]")
             n_pass += 1
 
     print(f"\n{n_pass} oracle-pass, {n_rowsonly} rows-only, {n_fail} fail")
@@ -220,4 +85,4 @@ def main() -> int:
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

@@ -507,43 +507,6 @@ def temperature_mixing_rates(
     return out.drop("__w_full")
 
 
-def temperature_mixing_rates_sql(
-    table_expr: str = "documents",
-    stratum_sql: str = "source",
-    size_sql: Optional[str] = None,
-    tau: float = 0.5,
-    token_budget: Optional[int] = None,
-    round_to: int = 6,
-) -> str:
-    """DuckDB mirror of :func:`temperature_mixing_rates` for oracle checks."""
-    size = f"sum({size_sql})" if size_sql else "count(*)"
-    rate = (
-        ", "
-        + _floor_round_sql(
-            f"least(1.0, {float(token_budget)} * pw / sum(pw) OVER () / size)",
-            round_to,
-        )
-        + " AS rate"
-        if token_budget is not None
-        else ""
-    )
-    return f"""
-    WITH per AS (
-      SELECT {stratum_sql} AS stratum, CAST({size} AS DOUBLE) AS size
-      FROM {table_expr} GROUP BY 1
-    ),
-    shared AS (
-      SELECT stratum, size, size / sum(size) OVER () AS share FROM per
-    ),
-    powed AS (SELECT *, {"sqrt(share)" if float(tau) == 0.5 else f"pow(share, {float(tau)})"} AS pw FROM shared)
-    SELECT stratum,
-           CAST(size AS BIGINT) AS size,
-           {_floor_round_sql("share", round_to)} AS share,
-           {_floor_round_sql("pw / sum(pw) OVER ()", round_to)} AS weight{rate}
-    FROM powed
-    """
-
-
 # ---------------------------------------------------------------------------
 # Gopher-style quality filters
 # ---------------------------------------------------------------------------

@@ -530,25 +530,6 @@ def repeated_spans_sql(
     )
 
 
-def repeated_spans_incremental_sql(
-    corpus_table: str,
-    new_table: str,
-    k: int = 8,
-    min_len: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    """DuckDB replay of :func:`repeated_spans_incremental` with the index
-    built inline from ``corpus_table`` (the persisted frame IS that
-    aggregate, so the inline build replays it exactly)."""
-    min_len = k if min_len is None else min_len
-    return _spans_select_sql(
-        _incremental_cte_sql(k, id_col, text_col, corpus_table, new_table),
-        id_col,
-        min_len,
-    )
-
-
 def _spans_select_sql(ctes: str, id_col: str, min_len: int) -> str:
     return f"""
     WITH {ctes}

@@ -81,11 +81,6 @@ def url_host(url: Column) -> Column:
     return F.lower(F.regexp_replace(hp, _PORT_RE, ""))
 
 
-def url_registered_domain(url: Column) -> Column:
-    """Last two host labels (the sandbox eTLD+1 simplification)."""
-    return F.regexp_extract(url_host(url), _REG_DOMAIN_RE, 1)
-
-
 def normalize_url(url: Column) -> Column:
     """The five-step normalization above as one Catalyst expression tree."""
     scheme = url_scheme(url)

@@ -29,10 +29,6 @@ def has_broadcast_hint(df: DataFrame) -> bool:
     plan = df._jdf.queryExecution().analyzed().toString()
     return "ResolvedHint" in plan or "UnresolvedHint" in plan
 
-def has_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in executed_plan(df)
-
-
 def has_cartesian(df: DataFrame) -> bool:
     plan = executed_plan(df)
     return "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan

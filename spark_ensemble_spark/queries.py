@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import math
 
-from typing import Callable, Dict
+from typing import Callable, Dict, List, Set
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -48,17 +48,27 @@ from spark_ensemble_spark.sources.datasets import (
 
 SPARK_QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
+# The rows bench.py times, in registration order, and the iterative ML fits
+# among them (no codegen warm pass; always re-run for a min-of-2).
+BENCH_QUERIES: List[str] = []
+ML_FITS: Set[str] = set()
 
 def REVENUE():
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 REVENUE_SQL = "l_extendedprice * (1 - l_discount)"
 
 
-def query(name: str, oracle: str | None = None):
+def query(
+    name: str, oracle: str | None = None, *, bench: bool = True, ml_fit: bool = False
+):
     def deco(fn):
         SPARK_QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
+        if bench:
+            BENCH_QUERIES.append(name)
+        if ml_fit:
+            ML_FITS.add(name)
         return fn
 
     return deco
@@ -319,6 +329,7 @@ def q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(round({_DECSUM_REV}, 2) AS DOUBLE) AS total_revenue
     FROM lineitem JOIN part ON l_partkey = p_partkey
     """,
+    bench=False,
 )
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H q14: promo-type revenue share. part is SF-proportional but far
@@ -348,6 +359,7 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30 AND l_quantity BETWEEN 10 AND 30)
        OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50 AND l_quantity BETWEEN 20 AND 40)
     """,
+    bench=False,
 )
 def q19_banded_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H q19 adapted (no shipmode/container columns): disjunctive
@@ -399,6 +411,7 @@ def q19_banded_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND o_orderpriority = '1-URGENT')
     GROUP BY c_mktsegment
     """,
+    bench=False,
 )
 def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H q22 adapted (no phone column): above-average-balance customers
@@ -456,6 +469,7 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN supplier ON suppkey = s_suppkey
     WHERE rn = 1 AND p_size < 10
     """,
+    bench=False,
 )
 def q2_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H q2 adapted (no partsupp table — observed lineitem offers stand in
@@ -512,6 +526,7 @@ def q2_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN nation ON s_nationkey = n_nationkey
     GROUP BY 1, 2
     """,
+    bench=False,
 )
 def q9_nation_year_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H q9 adapted (no supplycost — revenue, not profit): supplier-nation
@@ -544,6 +559,7 @@ def q9_nation_year_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN supplier ON suppkey = s_suppkey
     WHERE total_rev = (SELECT max(total_rev) FROM supplier_revenue)
     """,
+    bench=False,
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H q15: supplier(s) with maximum revenue. The max is a 1-row
@@ -581,6 +597,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     GROUP BY s_name
     """,
+    bench=False,
 )
 def q21_exclusive_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H q21 adapted (no receiptdate — sole-supplier orders stand in for
@@ -649,6 +666,7 @@ def q12_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     GROUP BY c_count
     """,
+    bench=False,
 )
 def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H q13: distribution of orders-per-customer (LEFT join keeps the
@@ -683,6 +701,7 @@ def q13_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM region_orders
     GROUP BY n_name
     """,
+    bench=False,
 )
 def q8_nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H q8 adapted: each ASIA nation's share of the region's supplier
@@ -728,6 +747,7 @@ def q8_nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END) AS BIGINT) AS weight
     FROM hashed GROUP BY 1, 2
     """,
+    bench=False,
 )
 def feature_hashing_bow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-free signed feature hashing over the documents table
@@ -896,6 +916,7 @@ def docs_word2vec_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM cust_rev)
     GROUP BY decile
     """,
+    bench=False,
 )
 def customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM-style customer segmentation: revenue deciles via ntile(10) (the
@@ -937,6 +958,7 @@ def customer_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents)
     WHERE rn = 1
     """,
+    bench=False,
 )
 def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Priority-keeping exact dedup: one row per normalized-text fingerprint,
@@ -959,6 +981,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "chunk_documents_256",
     _corpus.chunk_documents_oracle_sql(chunk_tokens=256, stride=224),
+    bench=False,
 )
 def chunk_documents_256(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAG-prep chunking at ingest scale: 256-token windows advancing by
@@ -996,6 +1019,7 @@ def chunk_documents_256(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS spans_boundary
     FROM cum
     """,
+    bench=False,
 )
 def pack_sequences_2048(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing into 2048-token windows over the documents table —
@@ -1030,6 +1054,7 @@ def pack_sequences_2048(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(a.n, 0) AS n_events
     FROM scaffold s LEFT JOIN actual a ON s.hour = a.hour
     """,
+    bench=False,
 )
 def events_hourly_gapfilled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-filled hourly series: every hour of the span appears, zero-filled
@@ -1074,6 +1099,7 @@ def events_hourly_gapfilled(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND a.p_partkey < b.p_partkey
     WHERE levenshtein(a.p_name, b.p_name) <= 4
     """,
+    bench=False,
 )
 def fuzzy_part_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy matching: part-name pairs within edit distance 4,
@@ -1123,6 +1149,7 @@ def fuzzy_part_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders, bounds
     GROUP BY lo, hi
     """,
+    bench=False,
 )
 def winsorized_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorized mean (outlier-clamped at the exact p05/p95 ORDER
@@ -1203,6 +1230,7 @@ def winsorized_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            printf('%.4f', round(sum(CAST(value AS DECIMAL(38,6))), 4)::DOUBLE) AS session_value
     FROM with_id GROUP BY user_id, session_seq
     """,
+    bench=False,
 )
 def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization via Spark's NATIVE ``session_window`` (gap-based
@@ -1253,6 +1281,7 @@ def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS stddev_pop_qty
     FROM s
     """,
+    bench=False,
 )
 def discount_quantity_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical aggregates (Pearson correlation, population covariance and
@@ -1305,6 +1334,7 @@ def discount_quantity_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM with_next
     GROUP BY 1
     """,
+    bench=False,
 )
 def events_daily_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-over-day retention: for each day, active users and how many
@@ -1348,6 +1378,7 @@ def events_daily_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(round(sum(CAST(l_tax AS DECIMAL(38,6))), 2) AS DOUBLE)
     FROM lineitem GROUP BY 1
     """,
+    bench=False,
 )
 def lineitem_measures_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNPIVOT/melt shape (the inverse of pivot_flag_by_status): wide measure
@@ -1384,6 +1415,7 @@ def lineitem_measures_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM part_value, total
     WHERE CAST(value AS DOUBLE) > {_dblit(1.2)} * CAST(tv AS DOUBLE) / np
     """,
+    bench=False,
 )
 def q11_valuable_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H q11 adapted (observed revenue stands in for partsupp inventory
@@ -1428,6 +1460,7 @@ def q11_valuable_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p_brand <> 'Brand#1' AND p_size IN (1, 5, 9, 13)
     GROUP BY 1, 2
     """,
+    bench=False,
 )
 def q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H q16 adapted (lineitem links suppliers to parts in lieu of
@@ -1463,6 +1496,7 @@ def q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE CAST(q AS DOUBLE) > 1.5 * CAST(tq AS DOUBLE) / ns
     ORDER BY s_suppkey
     """,
+    bench=False,
 )
 def q20_major_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H q20 adapted: suppliers shipping more than 1.5x a part's
@@ -1544,6 +1578,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents)
     WHERE rn <= 10
     """,
+    bench=False,
 )
 def sample_fixed_per_stratum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 10-docs-per-source sample (md5 rank — reproducible
@@ -1623,6 +1658,7 @@ def range_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY user_id ORDER BY ts
                  RANGE BETWEEN INTERVAL 24 HOURS PRECEDING AND CURRENT ROW)
     """,
+    bench=False,
 )
 def user_activity_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-engineering pass over the event log: per event, the user's
@@ -1665,6 +1701,7 @@ def user_activity_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
     GROUP BY CUBE(l_returnflag, o_orderpriority)
     """,
+    bench=False,
 )
 def revenue_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (returnflag × priority) — all four grouping-set combinations
@@ -1797,6 +1834,7 @@ _EXACT_QUANTILE_ORACLE = """
 @query(
     "dummy_mean_regressor",
     f"SELECT {_frs(f'avg({REVENUE_SQL})', 6)} AS prediction FROM lineitem",
+    ml_fit=True,
 )
 def dummy_mean_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_ensemble_spark import DummyRegressor
@@ -1813,6 +1851,7 @@ def dummy_mean_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dummy_median_regressor",
     _EXACT_QUANTILE_ORACLE.format(expr=REVENUE_SQL, q=0.5),
+    bench=False,
 )
 def dummy_median_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_ensemble_spark import DummyRegressor
@@ -1829,6 +1868,7 @@ def dummy_median_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dummy_quantile_regressor",
     _EXACT_QUANTILE_ORACLE.format(expr=REVENUE_SQL, q=0.9),
+    bench=False,
 )
 def dummy_quantile_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_ensemble_spark import DummyRegressor
@@ -1850,6 +1890,7 @@ def dummy_quantile_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY 1
     """,
+    ml_fit=True,
 )
 def dummy_prior_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_ensemble_spark import DummyClassifier
@@ -1867,6 +1908,7 @@ def dummy_prior_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "bagging_dummy_mean_regressor",
     f"SELECT {_frs(f'avg({REVENUE_SQL})', 6)} AS prediction FROM lineitem",
+    ml_fit=True,
 )
 def bagging_dummy_mean_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic bagging config (no row/feature sampling, Dummy(mean) base):
@@ -1899,6 +1941,7 @@ def bagging_dummy_mean_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lineitem GROUP BY 1 ORDER BY c DESC, prediction ASC LIMIT 1
     )
     """,
+    ml_fit=True,
 )
 def bagging_dummy_prior_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-vote bagging over identical prior classifiers predicts the modal
@@ -1926,6 +1969,7 @@ def bagging_dummy_prior_classifier(spark: SparkSession, sf_dir: str) -> DataFram
            CAST(10 AS BIGINT) AS n_models
     FROM lineitem
     """,
+    ml_fit=True,
 )
 def bagging_tree_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stochastic tree config verified via DERIVED FACTS a SQL oracle can
@@ -1990,6 +2034,7 @@ def _classifier_derived_facts(model, full: DataFrame, n_models: int | None):
            CAST(10 AS BIGINT) AS n_models
     FROM lineitem
     """,
+    ml_fit=True,
 )
 def bagging_tree_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Soft-voted depth-5 trees verified via DERIVED FACTS a SQL oracle can
@@ -2019,6 +2064,7 @@ def bagging_tree_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "boosting_dummy_median_regressor",
     f"SELECT {_frs(f'avg({REVENUE_SQL})', 6)} AS prediction FROM lineitem",
+    ml_fit=True,
 )
 def boosting_dummy_median_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic AdaBoost.R2 config: every round's Dummy(mean) base model
@@ -2046,6 +2092,7 @@ def boosting_dummy_median_regressor(spark: SparkSession, sf_dir: str) -> DataFra
            CAST(1 AS BIGINT) AS improved
     FROM lineitem
     """,
+    ml_fit=True,
 )
 def boosting_tree_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stochastic AdaBoost.R2 verified via derived facts (mirrors the
@@ -2080,6 +2127,7 @@ def boosting_tree_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lineitem GROUP BY 1 ORDER BY c DESC, prediction ASC LIMIT 1
     )
     """,
+    ml_fit=True,
 )
 def boosting_dummy_prior_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic SAMME config: every round's DummyClassifier(prior) base
@@ -2110,6 +2158,7 @@ def boosting_dummy_prior_classifier(spark: SparkSession, sf_dir: str) -> DataFra
            CAST(1 AS BIGINT) AS improved
     FROM lineitem
     """,
+    ml_fit=True,
 )
 def boosting_tree_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SAMME.R over depth-5 trees verified via derived facts: one prediction
@@ -2134,6 +2183,7 @@ def boosting_tree_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "gbm_dummy_mean_regressor",
     f"SELECT {_frs(f'avg({REVENUE_SQL})', 6)} AS prediction FROM lineitem",
+    ml_fit=True,
 )
 def gbm_dummy_mean_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic GBM config: init=constant(mean) under squared loss, and a
@@ -2163,6 +2213,7 @@ def gbm_dummy_mean_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(1 AS BIGINT) AS improved
     FROM lineitem
     """,
+    ml_fit=True,
 )
 def gbm_tree_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stochastic GBM over depth-5 trees verified via derived facts (the
@@ -2200,6 +2251,7 @@ def gbm_tree_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lineitem GROUP BY 1 ORDER BY c DESC, prediction ASC LIMIT 1
     )
     """,
+    ml_fit=True,
 )
 def gbm_dummy_prior_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic K-class GBM config: init=prior gives raw=log(priors), so
@@ -2231,6 +2283,7 @@ def gbm_dummy_prior_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(1 AS BIGINT) AS improved
     FROM lineitem
     """,
+    ml_fit=True,
 )
 def gbm_tree_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiclass GBM (logloss, K regressors per round) verified via derived
@@ -2256,6 +2309,7 @@ def gbm_tree_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stacking_dummy_regressor",
     f"SELECT {_frs(f'avg({REVENUE_SQL})', 4)} AS prediction FROM lineitem",
+    ml_fit=True,
 )
 def stacking_dummy_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stacking config: both Dummy bases emit constant columns;
@@ -2288,6 +2342,7 @@ def stacking_dummy_regressor(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lineitem GROUP BY 1 ORDER BY c DESC, prediction ASC LIMIT 1
     )
     """,
+    ml_fit=True,
 )
 def stacking_dummy_prior_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stacking config: both DummyClassifier(prior) bases emit
@@ -2324,6 +2379,7 @@ def stacking_dummy_prior_classifier(spark: SparkSession, sf_dir: str) -> DataFra
            CAST(2 AS BIGINT) AS n_base
     FROM lineitem
     """,
+    ml_fit=True,
 )
 def stacking_tree_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heterogeneous stacking with probability meta-features, verified via
@@ -2802,6 +2858,7 @@ def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
                  f" / greatest(length(text), 1), 1.0)) * {_dblit(0.2)}", 6)} AS quality
     FROM documents
     """,
+    bench=False,
 )
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_ensemble_spark.operators import text as T
@@ -3706,6 +3763,7 @@ def similarity_ivf_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame
     FROM e l JOIN e r ON l.vec_id < r.vec_id
     WHERE {_similarity.guarded_cosine_sql('l.v', 'r.v')} >= {_dblit(0.9)}
     """,
+    bench=False,
 )
 def embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine near-dup pairs. The synthetic embeddings are random
@@ -4138,7 +4196,7 @@ def streaming_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     spark = replay_session(spark)
     stream = read_documents_stream(spark, sf_dir)
-    decoded = decode_image(synthetic_bmp_corpus(stream), spread=False)
+    decoded = decode_image(synthetic_bmp_corpus(stream))
     return run_to_memory(decoded, "append", "stream_mm_decode")
 
 
@@ -4863,6 +4921,7 @@ ORACLES["docs_fleiss_kappa"] = _fk_sql(_rlf_sql())
            {_frs("CAST(n_removed AS DOUBLE) / n_docs", 6)} AS dup_rate
     FROM scalars
     """,
+    bench=False,
 )
 def dedup_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup-funnel observability — the one-row dashboard a corpus release
@@ -5359,6 +5418,7 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS events
     FROM events GROUP BY 1
     """,
+    bench=False,
 )
 def distinct_users_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -5519,6 +5579,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS delta
     FROM m
     """,
+    bench=False,
 )
 def monthly_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Month-over-month revenue deltas (lag window over a grouped aggregate).
@@ -6045,6 +6106,7 @@ def top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     WHERE l_discount BETWEEN {_dblit(0.04)} AND {_dblit(0.06)} AND l_quantity < 24
     """,
+    bench=False,
 )
 def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape, expressed through the SQL API (temp view + spark.sql) —
@@ -8959,6 +9021,7 @@ _MEDIAN_PRED_SQL = f"""(
 @query(
     "regression_metrics_dummy_median",
     regression_metrics_sql("lineitem", REVENUE_SQL, _MEDIAN_PRED_SQL),
+    ml_fit=True,
 )
 def regression_metrics_dummy_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RMSE/MAE/R² of the exact-median DummyRegressor, computed by the
@@ -8992,6 +9055,7 @@ _MODAL_CLASS_SQL = """(
         "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END",
         _MODAL_CLASS_SQL,
     ),
+    ml_fit=True,
 )
 def classification_metrics_dummy_prior(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-class precision/recall/F1/support of the prior DummyClassifier
@@ -9156,7 +9220,7 @@ REGISTRY_ORDER = [
     #     join + the sessionize extra-oracle row ×3 SFs;
     #   q1_pricing_summary / q5_nation_revenue — the TPC-H relational core
     #     is quadruple-covered by extra oracles (q1/q3/q4/q5/q6/q11/q16/
-    #     q17/q18 all replay in test_extra_oracles); the scan-agg and
+    #     q17/q18 all replay in test_oracles); the scan-agg and
     #     join-agg shapes stay in-window via events_key_skew and
     #     dedup_resolved_corpus;
     #   docs_bpe_roundtrip — encode→decode identity stays covered by
@@ -9350,10 +9414,10 @@ _missing = [n for n in REGISTRY_ORDER if n not in SPARK_QUERIES]
 assert not _missing, f"REGISTRY_ORDER names without implementations: {_missing}"
 
 # Pre-curation views: EVERY registered query/oracle, including the folded
-# twins and post-registry additions. tests/test_extra_oracles.py runs the
-# folded oracle entries through the same compare as the driver's gate, so an
-# operator outside the 50-entry window still has driver-grade verification
-# in-suite (VERDICT r3 "What's missing" #2, documented tier).
+# twins and post-registry additions. tests/test_oracles.py runs the folded
+# oracle entries through the same gate as scripts/check_correctness.py
+# (spark_ensemble_spark/oracle.py), so an operator outside the 50-entry window
+# still has driver-grade verification in-suite.
 ALL_SPARK_QUERIES = dict(SPARK_QUERIES)
 ALL_ORACLES = dict(ORACLES)
 

@@ -197,10 +197,6 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.withColumn("ts", ts_as_timestamp(df.schema["ts"].dataType))
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 # ---- ML fixtures (FIXTURES.md F1/F2/F3) ------------------------------------
 
 REGRESSION_FEATURES = ["l_quantity", "l_discount", "l_tax", "l_partkey", "l_suppkey"]

@@ -43,13 +43,6 @@ def read_csv(spark: SparkSession, path: str, schema=None, header: bool = True) -
     )
 
 
-def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def write_parquet(
     df: DataFrame,
     path: str,
@@ -65,10 +58,6 @@ def write_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).json(path)
 
 
 def write_bucketed_table(

@@ -1,7 +1,7 @@
 """Span-level exact-substring dedup (operators/spans.py).
 
 Oracle parity for docs_repeated_spans / docs_span_scrub runs in
-tests/test_extra_oracles.py automatically; here are the semantic
+tests/test_oracles.py automatically; here are the semantic
 properties the SQL replay can't express as equality."""
 
 from pyspark.sql import functions as F

@@ -1,6 +1,6 @@
 """SymSpell-style spelling correction (operators/spelling.py).
 
-Oracle parity for docs_spell_correct runs in tests/test_extra_oracles.py;
+Oracle parity for docs_spell_correct runs in tests/test_oracles.py;
 here are the semantic properties."""
 
 from pyspark.sql import functions as F

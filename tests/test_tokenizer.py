@@ -3,7 +3,7 @@
 The classic worked example (Sennrich et al. 2016 §3.2 shape; the counts are
 the standard five-word corpus) pins the merge order; the synthetic-word tests
 pin the left-to-right non-overlap fold and the tie-break. Cross-engine parity
-at sf0.001/sf0.01 is covered by tests/test_extra_oracles.py via the
+at sf0.001/sf0.01 is covered by tests/test_oracles.py via the
 registered ``bpe_train_merges`` / ``docs_bpe_tokens`` oracles.
 """
 
