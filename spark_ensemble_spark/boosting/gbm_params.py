@@ -1,19 +1,22 @@
-"""Shared GBM params and fit scaffolding (reference
-``boosting/GBMParams.scala:29-131``).
+"""The GBM family's shared params and fit (reference
+``boosting/GBMParams.scala:29-131``, ``GBMRegressor.scala:305-465``,
+``GBMClassifier.scala:290-497``).
 
-Both GBM twins split off their validation rows, keep the validation state in
-its own :class:`DFIterationCache` and stop early through the one
-:class:`EarlyStopping` here; each twin keeps its own round.
+Both GBM twins boost through the one round of :class:`GBMEstimator`; they
+differ only in their loss, their init and their step search, which the round
+reaches through hooks. A validation split is kept in its own
+:class:`DFIterationCache` and stops the fit early through
+:class:`EarlyStopping`.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Optional, Tuple
+import time
+from typing import Callable, List, Optional, Tuple
 
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.param.shared import (
     HasAggregationDepth,
-    HasCheckpointInterval,
     HasMaxIter,
     HasSeed,
     HasTol,
@@ -22,13 +25,23 @@ from pyspark.ml.param.shared import (
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spark_ensemble_spark.boosting.losses import GBMLoss
+from spark_ensemble_spark.core.base import EnsembleEstimator
+from spark_ensemble_spark.core.instances import FEATURES, LABEL, WEIGHT, get_num_features
+from spark_ensemble_spark.core.instrumentation import FitInstrumentation
 from spark_ensemble_spark.core.params import (
     HasBaseLearner,
+    HasCheckpointInterval,
     HasNumBaseLearners,
     HasSubBag,
     one_of,
 )
-from spark_ensemble_spark.core.utils import DFIterationCache
+from spark_ensemble_spark.core.subbag import draw_subspace, sample_bag, slice_features
+from spark_ensemble_spark.core.utils import DFIterationCache, fit_base_learner, run_parallel
+
+# The running raw score of a GBM fit's state: a double for the regressor, an
+# array of ``dim`` doubles for the classifier.
+RAW = "__raw"
 
 _UPDATES = ("gradient", "newton")
 
@@ -132,18 +145,10 @@ class GBMParams(
     def getNumRounds(self) -> int:
         return self.getOrDefault(self.numRounds)
 
-    def _split_instances(self, df: DataFrame) -> Tuple[DataFrame, Optional[DataFrame]]:
-        """The training instances, and the validation rows (None without a
-        ``validationIndicatorCol``)."""
-        if self.isDefined(self.validationIndicatorCol) and self.getValidationIndicatorCol():
-            val_col = F.col(self.getValidationIndicatorCol())
-            return self._extract_instances(df.filter(~val_col)), df.filter(val_col)
-        return self._extract_instances(df), None
-
 
 class EarlyStopping:
     """A GBM fit's validation side (reference ``GBMRegressor.scala:444-465``),
-    built from the validation rows of ``GBMParams._split_instances``:
+    built from the validation rows of ``GBMEstimator._split_instances``:
     the validation state, cached in its own :class:`DFIterationCache`, and
     the patience count ``v`` of rounds whose validation loss gained less
     than ``validationTol · max(err, 0.01)`` over the best so far. A fit
@@ -155,7 +160,7 @@ class EarlyStopping:
 
     def __init__(
         self,
-        est: GBMParams,
+        est: "GBMEstimator",
         val_rows: Optional[DataFrame],
         start: Callable[[DataFrame], DataFrame],
         loss: Callable[[], Column],
@@ -164,7 +169,7 @@ class EarlyStopping:
         state; ``loss()`` builds the per-row loss of a state."""
         self.tol = est.getValidationTol()
         self.patience = est.getNumRounds()
-        self.cache = DFIterationCache(est.getOrDefault(est.checkpointInterval))
+        self.cache = DFIterationCache(est.getCheckpointInterval())
         self.state = None
         self.best_val_error = 0.0
         self.v = 0
@@ -199,3 +204,160 @@ class EarlyStopping:
 
     def close(self) -> None:
         self.cache.close()
+
+
+class GBMEstimator(EnsembleEstimator):
+    """The GBM twins' fit: :meth:`_boost` runs the one boosting round.
+
+    The state is the training instances plus the running raw score
+    :data:`RAW`. A twin supplies these hooks:
+
+    * ``_round_loss(gl, state)``: the loss of the round about to run (the
+      regressor re-estimates huber's δ); ``gl`` unchanged by default;
+    * ``_directions(gl)``: ``dim`` negative-gradient expressions, and ``dim``
+      hessian expressions or None when the loss has none;
+    * ``_row_loss(gl)``: the per-row loss, for early stopping;
+    * ``_step_search(gl, bag, dirs)``: ``dim`` step sizes for the members'
+      outputs ``dirs`` over the rows they were fit on;
+    * ``_raw_advance(weights, dirs)``: the next raw score.
+    """
+
+    def _split_instances(self, df: DataFrame) -> Tuple[DataFrame, Optional[DataFrame]]:
+        """The training instances, and the validation rows (None without a
+        ``validationIndicatorCol``). A fit's first step: it reads the round's
+        size Params, so a bad value fails before any fit work."""
+        self.getNumBaseLearners()
+        self.getCheckpointInterval()
+        if self.isDefined(self.validationIndicatorCol) and self.getValidationIndicatorCol():
+            val_col = F.col(self.getValidationIndicatorCol())
+            return self._extract_instances(df.filter(~val_col)), df.filter(val_col)
+        return self._extract_instances(df), None
+
+    def _round_loss(self, gl: GBMLoss, state: DataFrame) -> GBMLoss:
+        return gl
+
+    def _boost(
+        self,
+        train: DataFrame,
+        val_rows: Optional[DataFrame],
+        start: Callable[[DataFrame], DataFrame],
+        gl: GBMLoss,
+        parallelism: int = 1,
+    ) -> Tuple[List[List], List[List[int]], List[List[float]], int]:
+        """Boost from ``start(instances)``, the init model's state, with
+        ``gl.dim`` members a round fitted ``parallelism`` at a time. Returns
+        the kept rounds' members, subspaces and weights (one list of ``dim``
+        per round) and the number of features.
+
+        A round caches ONE frame (the reference's ``PeriodicRDDCheckpointer``):
+        its members' outputs scored once over the full state. That frame is a
+        projection of the state, with its partitions and row order, so the
+        round's seeded ``sample_bag`` of it is exactly the rows the members
+        were fit on; the step search reads that bag, and the next state is a
+        projection of the frame.
+        """
+        num_learners = self.getNumBaseLearners()
+        cache = DFIterationCache(self.getCheckpointInterval())
+        newton = self.getUpdates() == "newton"
+        learning_rate = self.getLearningRate()
+        seed = self.getOrDefault(self.seed)
+        dim = gl.dim
+        dirs = [f"__dir{j}" for j in range(dim)]
+        num_features = get_num_features(train, FEATURES)
+
+        def score(frame: DataFrame, subspace: List[int], members: List) -> DataFrame:
+            full, _ = slice_features(frame, FEATURES, subspace, num_features, "__sf")
+            for m in members:  # each member reads the sliced column, writes its dir
+                full = m.transform(full)
+            return full
+
+        state = cache.update(start(train))
+        stop = EarlyStopping(self, val_rows, start, lambda: self._row_loss(gl))
+        instr = FitInstrumentation(self.uid, num_learners)
+        models: List[List] = []
+        subspaces: List[List[int]] = []
+        weights: List[List[float]] = []
+        try:
+            i = 0
+            while i < num_learners and stop.patient():
+                gl = self._round_loss(gl, state)
+                t0 = time.time()
+                subspace = draw_subspace(self.getSubspaceRatio(), num_features, seed + i)
+                bag = sample_bag(
+                    state, self.getReplacement(), self.getSubsampleRatio(), seed + i
+                )
+                bag, fcol = slice_features(bag, FEATURES, subspace, num_features, "__sf")
+                neg_grads, hessians = self._directions(gl)
+                persisted = None
+                try:
+                    if newton and hessians is not None:
+                        # hessian-scaled targets, weighted by 0.5·h/Σh·w
+                        hess = [f"__hess{j}" for j in range(dim)]
+                        persisted = bag.select(
+                            "*",
+                            *[F.greatest(h, F.lit(1e-2)).alias(c) for h, c in zip(hessians, hess)],
+                        ).persist()
+                        sums = persisted.agg(*[F.sum(c) for c in hess]).first()
+                        bag = persisted
+                        targets = [
+                            (ng / F.col(c), 0.5 * F.col(c) / F.lit(float(s)) * F.col(WEIGHT))
+                            for ng, c, s in zip(neg_grads, hess, sums)
+                        ]
+                    else:
+                        targets = [(ng, F.col(WEIGHT)) for ng in neg_grads]
+                    t1 = time.time()
+                    members = run_parallel(
+                        [
+                            lambda target=target, w=w, d=d: fit_base_learner(
+                                self.getBaseLearner(),
+                                bag.withColumn("__target", target).withColumn("__w", w),
+                                "__target", fcol, d, weight_col="__w",
+                            )
+                            for (target, w), d in zip(targets, dirs)
+                        ],
+                        parallelism,
+                    )
+                finally:
+                    if persisted is not None:
+                        persisted.unpersist()
+                t2 = time.time()
+
+                # The round's only cached frame: every member scored once.
+                scored = cache.update(
+                    score(state, subspace, members).select(LABEL, WEIGHT, FEATURES, RAW, *dirs)
+                )
+                if self.getOptimizedWeights():
+                    own_bag = sample_bag(
+                        scored, self.getReplacement(), self.getSubsampleRatio(), seed + i
+                    )
+                    steps = self._step_search(gl, own_bag, dirs)
+                else:
+                    steps = [1.0] * dim
+                iweights = [learning_rate * s for s in steps]
+                t3 = time.time()
+
+                models.append(members)
+                subspaces.append(list(subspace))
+                weights.append(iweights)
+                raw = self._raw_advance(iweights, dirs).alias(RAW)
+                state = scored.select(LABEL, WEIGHT, FEATURES, raw)
+                val_error = stop.update(
+                    lambda vs: score(vs, subspace, members).select(LABEL, WEIGHT, FEATURES, raw),
+                    lambda: self._row_loss(gl),
+                )
+                instr.iteration(
+                    i,
+                    weight=",".join(f"{w:.6g}" for w in iweights),
+                    val_error=val_error,
+                    bag_s=t1 - t0,
+                    trees_s=t2 - t1,
+                    opt_s=t3 - t2,
+                )
+                i += 1
+        finally:
+            cache.close()
+            stop.close()
+
+        keep = stop.keep(i)
+        instr.done(i, f"kept {keep}")
+        return models[:keep], subspaces[:keep], weights[:keep], num_features

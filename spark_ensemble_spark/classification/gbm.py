@@ -11,15 +11,14 @@ Semantic parity with
 * Newton updates: per-dim hessian-scaled targets and hessian weights
   (floored at 1e-2);
 * step sizes: L-BFGS-B over x ∈ [0, ∞)^dim minimizing the mean loss of
-  ``praw + x ∘ dir`` with analytic gradient — each optimizer evaluation is ONE
+  ``raw + x ∘ dir`` with analytic gradient — each optimizer evaluation is ONE
   ``agg`` computing the loss sum and all dim gradient sums;
 * binary raw output is ``(−r, r)``; probability via the loss link.
 
-The running raw-score vector lives in a ``__praw`` array column. The
-validation split and early stopping are the GBM family's shared
-``GBMParams._split_instances`` and
-:class:`~spark_ensemble_spark.boosting.gbm_params.EarlyStopping`, as in
-GBMRegressor.
+The round itself is the GBM family's shared
+:class:`~spark_ensemble_spark.boosting.gbm_params.GBMEstimator` loop, whose
+running raw score is here an array of ``dim`` doubles; this module holds the
+init raw scores, the per-dim loss expressions and the L-BFGS-B step search.
 """
 
 from __future__ import annotations
@@ -32,27 +31,17 @@ from pyspark.ml.param.shared import HasParallelism
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from spark_ensemble_spark.boosting.gbm_params import EarlyStopping, GBMParams
-from spark_ensemble_spark.boosting.losses import (
-    LogLoss,
-    classification_loss,
-)
+from spark_ensemble_spark.boosting.gbm_params import RAW, GBMEstimator, GBMParams
+from spark_ensemble_spark.boosting.losses import LogLoss, classification_loss
 from spark_ensemble_spark.core.base import (
     ClassifierParams,
     EnsembleClassificationModel,
-    EnsembleEstimator,
     HasMembers,
     score_base_models,
 )
-from spark_ensemble_spark.core.instances import get_num_classes, get_num_features
-from spark_ensemble_spark.core.instrumentation import FitInstrumentation
+from spark_ensemble_spark.core.instances import get_num_classes
+from spark_ensemble_spark.core.optim import minimize_nonneg_batched
 from spark_ensemble_spark.core.params import one_of
-from spark_ensemble_spark.core.subbag import draw_subspace, sample_bag, slice_features
-from spark_ensemble_spark.core.utils import (
-    DFIterationCache,
-    fit_base_learner,
-    run_parallel,
-)
 
 _LOSSES = ("logloss", "exponential", "bernoulli")
 _INIT = ("prior", "uniform")
@@ -76,7 +65,7 @@ class _GBMClassifierParams(ClassifierParams, GBMParams, HasParallelism):
         return one_of(self, self.loss, _LOSSES)
 
 
-class GBMClassifier(EnsembleEstimator, _GBMClassifierParams):
+class GBMClassifier(GBMEstimator, _GBMClassifierParams):
     def _init_raw(self, train: DataFrame, num_classes: int, dim: int) -> List[float]:
         """Initial raw scores (``GBMClassifier.scala:275-288``)."""
         strategy = self.getInitStrategy()
@@ -90,194 +79,54 @@ class GBMClassifier(EnsembleEstimator, _GBMClassifierParams):
             return [math.log(p1 / (1 - p1))]
         return [math.log(p) if p > 0 else -745.0 for p in priors]
 
-    def _grad_exprs(self, gl, dim: int, label: Column, praw: Column):
-        """(neg_gradient array, hessian array or None) at the current raw."""
-        if isinstance(gl, LogLoss):
-            ng = F.transform(gl.gradient_arr(label, praw), lambda g: -g)
-            hs = gl.hessian_arr(label, praw) if gl.has_hessian else None
-            return ng, hs
-        y = gl.encode_label(label)
-        p = F.element_at(praw, 1)
-        ng = F.array(-gl.gradient(y, p))
-        hs = F.array(gl.hessian(y, p)) if gl.has_hessian else None
-        return ng, hs
-
-    def _loss_expr(self, gl, label: Column, praw: Column) -> Column:
-        if isinstance(gl, LogLoss):
-            return gl.loss_arr(label, praw)
-        return gl.loss(gl.encode_label(label), F.element_at(praw, 1))
-
     def _fit_model(self, df: DataFrame) -> "GBMClassificationModel":
         loss_name = self.getLoss()
-        tol = self.getOrDefault(self.tol)
-        max_iter = self.getOrDefault(self.maxIter)
-        num_learners = self.getNumBaseLearners()
-        learning_rate = self.getLearningRate()
-        newton = self.getUpdates() == "newton"
-        seed = self.getOrDefault(self.seed)
-        parallelism = self.getOrDefault(self.parallelism)
-
+        train, val_rows = self._split_instances(df)
         num_classes = get_num_classes(df, self.getLabelCol())
         if loss_name in ("exponential", "bernoulli") and num_classes != 2:
             raise ValueError(f"loss='{loss_name}' supports binary labels only")
         gl = classification_loss(loss_name, num_classes)
-        dim = gl.dim
-
-        train, val_rows = self._split_instances(df)
-        num_features = get_num_features(train, "features")
-        init_raw = self._init_raw(train, num_classes, dim)
-
-        cache = DFIterationCache(self.getOrDefault(self.checkpointInterval))
-        praw0 = F.array(*[F.lit(v) for v in init_raw])
-        state = cache.update(train.withColumn("__praw", praw0))
-        stop = EarlyStopping(
-            self,
+        init_raw = self._init_raw(train, num_classes, gl.dim)
+        raw0 = F.array(*[F.lit(v) for v in init_raw])
+        models, subspaces, weights, num_features = self._boost(
+            train,
             val_rows,
-            lambda val: val.withColumn("__praw", praw0),
-            lambda: self._loss_expr(gl, F.col("label"), F.col("__praw")),
+            lambda instances: instances.withColumn(RAW, raw0),
+            gl,
+            self.getOrDefault(self.parallelism),
         )
-
-        models: List[List] = []
-        subspaces: List[List[int]] = []
-        weights: List[List[float]] = []
-
-        instr = FitInstrumentation(self.uid, num_learners)
-        try:
-            import time as _time
-
-            i = 0
-            while i < num_learners and stop.patient():
-                _t0 = _time.time()
-                subspace = draw_subspace(self.getSubspaceRatio(), num_features, seed + i)
-                bag = sample_bag(
-                    state, self.getReplacement(), self.getSubsampleRatio(), seed + i
-                )
-                bag, fcol = slice_features(bag, "features", subspace, num_features, "__sf")
-
-                ng, hs = self._grad_exprs(gl, dim, F.col("label"), F.col("__praw"))
-                bag = bag.withColumn("__ng", ng)
-                if newton and hs is not None:
-                    bag = bag.withColumn(
-                        "__hess", F.transform(hs, lambda h: F.greatest(h, F.lit(1e-2)))
-                    )
-                persisted = bag.persist()
-                try:
-                    if newton and hs is not None:
-                        sum_hess = persisted.agg(
-                            *[
-                                F.sum(F.element_at("__hess", j + 1)).alias(f"h{j}")
-                                for j in range(dim)
-                            ]
-                        ).first()
-                    else:
-                        sum_hess = None
-                    persisted.count()
-                    _t_bag = _time.time() - _t0
-
-                    def fit_dim(j: int):
-                        if sum_hess is not None:
-                            target = F.element_at("__ng", j + 1) / F.element_at(
-                                "__hess", j + 1
-                            )
-                            w = (
-                                0.5
-                                * F.element_at("__hess", j + 1)
-                                / F.lit(float(sum_hess[j]))
-                                * F.col("weight")
-                            )
-                        else:
-                            target = F.element_at("__ng", j + 1)
-                            w = F.col("weight")
-                        dfj = persisted.withColumn("__target", target).withColumn("__w", w)
-                        return fit_base_learner(
-                            self.getBaseLearner(), dfj, "__target", fcol, "__dir",
-                            weight_col="__w",
-                        )
-
-                    _t1 = _time.time()
-                    imodels = run_parallel(
-                        [lambda j=j: fit_dim(j) for j in range(dim)], parallelism
-                    )
-                    _t_trees = _time.time() - _t1
-
-                    # Direction array on the bag for the step-size optimization.
-                    scored = persisted
-                    dir_cols = []
-                    for j, m in enumerate(imodels):
-                        scored = m.transform(
-                            scored, {m.getParam("predictionCol"): f"__dir{j}"}
-                        )
-                        dir_cols.append(f"__dir{j}")
-
-                    _t2 = _time.time()
-                    if self.getOptimizedWeights():
-                        opt_df = scored.select(
-                            "label", "weight", "__praw",
-                            F.array(*[F.col(c) for c in dir_cols]).alias("__dir"),
-                        ).persist()
-                        try:
-                            opt_df.count()
-                            solution = self._lbfgsb(opt_df, gl, dim, max_iter, tol)
-                        finally:
-                            opt_df.unpersist()
-                    else:
-                        solution = [1.0] * dim
-                    iweights = [learning_rate * s for s in solution]
-                    _t_opt = _time.time() - _t2
-                finally:
-                    persisted.unpersist()
-
-                models.append(imodels)
-                subspaces.append(list(subspace))
-                weights.append(iweights)
-
-                state = self._advance(state, imodels, iweights, subspace, num_features)
-                state = cache.update(state)
-
-                val_error = stop.update(
-                    lambda vs: self._advance(vs, imodels, iweights, subspace, num_features),
-                    lambda: self._loss_expr(gl, F.col("label"), F.col("__praw")),
-                )
-                instr.iteration(
-                    i, val_error=val_error, bag_s=_t_bag, trees_s=_t_trees, opt_s=_t_opt
-                )
-                i += 1
-        finally:
-            cache.close()
-            stop.close()
-
-        keep = stop.keep(i)
-        instr.done(i, f"kept {keep}")
         return GBMClassificationModel(
             num_classes=num_classes,
-            dim=dim,
+            dim=gl.dim,
             init_raw=init_raw,
-            weights=weights[:keep],
-            subspaces=subspaces[:keep],
-            models=models[:keep],
+            weights=weights,
+            subspaces=subspaces,
+            models=models,
             num_features=num_features,
         )
 
-    def _advance(self, state, imodels, iweights, subspace, num_features):
-        """praw ← praw + w ∘ model(slice(x)) over a full dataset."""
-        full, fcol = slice_features(state, "features", subspace, num_features, "__sf")
-        dir_cols = []
-        for j, m in enumerate(imodels):
-            full = m.transform(
-                full,
-                {m.getParam("featuresCol"): fcol, m.getParam("predictionCol"): f"__dir{j}"},
+    def _directions(self, gl):
+        label, raw = F.col("label"), F.col(RAW)
+        if isinstance(gl, LogLoss):
+            grad = gl.gradient_arr(label, raw)
+            hess = gl.hessian_arr(label, raw)
+            return (
+                [-F.element_at(grad, j + 1) for j in range(gl.dim)],
+                [F.element_at(hess, j + 1) for j in range(gl.dim)],
             )
-            dir_cols.append(f"__dir{j}")
-        new_praw = F.zip_with(
-            F.col("__praw"),
-            F.array(*[F.lit(w) * F.col(c) for w, c in zip(iweights, dir_cols)]),
-            lambda p, d: p + d,
-        )
-        return full.withColumn("__praw", new_praw).select(
-            "label", "weight", "features", "__praw"
-        )
+        y, p = gl.encode_label(label), F.element_at(raw, 1)
+        return [-gl.gradient(y, p)], [gl.hessian(y, p)] if gl.has_hessian else None
 
-    def _lbfgsb(self, opt_df, gl, dim: int, max_iter: int, tol: float) -> List[float]:
+    def _row_loss(self, gl) -> Column:
+        if isinstance(gl, LogLoss):
+            return gl.loss_arr(F.col("label"), F.col(RAW))
+        return gl.loss(gl.encode_label(F.col("label")), F.element_at(RAW, 1))
+
+    def _raw_advance(self, weights: List[float], dirs: List[str]) -> Column:
+        steps = F.array(*[F.lit(w) * F.col(d) for w, d in zip(weights, dirs)])
+        return F.zip_with(F.col(RAW), steps, lambda p, d: p + d)
+
+    def _step_search(self, gl, bag: DataFrame, dirs: List[str]) -> List[float]:
         """Bound-constrained step-size optimization (reference breeze LBFGSB,
         ``GBMClassifier.scala:290-292,413-431``), evaluated Spark-side.
 
@@ -288,7 +137,7 @@ class GBMClassifier(EnsembleEstimator, _GBMClassifierParams):
           ``aggregate`` higher-order functions are CodegenFallback —
           interpreted per row, no whole-stage codegen — so the array-typed
           softmax cost ~1.1s per 600k-row evaluation. The line search
-          unrolls ``newp_j = praw[j] + x_j·dir[j]`` and the logsumexp into
+          unrolls ``newp_j = raw[j] + x_j·dir_j`` and the logsumexp into
           plain scalar arithmetic (``element_at`` indexing is codegen-able;
           dim ≤ num_classes keeps the tree small).
         * **The whole Armijo backtracking ladder is ONE batched agg** (the
@@ -301,12 +150,12 @@ class GBMClassifier(EnsembleEstimator, _GBMClassifierParams):
         (Σ w·f / Σ w), while the reference's GBMLossAggregator accumulates
         unweighted and divides by weightSum — step sizes differ when
         weightCol is set (same convention as GBMRegressor's line search)."""
+        dim = gl.dim
         label, w = F.col("label"), F.col("weight")
 
         def newp_scalars(x):
             return [
-                F.element_at("__praw", j + 1)
-                + F.lit(float(x[j])) * F.element_at("__dir", j + 1)
+                F.element_at(RAW, j + 1) + F.lit(float(x[j])) * F.col(dirs[j])
                 for j in range(dim)
             ]
 
@@ -332,19 +181,11 @@ class GBMClassifier(EnsembleEstimator, _GBMClassifierParams):
             if isinstance(gl, LogLoss):
                 # ∂loss/∂p_j = softmax_j − 1[label=j]
                 return [
-                    F.sum(
-                        w
-                        * F.element_at("__dir", j + 1)
-                        * (probs[j] - (label == j).cast("double"))
-                    )
+                    F.sum(w * F.col(dirs[j]) * (probs[j] - (label == j).cast("double")))
                     for j in range(dim)
                 ]
             y = gl.encode_label(label)
-            return [
-                F.sum(
-                    w * F.element_at("__dir", 1) * gl.gradient(y, newp_scalars(x)[0])
-                )
-            ]
+            return [F.sum(w * F.col(dirs[0]) * gl.gradient(y, newp_scalars(x)[0]))]
 
         def sums(points, with_grad: bool):
             """ONE agg returning the mean loss at every point and, with
@@ -363,26 +204,19 @@ class GBMClassifier(EnsembleEstimator, _GBMClassifierParams):
                     e.alias(f"g{j}")
                     for j, e in enumerate(grad_sums(points[0], terms[0][1]))
                 ]
-            row = opt_df.agg(*cols).first()
+            row = bag.agg(*cols).first()
             sw = row["sw"] or 1.0
             n = len(points)
             losses = [(row[1 + i] or 0.0) / sw for i in range(n)]
             grad = [(row[1 + n + j] or 0.0) / sw for j in range(dim)] if with_grad else None
             return losses, grad
 
-        def fun_and_grad(x):
-            (f,), g = sums([x], True)
-            return f, g
-
-        from spark_ensemble_spark.core.optim import minimize_nonneg_batched
-
         return minimize_nonneg_batched(
-            fun_and_grad,
             lambda points: sums(points, False)[0],
+            lambda points: sums(points, True),
             [1.0] * dim,
-            min(max_iter, 15),
-            tol,
-            losses_grad0_batch=lambda points: sums(points, True),
+            min(self.getOrDefault(self.maxIter), 15),
+            self.getOrDefault(self.tol),
         )
 
 

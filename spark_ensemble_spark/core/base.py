@@ -20,9 +20,8 @@ members in ``models`` adds :class:`HasMembers` for ``numModels``.
 
 Each family's fit body is shared by its twins too: bagging's is
 :func:`~spark_ensemble_spark.core.subbag.fit_bagged_models`, stacking's and
-AdaBoost's are in :mod:`~spark_ensemble_spark.core.families`, and GBM's
-validation split and early stopping are in
-:mod:`~spark_ensemble_spark.boosting.gbm_params`.
+AdaBoost's are in :mod:`~spark_ensemble_spark.core.families`, and GBM's is
+:class:`~spark_ensemble_spark.boosting.gbm_params.GBMEstimator`.
 
 Scoring strategy (SURVEY.md §3.2): the reference evaluates every base model
 per row inside one executor closure; we instead chain N JVM ``transform``s,

@@ -10,8 +10,8 @@ classification; the scaffolding around it is written once:
   twin's round function (AdaBoost.R2, SAMME, SAMME.R).
 
 Bagging's body is :func:`~spark_ensemble_spark.core.subbag.fit_bagged_models`;
-GBM's validation split and early stopping are in
-:mod:`~spark_ensemble_spark.boosting.gbm_params`.
+GBM's round, validation split and early stopping are
+:class:`~spark_ensemble_spark.boosting.gbm_params.GBMEstimator`.
 """
 
 from __future__ import annotations
@@ -177,10 +177,10 @@ class BoostingEstimator(EnsembleEstimator):
         """Run the loop over ``df``'s instances; returns the kept members,
         their weights and the number of features."""
         num_learners = self.getNumBaseLearners()
+        cache = DFIterationCache(self.getCheckpointInterval())
         instances = self._extract_instances(df).withColumn("__bw", F.col(WEIGHT))
         num_features = get_num_features(instances, FEATURES)
 
-        cache = DFIterationCache(self.getOrDefault(self.checkpointInterval))
         state = cache.update(instances)
         sum_weights = state.agg(F.sum("__bw")).first()[0] or 0.0
 

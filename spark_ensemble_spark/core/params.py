@@ -18,13 +18,8 @@ from __future__ import annotations
 import math
 from typing import Sequence, Tuple
 
-from pyspark.ml.param import Param, Params, TypeConverters
-from pyspark.ml.param.shared import (
-    HasAggregationDepth,
-    HasCheckpointInterval,
-    HasParallelism,
-    HasSeed,
-)
+from pyspark.ml.param import Param, Params, TypeConverters, shared
+from pyspark.ml.param.shared import HasAggregationDepth, HasParallelism, HasSeed
 
 
 def one_of(params: Params, param: Param, allowed: Sequence[str]) -> str:
@@ -119,6 +114,18 @@ class HasNumBaseLearners(Params):
 
     def getNumBaseLearners(self) -> int:
         return in_range(self, self.numBaseLearners, 1)
+
+
+class HasCheckpointInterval(shared.HasCheckpointInterval):
+    """Spark ML's ``checkpointInterval``: a boosting fit truncates its
+    state's lineage every that many rounds, or never with ``-1`` (Spark ML's
+    "disable checkpoint"); every round's state is persisted either way."""
+
+    def getCheckpointInterval(self) -> int:
+        v = self.getOrDefault(self.checkpointInterval)
+        if v != -1 and v < 1:
+            raise ValueError(f"checkpointInterval must be >= 1, or -1 to never truncate, got {v}")
+        return v
 
 
 class HasSubBag(Params):

@@ -180,7 +180,8 @@ class DFIterationCache:
     (``BoostingRegressor.scala:202-206``): each iteration's state DataFrame is
     persisted; every ``interval`` updates the lineage is truncated — without
     truncation the per-iteration ``withColumn``/``transform`` chain grows the
-    Catalyst plan unboundedly (SURVEY.md §4).
+    Catalyst plan unboundedly (SURVEY.md §4). An ``interval`` of ``-1`` never
+    truncates.
 
     Truncation strategy: when the application has a checkpoint dir
     (``spark.sparkContext.setCheckpointDir``), use RELIABLE ``checkpoint()``
@@ -193,7 +194,7 @@ class DFIterationCache:
         from pyspark.storagelevel import StorageLevel
 
         self._level = StorageLevel.MEMORY_AND_DISK
-        self.interval = max(int(interval), 1)
+        self.interval = int(interval)
         self.keep = keep
         self._n = 0
         self._live: List[DataFrame] = []
@@ -209,7 +210,7 @@ class DFIterationCache:
 
     def update(self, df: DataFrame) -> DataFrame:
         self._n += 1
-        if self._n % self.interval == 0:
+        if self.interval > 0 and self._n % self.interval == 0:
             if self._has_checkpoint_dir(df):
                 df = df.checkpoint(eager=True)
             else:

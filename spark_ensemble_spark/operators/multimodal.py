@@ -165,7 +165,7 @@ def synthetic_bmp_corpus(
     )
 
 
-def decode_image(df: DataFrame, payload_col: str = "payload", spread: bool = True) -> DataFrame:
+def decode_image(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Decode 24-bit uncompressed BMP payloads (pure numpy — no external
     codec) and emit per-image facts: dimensions, per-channel means, and the
     top-left red value (position-sensitive, so bottom-up row order and row
@@ -224,21 +224,16 @@ def decode_image(df: DataFrame, payload_col: str = "payload", spread: bool = Tru
                 }
             )
 
-    # A real decode is per-payload CPU-bound: give it the cluster's width
-    # (the stub seam skips this because its per-row work is trivial).
-    # ``spread=False`` is for BOUNDED inputs (the ≤400-row synthetic
-    # fixtures): repartitioning a fixed-size tiny frame to cluster width
-    # costs more than the trivial decode saves at ANY scale — and each
-    # extra partition demands a Python worker, which Spark 4 evicts after
-    # a HARDCODED 1-minute idle (PythonWorkerFactory.IDLE_WORKER_TIMEOUT_NS)
-    # and re-creates through a serialized ~1s/worker handshake: measured
-    # in the 198-query bench, the first 32-partition Python stage after a
-    # long JVM-only span blocked 35s on worker respawn alone (r13, guide
-    # §4). Production-sized inputs arrive with many splits and never take
-    # the spread branch anyway.
-    from spark_ensemble_spark.sources.datasets import spread_to_parallelism
-
-    return (spread_to_parallelism(df) if spread else df).mapInPandas(op, schema=IMAGE_SCHEMA)
+    # No repartition, as in the stub seam above: the bounded synthetic
+    # fixtures lose more to a cluster-width repartition than the decode
+    # saves — each extra partition demands a Python worker, which Spark 4
+    # evicts after a HARDCODED 1-minute idle
+    # (PythonWorkerFactory.IDLE_WORKER_TIMEOUT_NS) and re-creates through a
+    # serialized ~1s/worker handshake (r13: the first 32-partition Python
+    # stage after a long JVM-only span blocked 35s on respawn alone). A
+    # caller with a large, few-split input calls spread_to_parallelism(df)
+    # first; production inputs arrive with many splits.
+    return df.mapInPandas(op, schema=IMAGE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -341,7 +336,7 @@ def synthetic_png_corpus(
     )
 
 
-def decode_png(df: DataFrame, payload_col: str = "payload", spread: bool = True) -> DataFrame:
+def decode_png(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Decode 8-bit RGB (color type 2) PNG payloads with NO external codec:
     stdlib ``zlib`` inflates the concatenated IDAT stream and the five PNG
     scanline filters (None/Sub/Up/Average/Paeth, RFC 2083 §6) are reversed
@@ -445,9 +440,7 @@ def decode_png(df: DataFrame, payload_col: str = "payload", spread: bool = True)
                 }
             )
 
-    from spark_ensemble_spark.sources.datasets import spread_to_parallelism
-
-    return (spread_to_parallelism(df) if spread else df).mapInPandas(op, schema=IMAGE_SCHEMA)
+    return df.mapInPandas(op, schema=IMAGE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -507,7 +500,7 @@ def synthetic_wav_corpus(
     )
 
 
-def decode_audio(df: DataFrame, payload_col: str = "payload", spread: bool = True) -> DataFrame:
+def decode_audio(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """Decode 16-bit PCM WAV payloads (pure numpy, no external codec): walk
     the RIFF chunk list to find ``fmt `` and ``data`` (never assume fixed
     offsets — real encoders insert LIST/INFO chunks), then emit per-clip
@@ -558,9 +551,7 @@ def decode_audio(df: DataFrame, payload_col: str = "payload", spread: bool = Tru
                 }
             )
 
-    from spark_ensemble_spark.sources.datasets import spread_to_parallelism
-
-    return (spread_to_parallelism(df) if spread else df).mapInPandas(op, schema=AUDIO_SCHEMA)
+    return df.mapInPandas(op, schema=AUDIO_SCHEMA)
 
 
 AUDIO_FRAMES_SCHEMA = (
@@ -574,7 +565,6 @@ def audio_frame_features(
     frame_len: int = 32,
     hop: int = 16,
     payload_col: str = "payload",
-    spread: bool = True,
 ) -> DataFrame:
     """Frame-level audio features over PCM-WAV payloads — the windowed
     analysis stage every audio-curation pipeline runs before filtering or
@@ -654,9 +644,7 @@ def audio_frame_features(
                 ],
             )
 
-    from spark_ensemble_spark.sources.datasets import spread_to_parallelism
-
-    return (spread_to_parallelism(df) if spread else df).mapInPandas(op, schema=AUDIO_FRAMES_SCHEMA)
+    return df.mapInPandas(op, schema=AUDIO_FRAMES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -668,7 +656,7 @@ RESIZE_SCHEMA = (
 )
 
 
-def resize_image(df: DataFrame, out_w: int = 3, out_h: int = 2, payload_col: str = "payload", spread: bool = True) -> DataFrame:
+def resize_image(df: DataFrame, out_w: int = 3, out_h: int = 2, payload_col: str = "payload") -> DataFrame:
     """Decode 24-bit BMP payloads and nearest-neighbor resample to
     ``out_w × out_h`` (output pixel (i, j) reads input pixel
     ``(floor(i*h/out_h), floor(j*w/out_w))`` — the standard box-origin
@@ -725,9 +713,7 @@ def resize_image(df: DataFrame, out_w: int = 3, out_h: int = 2, payload_col: str
                 columns=["doc_id", "width", "height", "mean_r", "mean_g", "mean_b"],
             )
 
-    from spark_ensemble_spark.sources.datasets import spread_to_parallelism
-
-    return (spread_to_parallelism(df) if spread else df).mapInPandas(op, schema=RESIZE_SCHEMA)
+    return df.mapInPandas(op, schema=RESIZE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -778,7 +764,6 @@ SCENE_SCHEMA = (
 
 def scene_changes(
     df: DataFrame, threshold: float = 10.0, payload_col: str = "payload",
-    spread: bool = True,
 ) -> DataFrame:
     """Scene-change detection over raw multi-frame payloads — the video
     analogue of :func:`audio_frame_features` (the analysis stage after
@@ -824,12 +809,10 @@ def scene_changes(
             )
             rows = []
 
-    from spark_ensemble_spark.sources.datasets import spread_to_parallelism
-
-    return (spread_to_parallelism(df) if spread else df).mapInPandas(op, schema=SCENE_SCHEMA)
+    return df.mapInPandas(op, schema=SCENE_SCHEMA)
 
 
-def frame_sample(df: DataFrame, every_n: int = 3, payload_col: str = "payload", spread: bool = True) -> DataFrame:
+def frame_sample(df: DataFrame, every_n: int = 3, payload_col: str = "payload") -> DataFrame:
     """Keep every ``every_n``-th frame of a raw multi-frame payload (frame 0
     always kept) and emit one row per kept frame with its byte facts. Frame
     selection is pure offset arithmetic — ``payload[f*frame_size : (f+1)*
@@ -860,9 +843,7 @@ def frame_sample(df: DataFrame, every_n: int = 3, payload_col: str = "payload", 
                 recs, columns=["doc_id", "frame_idx", "n_bytes", "byte_sum", "first_byte"]
             )
 
-    from spark_ensemble_spark.sources.datasets import spread_to_parallelism
-
-    return (spread_to_parallelism(df) if spread else df).mapInPandas(op, schema=FRAME_SCHEMA)
+    return df.mapInPandas(op, schema=FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

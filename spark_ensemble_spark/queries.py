@@ -4171,11 +4171,7 @@ def multimodal_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    # spread=False: the fixture is a bounded ≤400-row frame — cluster-width
-    # repartition costs more than the trivial decode saves at any SF, and a
-    # 32-partition Python stage pays Spark 4's serialized worker respawn
-    # after every 60s idle eviction (multimodal.decode_image's note; r13)
-    return decode_image(synthetic_bmp_corpus(docs), spread=False)
+    return decode_image(synthetic_bmp_corpus(docs))
 
 
 @query("streaming_multimodal_decode", _IMAGE_DECODE_ORACLE)
@@ -4236,7 +4232,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return frame_sample(synthetic_video_corpus(docs), every_n=3, spread=False)
+    return frame_sample(synthetic_video_corpus(docs), every_n=3)
 
 
 @query(
@@ -4331,7 +4327,7 @@ def multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return decode_audio(synthetic_wav_corpus(docs), spread=False)
+    return decode_audio(synthetic_wav_corpus(docs))
 
 
 @query(
@@ -4381,7 +4377,7 @@ def multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return audio_frame_features(synthetic_wav_corpus(docs), spread=False)
+    return audio_frame_features(synthetic_wav_corpus(docs))
 
 
 @query(
@@ -4419,7 +4415,7 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return resize_image(synthetic_bmp_corpus(docs), out_w=3, out_h=2, spread=False)
+    return resize_image(synthetic_bmp_corpus(docs), out_w=3, out_h=2)
 
 
 @query(
@@ -4461,7 +4457,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return decode_png(synthetic_png_corpus(docs), spread=False)
+    return decode_png(synthetic_png_corpus(docs))
 
 
 @query(
@@ -5222,7 +5218,7 @@ def multimodal_scene_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return scene_changes(synthetic_video_corpus(docs), threshold=10.0, spread=False)
+    return scene_changes(synthetic_video_corpus(docs), threshold=10.0)
 
 
 @query(

@@ -115,7 +115,47 @@ def make_frames(spark):
     return {
         "reg": df.selectExpr("features", "reg AS label").cache(),
         "clf": df.selectExpr("features", "clf AS label").cache(),
+        "bin": df.selectExpr("features", "CAST(clf > 0 AS DOUBLE) AS label").cache(),
     }
+
+
+# Subsampled and subspaced GBM fits, whose step search reads each round's
+# re-drawn bag: name -> (estimator factory, training frame).
+BAGGED_GBM = {
+    "GBMClassifier(3-class, newton, bagged)": (
+        lambda: GBMClassifier(
+            baseLearner=DecisionTreeRegressor(maxDepth=2),
+            numBaseLearners=3,
+            subsampleRatio=0.7,
+            subspaceRatio=0.75,
+            updates="newton",
+            optimizedWeights=True,
+        ),
+        "clf",
+    ),
+    "GBMClassifier(bernoulli, newton, bagged)": (
+        lambda: GBMClassifier(
+            baseLearner=DecisionTreeRegressor(maxDepth=2),
+            numBaseLearners=3,
+            loss="bernoulli",
+            subsampleRatio=0.7,
+            subspaceRatio=0.75,
+            updates="newton",
+        ),
+        "bin",
+    ),
+    "GBMRegressor(huber, newton, bagged)": (
+        lambda: GBMRegressor(
+            baseLearner=DecisionTreeRegressor(maxDepth=2),
+            numBaseLearners=3,
+            loss="huber",
+            subsampleRatio=0.7,
+            subspaceRatio=0.75,
+            updates="newton",
+        ),
+        "reg",
+    ),
+}
 
 
 def fit_all(frames):
@@ -392,6 +432,41 @@ FITTED_VALUES = {
         },
         87.0,
     ),
+    # BAGGED_GBM, captured before the GBM twins shared one round
+    "GBMClassifier(3-class, newton, bagged)": (
+        {
+            "dim": 3,
+            "initRaw": [-1.0379876668516748, -1.0090001299784226, -1.2685113254635072],
+            "numClasses": 3,
+            "numFeatures": 4,
+            "subspaces": [[0, 3], [0, 1, 2, 3], [0, 2, 3]],
+            "weights": [
+                [1.041313139983312, 0.6530254699116859, 0.7433489052908885],
+                [0.22122493993176306, 0.15179611596818124, 0.9992503114626793],
+                [0.419540825410715, 0.5666547919836982, 0.8637244777613563],
+            ],
+        },
+        85.0,
+    ),
+    "GBMClassifier(bernoulli, newton, bagged)": (
+        {
+            "dim": 1,
+            "initRaw": [0.6007738604289304],
+            "numClasses": 2,
+            "numFeatures": 4,
+            "subspaces": [[0, 3], [0, 1, 2, 3], [0, 2, 3]],
+            "weights": [[1.151211555326586], [0.7557017232311399], [0.48181318667999024]],
+        },
+        55.0,
+    ),
+    "GBMRegressor(huber, newton, bagged)": (
+        {
+            "numFeatures": 4,
+            "subspaces": [[0, 3], [0, 1, 2, 3], [0, 2, 3]],
+            "weights": [1.0498046875, 1.007080078125, 1.092529296875],
+        },
+        151.78093838889953,
+    ),
 }
 
 
@@ -602,8 +677,18 @@ def test_optimized_gbm_classifier_values_are_pinned(fitted):
     _check_fitted_values(model, frames["clf"], "GBMClassifier(optimizedWeights=True)")
 
 
+@pytest.mark.parametrize("key", sorted(BAGGED_GBM))
+def test_bagged_gbm_values_are_pinned(fitted, key):
+    """Each round's step search reads exactly the rows its members were fit
+    on, so subsampled, subspaced fits keep their step sizes."""
+    frames, _ = fitted
+    make, kind = BAGGED_GBM[key]
+    _check_fitted_values(make().fit(frames[kind]), frames[kind], key)
+
+
 # (estimator, size Param, out-of-range values); the docs give the ranges
-# numBaseLearners >= 1 and subsampleRatio, subspaceRatio in (0, 1].
+# numBaseLearners >= 1, subsampleRatio, subspaceRatio in (0, 1] and
+# checkpointInterval >= 1 or -1.
 _RATIOS_OUT = [0.0, -0.5, 1.5, math.nan]
 OUT_OF_RANGE = [
     (cls, param, bad)
@@ -619,6 +704,7 @@ OUT_OF_RANGE = [
         ("numBaseLearners", [0, -3]),
         ("subsampleRatio", _RATIOS_OUT),
         ("subspaceRatio", _RATIOS_OUT),
+        ("checkpointInterval", [0, -2]),
     )
     if hasattr(cls, param)
     for bad in values
@@ -648,3 +734,23 @@ def test_fit_without_members_fails(fitted, name):
     est = ESTIMATORS[name][0]().setNumBaseLearners(0)
     with pytest.raises(ValueError, match="numBaseLearners"):
         est.fit(frames[_kind(name)])
+
+
+@pytest.mark.parametrize("name", ["GBMRegressor", "BoostingRegressor"])
+def test_checkpoint_interval_minus_one_never_truncates(fitted, monkeypatch, name):
+    """``checkpointInterval=-1`` disables lineage truncation, as in Spark ML:
+    the fit persists its states and checkpoints none of them."""
+    frames, _ = fitted
+    frame_cls = type(frames["reg"])  # the session's DataFrame implementation
+    calls = []
+    for method in ("checkpoint", "localCheckpoint"):
+        real = getattr(frame_cls, method)
+
+        def counting(self, *args, _real=real, **kwargs):
+            calls.append(method)
+            return _real(self, *args, **kwargs)
+
+        monkeypatch.setattr(frame_cls, method, counting)
+    est = ESTIMATORS[name][0]().setNumBaseLearners(3).setCheckpointInterval(-1)
+    assert est.fit(frames["reg"]).numModels == 3
+    assert calls == []

@@ -298,6 +298,30 @@ def test_gbm_regressor_step_search_reads_members_bag(reg_splits):
     assert step_over(state) != step
 
 
+@pytest.mark.parametrize("kind", ["regressor", "classifier"])
+def test_gbm_round_caches_one_frame(monkeypatch, reg_splits, clf_splits, kind):
+    """A gradient-mode round caches one frame, its members' scores over the
+    training state, which the step search and the next state both read: a
+    2-round fit persists the start state and one frame per round."""
+    tree = DecisionTreeRegressor(maxDepth=2)
+    if kind == "regressor":
+        train, est = reg_splits[0], GBMRegressor(baseLearner=tree, numBaseLearners=2)
+    else:
+        train, est = clf_splits[0], GBMClassifier(baseLearner=tree, numBaseLearners=2)
+    assert est.getUpdates() == "gradient" and est.getOptimizedWeights()
+    persisted = []
+    frame_cls = type(train)  # the session's DataFrame implementation
+    real = frame_cls.persist
+
+    def counting(self, *args, **kwargs):
+        persisted.append(None)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "persist", counting)
+    assert est.fit(train).numModels == 2
+    assert len(persisted) == 3
+
+
 class _FailsOnSecondFit(DecisionTreeRegressor):
     """Tree learner whose second fit raises; ``Params.copy`` is shallow, so
     every per-member copy shares the ``_calls`` list."""

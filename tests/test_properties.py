@@ -72,17 +72,19 @@ def test_nonneg_batched_minimizer_quadratic(centers):
 
     evals = [0]
 
-    def fg(x):
-        evals[0] += 1
-        f = sum((xi - ci) ** 2 for xi, ci in zip(x, centers))
-        g = [2 * (xi - ci) for xi, ci in zip(x, centers)]
-        return f, g
+    def losses(points):
+        return [sum((xi - ci) ** 2 for xi, ci in zip(p, centers)) for p in points]
 
     def lb(points):
         evals[0] += 1
-        return [sum((xi - ci) ** 2 for xi, ci in zip(p, centers)) for p in points]
+        return losses(points)
 
-    got = minimize_nonneg_batched(fg, lb, [1.0] * len(centers), max_iter=30, tol=1e-10)
+    def lgb(points):
+        """The fused pass: the losses, and the gradient at points[0]."""
+        evals[0] += 1
+        return losses(points), [2 * (xi - ci) for xi, ci in zip(points[0], centers)]
+
+    got = minimize_nonneg_batched(lb, lgb, [1.0] * len(centers), max_iter=30, tol=1e-10)
     expected = [max(c, 0.0) for c in centers]
     for g, e in zip(got, expected):
         assert g == pytest.approx(e, abs=0.05)
