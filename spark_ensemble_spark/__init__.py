@@ -12,8 +12,9 @@ Design stance (see SURVEY.md §7):
   * Per-row evolving state (boosting weights, GBM running predictions) lives in
     columns updated with ``withColumn``, never in zipped RDDs.
   * Base-model scoring is chained JVM ``transform``s (no Python round-trip).
-  * Driver-side math (Brent/L-BFGS-B line search, weighted-median combine) is
-    scipy/expression-based; each optimizer evaluation is a single-pass ``agg``.
+  * The GBM step searches (batched Brent-style grid, bounded projected
+    gradient in place of L-BFGS-B) run on the driver in plain Python
+    (``core/optim``); each optimizer evaluation is a single-pass aggregate.
 """
 
 __version__ = "0.1.0"

@@ -12,7 +12,7 @@ reaches through hooks. A validation split is kept in its own
 from __future__ import annotations
 
 import time
-from typing import Callable, List, Optional, Tuple
+from typing import Callable, List, Optional, Sequence, Tuple
 
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.param.shared import (
@@ -210,15 +210,16 @@ class GBMEstimator(EnsembleEstimator):
     """The GBM twins' fit: :meth:`_boost` runs the one boosting round.
 
     The state is the training instances plus the running raw score
-    :data:`RAW`. A twin supplies these hooks:
+    :data:`RAW`. The round reads its loss through :meth:`_directions`,
+    :meth:`_row_loss` and :meth:`_step_sums`, generic over the loss's
+    ``dim``. A twin supplies these hooks:
 
+    * ``_raw_score(j)``: the SQL text of raw score ``j`` of :data:`RAW`;
     * ``_round_loss(gl, state)``: the loss of the round about to run (the
       regressor re-estimates huber's δ); ``gl`` unchanged by default;
-    * ``_directions(gl)``: ``dim`` negative-gradient expressions, and ``dim``
-      hessian expressions or None when the loss has none;
-    * ``_row_loss(gl)``: the per-row loss, for early stopping;
     * ``_step_search(gl, bag, dirs)``: ``dim`` step sizes for the members'
-      outputs ``dirs`` over the rows they were fit on;
+      outputs ``dirs`` over the rows they were fit on, found by the twin's
+      optimizer over :meth:`_step_sums`;
     * ``_raw_advance(weights, dirs)``: the next raw score.
     """
 
@@ -235,6 +236,68 @@ class GBMEstimator(EnsembleEstimator):
 
     def _round_loss(self, gl: GBMLoss, state: DataFrame) -> GBMLoss:
         return gl
+
+    def _scores(
+        self, dim: int, point: Optional[Sequence[float]] = None, dirs: Sequence[str] = ()
+    ) -> List[str]:
+        """The ``dim`` raw scores as SQL text, each advanced by
+        ``point[j]·dirs[j]`` when a step ``point`` is given."""
+        ps = [self._raw_score(j) for j in range(dim)]
+        if point is None:
+            return ps
+        return [f"{p} + CAST('{float(x)!r}' AS DOUBLE) * {d}" for p, x, d in zip(ps, point, dirs)]
+
+    def _directions(self, gl: GBMLoss) -> Tuple[List[Column], Optional[List[Column]]]:
+        """``dim`` negative-gradient expressions, and ``dim`` hessian
+        expressions or None when the loss has none."""
+        y, ps = gl.encode_label(LABEL), self._scores(gl.dim)
+        hessians = gl.hessian(y, ps)
+        return (
+            [F.expr(f"-({g})") for g in gl.gradient(y, ps)],
+            None if hessians is None else [F.expr(h) for h in hessians],
+        )
+
+    def _row_loss(self, gl: GBMLoss) -> Column:
+        """The per-row loss, for early stopping."""
+        return F.expr(gl.loss(gl.encode_label(LABEL), self._scores(gl.dim)))
+
+    def _step_sums(
+        self,
+        gl: GBMLoss,
+        bag: DataFrame,
+        dirs: Sequence[str],
+        points: Sequence[Sequence[float]],
+        with_grad: bool = False,
+    ) -> Tuple[List[float], Optional[List[float]]]:
+        """The mean loss of ``raw + x∘dirs`` at every step ``x`` in
+        ``points`` and, ``with_grad``, its gradient in ``x`` at ``points[0]``,
+        from ONE ``selectExpr`` over ``bag``: ``sum(weight)``,
+        ``sum(weight·loss)`` at each point and ``sum(weight·dir_j·grad_j)``
+        (the reference ``GBMLossAggregator``'s one-pass loss+gradient,
+        ``GBMLoss.scala:34-76``). Every step-search evaluation is built here,
+        so each loss's expressions are the same in all of them.
+
+        DELIBERATE DEVIATION: loss and gradient are instance-WEIGHTED
+        (Σ w·f / Σ w), while the reference's GBMLossAggregator accumulates
+        unweighted and divides by weightSum, so step sizes differ from the
+        reference when weightCol is set. Weighted is the consistent choice:
+        the gradient the base learner fits is weighted the same way."""
+        y = gl.encode_label(LABEL)
+        exprs = [f"sum({WEIGHT}) AS sw"] + [
+            f"sum({WEIGHT} * ({gl.loss(y, self._scores(gl.dim, x, dirs))})) AS l{k}"
+            for k, x in enumerate(points)
+        ]
+        if with_grad:
+            grads = gl.gradient(y, self._scores(gl.dim, points[0], dirs))
+            exprs += [
+                f"sum({WEIGHT} * {d} * ({g})) AS g{j}" for j, (d, g) in enumerate(zip(dirs, grads))
+            ]
+        row = bag.selectExpr(*exprs).first()
+        sw = row["sw"] or 1.0
+        n = len(points)
+        losses = [(row[1 + k] or 0.0) / sw for k in range(n)]
+        grad = [(row[1 + n + j] or 0.0) / sw for j in range(len(dirs))] if with_grad else None
+        return losses, grad
 
     def _boost(
         self,

@@ -1,373 +1,237 @@
-"""GBM loss library — Catalyst column expressions + driver-side scalar mirrors.
+"""GBM loss library: each loss written once, as Spark SQL expression text.
 
 Semantic parity with
-``/root/reference/core/src/main/scala/org/apache/spark/ml/boosting/GBMLoss.scala:79-318``:
-every loss provides ``loss``/``gradient`` (and ``hessian`` where defined) as
-column expressions over (label, prediction) columns; classification losses add
-the label encoding and the raw→probability link. The driver-side ``*_py``
-mirrors exist for finite-difference verification (reference
-``GBMLossSuite.scala:84-125``) and for scipy line-search bookkeeping.
+``/root/reference/core/src/main/scala/org/apache/spark/ml/boosting/GBMLoss.scala:79-318``.
+Every method returns SQL text over SQL text arguments: ``y``, the encoded
+label, and ``ps``, its ``dim`` raw scores. A loss gives ``encode_label``,
+``loss`` (one expression), ``gradient`` and ``hessian`` (one per dim; None for
+a loss without a hessian); classification losses add ``link``, the
+probability array at scoring.
 
-The reference evaluates these per-row in a ``treeAggregate``; here a single
-``df.agg(sum(...))`` gives Catalyst the same partial/final aggregation with
-whole-stage codegen (SURVEY.md §2.2).
+A fit takes the Column forms with ``F.expr``; the step search puts the text
+straight into ONE ``selectExpr`` of every candidate (composing Columns costs
+~10 Py4J roundtrips per operator per candidate, measured as ~25% of a GBM
+fit's wall clock). Every literal is a double (``2.0D``, ``CAST('<repr>' AS
+DOUBLE)``): a bare ``2.0`` is a DECIMAL in Spark SQL.
 """
 
 from __future__ import annotations
 
-import math
-from typing import Callable, List, Optional
+from typing import List, Optional, Sequence
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-from spark_ensemble_spark.core.utils import EPSILON
+def _double(v: float) -> str:
+    """A SQL literal that parses to exactly the double ``v``."""
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
 
 
 class GBMLoss:
-    """Scalar (dim=1) loss over (label, prediction) double columns."""
+    """A loss of ``dim`` raw scores; ``dim = 1`` for every loss but LogLoss."""
 
     dim = 1
-    has_hessian = False
-    is_classification = False
 
-    def loss(self, y: Column, p: Column) -> Column:
+    def encode_label(self, label: str) -> str:
+        """Regression: identity (``GBMLoss.scala:124-127``)."""
+        return label
+
+    def loss(self, y: str, ps: Sequence[str]) -> str:
         raise NotImplementedError
 
-    def gradient(self, y: Column, p: Column) -> Column:
+    def gradient(self, y: str, ps: Sequence[str]) -> List[str]:
         raise NotImplementedError
 
-    def hessian(self, y: Column, p: Column) -> Column:
-        raise NotImplementedError
-
-    def neg_gradient(self, y: Column, p: Column) -> Column:
-        return -self.gradient(y, p)
-
-    def loss_sql(self, y: str, p: str) -> Optional[str]:
-        """SQL-string mirror of :meth:`loss` over expression strings, or
-        None when no exact mirror is defined. Used by the batched line
-        search to build its candidate grid as ONE selectExpr: composing the
-        grid out of Column operators costs ~10 Py4J roundtrips per operator
-        per candidate, which measured as ~25% of a GBM fit's wall clock.
-        Mirrors MUST parse to the identical Catalyst expression as
-        :meth:`loss` (same functions, same literal types)."""
+    def hessian(self, y: str, ps: Sequence[str]) -> Optional[List[str]]:
         return None
 
-    # scalar mirrors (driver-side; used in tests and optimizers)
-    def loss_py(self, y: float, p: float) -> float:
-        raise NotImplementedError
 
-    def gradient_py(self, y: float, p: float) -> float:
-        raise NotImplementedError
+class ScalarLoss(GBMLoss):
+    """A ``dim = 1`` loss, written over the one raw score ``p`` as ``_loss``,
+    ``_gradient`` and, where it has one, ``_hessian``."""
 
-    def hessian_py(self, y: float, p: float) -> float:
-        raise NotImplementedError
+    _hessian = None
 
-    def encode_label(self, y: Column) -> Column:
-        """Regression: identity (``GBMLoss.scala:124-127``)."""
-        return y
+    def loss(self, y, ps):
+        return self._loss(f"({y})", f"({ps[0]})")
 
+    def gradient(self, y, ps):
+        return [self._gradient(f"({y})", f"({ps[0]})")]
 
-class SquaredLoss(GBMLoss):
-    has_hessian = True
-
-    def loss(self, y, p):
-        return (y - p) ** 2 / 2.0
-
-    def loss_sql(self, y, p):
-        return f"power(({y}) - ({p}), 2.0D) / 2.0D"
-
-    def gradient(self, y, p):
-        return -(y - p)
-
-    def hessian(self, y, p):
-        return F.lit(1.0)
-
-    def loss_py(self, y, p):
-        return (y - p) ** 2 / 2.0
-
-    def gradient_py(self, y, p):
-        return -(y - p)
-
-    def hessian_py(self, y, p):
-        return 1.0
+    def hessian(self, y, ps):
+        return None if self._hessian is None else [self._hessian(f"({y})", f"({ps[0]})")]
 
 
-class AbsoluteLoss(GBMLoss):
-    def loss(self, y, p):
-        return F.abs(y - p)
+class SquaredLoss(ScalarLoss):
+    def _loss(self, y, p):
+        return f"power({y} - {p}, 2.0D) / 2.0D"
 
-    def loss_sql(self, y, p):
-        return f"abs(({y}) - ({p}))"
+    def _gradient(self, y, p):
+        return f"-({y} - {p})"
 
-    def gradient(self, y, p):
-        return -F.signum(y - p)
-
-    def loss_py(self, y, p):
-        return abs(y - p)
-
-    def gradient_py(self, y, p):
-        return -math.copysign(1.0, y - p) if y != p else 0.0
+    def _hessian(self, y, p):
+        return "1.0D"
 
 
-class LogCoshLoss(GBMLoss):
-    has_hessian = True
+class AbsoluteLoss(ScalarLoss):
+    def _loss(self, y, p):
+        return f"abs({y} - {p})"
 
-    def loss(self, y, p):
-        return F.log(F.cosh(y - p))
-
-    def loss_sql(self, y, p):
-        return f"ln(cosh(({y}) - ({p})))"
-
-    def gradient(self, y, p):
-        return -F.tanh(y - p)
-
-    def hessian(self, y, p):
-        return 1.0 / F.cosh(y - p) ** 2
-
-    def loss_py(self, y, p):
-        return math.log(math.cosh(y - p))
-
-    def gradient_py(self, y, p):
-        return -math.tanh(y - p)
-
-    def hessian_py(self, y, p):
-        return 1.0 / math.cosh(y - p) ** 2
+    def _gradient(self, y, p):
+        return f"-signum({y} - {p})"
 
 
-class ScaledLogCoshLoss(GBMLoss):
+class LogCoshLoss(ScalarLoss):
+    def _loss(self, y, p):
+        return f"ln(cosh({y} - {p}))"
+
+    def _gradient(self, y, p):
+        return f"-tanh({y} - {p})"
+
+    def _hessian(self, y, p):
+        return f"1.0D / power(cosh({y} - {p}), 2.0D)"
+
+
+class ScaledLogCoshLoss(LogCoshLoss):
     """Asymmetric log-cosh: α-weighted under-prediction, (1−α) over-prediction."""
-
-    has_hessian = True
 
     def __init__(self, alpha: float) -> None:
         self.alpha = float(alpha)
-        self._inner = LogCoshLoss()
 
-    def _scale(self, y, p):
-        return F.when(y > p, F.lit(self.alpha)).otherwise(F.lit(1 - self.alpha))
+    def _scaled(self, y, p, term):
+        scale = f"CASE WHEN {y} > {p} THEN {_double(self.alpha)} ELSE {_double(1 - self.alpha)} END"
+        return f"({scale}) * ({term})"
 
-    def loss(self, y, p):
-        return self._scale(y, p) * self._inner.loss(y, p)
+    def _loss(self, y, p):
+        return self._scaled(y, p, super()._loss(y, p))
 
-    def gradient(self, y, p):
-        return self._scale(y, p) * self._inner.gradient(y, p)
+    def _gradient(self, y, p):
+        return self._scaled(y, p, super()._gradient(y, p))
 
-    def hessian(self, y, p):
-        return self._scale(y, p) * self._inner.hessian(y, p)
-
-    def loss_py(self, y, p):
-        s = self.alpha if y > p else 1 - self.alpha
-        return s * self._inner.loss_py(y, p)
-
-    def gradient_py(self, y, p):
-        s = self.alpha if y > p else 1 - self.alpha
-        return s * self._inner.gradient_py(y, p)
-
-    def hessian_py(self, y, p):
-        s = self.alpha if y > p else 1 - self.alpha
-        return s * self._inner.hessian_py(y, p)
+    def _hessian(self, y, p):
+        return self._scaled(y, p, super()._hessian(y, p))
 
 
-class HuberLoss(GBMLoss):
+class HuberLoss(ScalarLoss):
     """δ is re-estimated adaptively each GBM iteration as the α-quantile of
     |residual| (``GBMRegressor.scala:342-353``)."""
 
     def __init__(self, delta: float) -> None:
         self.delta = float(delta)
 
-    def loss(self, y, p):
-        d = F.lit(self.delta)
-        return F.when(F.abs(y - p) <= d, (y - p) ** 2 / 2.0).otherwise(
-            d * (F.abs(y - p) - d / 2.0)
+    def _loss(self, y, p):
+        d = _double(self.delta)
+        return (
+            f"CASE WHEN abs({y} - {p}) <= {d} THEN {SquaredLoss()._loss(y, p)} "
+            f"ELSE {d} * (abs({y} - {p}) - {d} / 2.0D) END"
         )
 
-    def gradient(self, y, p):
-        d = F.lit(self.delta)
-        return F.when(F.abs(y - p) <= d, -(y - p)).otherwise(-d * F.signum(y - p))
-
-    def loss_py(self, y, p):
-        r = y - p
-        if abs(r) <= self.delta:
-            return r * r / 2.0
-        return self.delta * (abs(r) - self.delta / 2.0)
-
-    def gradient_py(self, y, p):
-        r = y - p
-        if abs(r) <= self.delta:
-            return -r
-        return -self.delta * math.copysign(1.0, r)
+    def _gradient(self, y, p):
+        d = _double(self.delta)
+        return f"CASE WHEN abs({y} - {p}) <= {d} THEN -({y} - {p}) ELSE -{d} * signum({y} - {p}) END"
 
 
-class QuantileLoss(GBMLoss):
+class QuantileLoss(ScalarLoss):
     def __init__(self, quantile: float) -> None:
         self.quantile = float(quantile)
 
-    def loss(self, y, p):
-        q = F.lit(self.quantile)
-        return F.when(y > p, q * (y - p)).otherwise((q - 1.0) * (y - p))
+    def _loss(self, y, p):
+        q = _double(self.quantile)
+        return f"CASE WHEN {y} > {p} THEN {q} * ({y} - {p}) ELSE ({q} - 1.0D) * ({y} - {p}) END"
 
-    def loss_sql(self, y, p):
-        q = repr(self.quantile)
-        return (
-            f"CASE WHEN ({y}) > ({p}) THEN CAST('{q}' AS DOUBLE) * (({y}) - ({p})) "
-            f"ELSE (CAST('{q}' AS DOUBLE) - 1.0D) * (({y}) - ({p})) END"
-        )
-
-    def gradient(self, y, p):
+    def _gradient(self, y, p):
         q = self.quantile
-        return F.when(y > p, F.lit(-q)).otherwise(F.lit(1.0 - q))
-
-    def loss_py(self, y, p):
-        q = self.quantile
-        return q * (y - p) if y > p else (q - 1.0) * (y - p)
-
-    def gradient_py(self, y, p):
-        return -self.quantile if y > p else 1.0 - self.quantile
+        return f"CASE WHEN {y} > {p} THEN {_double(-q)} ELSE {_double(1.0 - q)} END"
 
 
 # ---- classification losses -------------------------------------------------
 
 
-class GBMClassificationLoss(GBMLoss):
-    is_classification = True
+class MarginLoss(ScalarLoss):
+    """A binary margin loss: labels encoded 2y−1 (``GBMLoss.scala:272-273,
+    297-298``). Its ``link`` reads the FIRST component of the binary raw
+    array (−r, r), as the reference does; prediction uses argmax(raw) and is
+    unaffected."""
 
-    def raw_to_probability(self, raw: Column, num_classes: int) -> Column:
-        """array<double> raw → array<double> probability."""
-        raise NotImplementedError
+    def encode_label(self, label):
+        return f"2.0D * ({label}) - 1.0D"
 
-
-class ExponentialLoss(GBMClassificationLoss):
-    """AdaBoost-style margin loss; label encoded 2y−1 (``GBMLoss.scala:265-291``)."""
-
-    has_hessian = True
-
-    def encode_label(self, y):
-        return 2 * y - 1
-
-    def loss(self, y, p):
-        return F.exp(-y * p)
-
-    def gradient(self, y, p):
-        return -y * F.exp(-y * p)
-
-    def hessian(self, y, p):
-        return y * y * F.exp(-y * p)
-
-    def loss_py(self, y, p):
-        return math.exp(-y * p)
-
-    def gradient_py(self, y, p):
-        return -y * math.exp(-y * p)
-
-    def hessian_py(self, y, p):
-        return y * y * math.exp(-y * p)
-
-    def raw_to_probability(self, raw, num_classes):
-        # Reference link (GBMLoss.scala:284-289): p1 = 1/(1+exp(−2·raw(0)))
-        # where the binary raw vector is (−r, r). Reproduced verbatim —
-        # including the fact that it reads the FIRST component — so the
-        # probability column matches the reference; prediction uses argmax(raw)
-        # and is unaffected.
-        p1 = 1.0 / (1.0 + F.exp(-2.0 * F.element_at(raw, 1)))
-        return F.array(1.0 - p1, p1)
+    def link(self, ps: Sequence[str]) -> str:
+        p1 = self._positive(f"({ps[0]})")
+        return f"array(1.0D - {p1}, {p1})"
 
 
-class BernoulliLoss(GBMClassificationLoss):
-    """log(1+exp(−2yp)) margin loss (``GBMLoss.scala:293-318``).
+class ExponentialLoss(MarginLoss):
+    """AdaBoost-style margin loss (``GBMLoss.scala:265-291``)."""
 
-    Note the reference's link maps the positive-class probability through
-    ``1/(1+exp(r))`` of the *first* raw component (its binary raw is (−r, r)),
-    i.e. 1/(1+exp(−r)) of the positive score — we reproduce that behavior.
-    """
+    def _loss(self, y, p):
+        return f"exp(-{y} * {p})"
 
-    has_hessian = True
+    def _gradient(self, y, p):
+        return f"-{y} * exp(-{y} * {p})"
 
-    def encode_label(self, y):
-        return 2 * y - 1
+    def _hessian(self, y, p):
+        return f"{y} * {y} * exp(-{y} * {p})"
 
-    def loss(self, y, p):
+    def _positive(self, r0):
+        # reference link (GBMLoss.scala:284-289): p1 = 1/(1+exp(−2·raw(0)))
+        return f"(1.0D / (1.0D + exp(-2.0D * {r0})))"
+
+
+class BernoulliLoss(MarginLoss):
+    """log(1+exp(−2yp)) margin loss (``GBMLoss.scala:293-318``)."""
+
+    def _loss(self, y, p):
         # log1p(exp(x)) computed stably
-        x = -2 * y * p
-        return F.when(x > 30, x).otherwise(F.log1p(F.exp(x)))
+        x = f"(-2.0D * {y} * {p})"
+        return f"CASE WHEN {x} > 30.0D THEN {x} ELSE log1p(exp({x})) END"
 
-    def gradient(self, y, p):
-        return -2 * y / (1 + F.exp(2 * y * p))
+    def _gradient(self, y, p):
+        return f"-2.0D * {y} / (1.0D + exp(2.0D * {y} * {p}))"
 
-    def hessian(self, y, p):
-        e = F.exp(2 * p * y)
-        return (4 * e * y * y) / (1 + e) ** 2
+    def _hessian(self, y, p):
+        e = f"exp(2.0D * {p} * {y})"
+        return f"4.0D * {e} * {y} * {y} / power(1.0D + {e}, 2.0D)"
 
-    def loss_py(self, y, p):
-        x = -2 * y * p
-        return x if x > 30 else math.log1p(math.exp(x))
-
-    def gradient_py(self, y, p):
-        return -2 * y / (1 + math.exp(2 * y * p))
-
-    def hessian_py(self, y, p):
-        e = math.exp(2 * p * y)
-        return (4 * e * y * y) / (1 + e) ** 2
-
-    def raw_to_probability(self, raw, num_classes):
+    def _positive(self, r0):
         # reference: proba(1) = 1/(1+exp(raw(0))) with raw = (−r, r)
-        p1 = 1.0 / (1.0 + F.exp(F.element_at(raw, 1)))
-        return F.array(1.0 - p1, p1)
+        return f"(1.0D / (1.0D + exp({r0})))"
 
 
-class LogLoss(GBMClassificationLoss):
-    """K-dim softmax cross-entropy over array<double> prediction columns
-    (``GBMLoss.scala:196-263``). Labels stay scalar (the one-hot is implicit)."""
-
-    has_hessian = True
+class LogLoss(GBMLoss):
+    """K-dim softmax cross-entropy (``GBMLoss.scala:196-263``). Labels stay
+    scalar (the one-hot is implicit). Every formula is scalar arithmetic over
+    the K scores: array higher-order functions are CodegenFallback, so they
+    would run interpreted per row."""
 
     def __init__(self, num_classes: int) -> None:
-        self.num_classes = int(num_classes)
-
-    @property
-    def dim(self) -> int:  # type: ignore[override]
-        return self.num_classes
+        self.dim = int(num_classes)
 
     @staticmethod
-    def _logsumexp(p: Column) -> Column:
-        m = F.array_max(p)
-        return m + F.log(
-            F.aggregate(F.transform(p, lambda x: F.exp(x - m)), F.lit(0.0), lambda a, x: a + x)
-        )
+    def _softmax(ps: Sequence[str]):
+        """(max, Σ_j exp(p_j − max), [exp(p_j − max) / Σ])."""
+        ps = [f"({p})" for p in ps]
+        m = f"greatest({', '.join(ps)})" if len(ps) > 1 else ps[0]
+        exps = [f"exp({p} - {m})" for p in ps]
+        total = f"({' + '.join(exps)})"
+        return m, total, [f"{e} / {total}" for e in exps]
 
-    def loss_arr(self, label: Column, p: Column) -> Column:
-        """lse(p) − p[label] (one-hot dot simplification)."""
-        return self._logsumexp(p) - F.element_at(p, label.cast("int") + 1)
+    def loss(self, y, ps):
+        """logsumexp(p) − p[label]."""
+        m, total, _ = self._softmax(ps)
+        py = " ".join(f"WHEN ({y}) = {j} THEN ({p})" for j, p in enumerate(ps))
+        return f"({m} + ln({total})) - (CASE {py} ELSE 0.0D END)"
 
-    def softmax(self, p: Column) -> Column:
-        m = F.array_max(p)
-        exps = F.transform(p, lambda x: F.exp(x - m))
-        total = F.aggregate(exps, F.lit(0.0), lambda a, x: a + x)
-        return F.transform(exps, lambda x: x / total)
+    def gradient(self, y, ps):
+        """softmax(p)_j − 1[j = label]."""
+        return [
+            f"{s} - CASE WHEN ({y}) = {j} THEN 1.0D ELSE 0.0D END"
+            for j, s in enumerate(self._softmax(ps)[2])
+        ]
 
-    def gradient_arr(self, label: Column, p: Column) -> Column:
-        """softmax(p)_c − 1[c=label]."""
-        sm = self.softmax(p)
-        idx = F.sequence(F.lit(0), F.lit(self.num_classes - 1))
-        return F.zip_with(
-            sm,
-            idx,
-            lambda s, c: s - F.when(label == c.cast("double"), 1.0).otherwise(0.0),
-        )
+    def hessian(self, y, ps):
+        return [f"{s} * (1.0D - {s})" for s in self._softmax(ps)[2]]
 
-    def hessian_arr(self, label: Column, p: Column) -> Column:
-        sm = self.softmax(p)
-        return F.transform(sm, lambda s: s * (1 - s))
-
-    def raw_to_probability(self, raw, num_classes):
-        m = F.array_max(raw)
-        exps = F.transform(raw, lambda x: F.exp(x - m))
-        total = F.aggregate(exps, F.lit(0.0), lambda a, x: a + x)
-        return F.transform(exps, lambda x: x / total)
-
-
-REGRESSION_LOSSES = ("squared", "absolute", "huber", "quantile")
-CLASSIFICATION_LOSSES = ("logloss", "exponential", "bernoulli")
+    def link(self, ps: Sequence[str]) -> str:
+        return f"array({', '.join(self._softmax(ps)[2])})"
 
 
 def regression_loss(name: str, alpha: float, quantile_delta: Optional[float] = None) -> GBMLoss:
@@ -388,7 +252,7 @@ def regression_loss(name: str, alpha: float, quantile_delta: Optional[float] = N
     raise ValueError(f"unknown regression loss {name}")
 
 
-def classification_loss(name: str, num_classes: int) -> GBMClassificationLoss:
+def classification_loss(name: str, num_classes: int) -> GBMLoss:
     """Factory matching ``GBMClassifierParams.loss`` (``GBMClassifier.scala:116-127``):
     binary tasks use the scalar margin losses; multiclass uses K-dim logloss."""
     name = name.lower()

@@ -96,5 +96,5 @@ class BaggingClassificationModel(
                 )
         return df, sum_arrays(votes), tmp
 
-    def _probability_from_raw(self, raw: Column) -> Column:
-        return scale_array(raw, F.lit(1.0 / self.numModels))
+    def _probability_from_raw(self, raw: str) -> Column:
+        return scale_array(F.col(raw), F.lit(1.0 / self.numModels))

@@ -194,6 +194,6 @@ class BoostingClassificationModel(
                 )
         return df, sum_arrays(contribs), tmp
 
-    def _probability_from_raw(self, raw: Column) -> Column:
+    def _probability_from_raw(self, raw: str) -> Column:
         # softmax(raw / (K−1))  (reference :341-346)
-        return softmax_array(scale_array(raw, F.lit(1.0 / (self.numClasses - 1.0))))
+        return softmax_array(scale_array(F.col(raw), F.lit(1.0 / (self.numClasses - 1.0))))

@@ -98,7 +98,7 @@ class DummyClassificationModel(EnsembleClassificationModel, _DummyClassifierPara
         raw = F.array(*[F.lit(v) for v in self.rawPrediction])
         return df, raw, []
 
-    def _probability_from_raw(self, raw: Column) -> Column:
+    def _probability_from_raw(self, raw: str) -> Column:
         return F.array(*[F.lit(v) for v in self.probability])
 
     def predict(self, features=None) -> float:

@@ -18,7 +18,7 @@ Semantic parity with
 The round itself is the GBM family's shared
 :class:`~spark_ensemble_spark.boosting.gbm_params.GBMEstimator` loop, whose
 running raw score is here an array of ``dim`` doubles; this module holds the
-init raw scores, the per-dim loss expressions and the L-BFGS-B step search.
+init raw scores and the L-BFGS-B step search.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from spark_ensemble_spark.boosting.gbm_params import RAW, GBMEstimator, GBMParams
-from spark_ensemble_spark.boosting.losses import LogLoss, classification_loss
+from spark_ensemble_spark.boosting.losses import classification_loss
 from spark_ensemble_spark.core.base import (
     ClassifierParams,
     EnsembleClassificationModel,
@@ -105,22 +105,8 @@ class GBMClassifier(GBMEstimator, _GBMClassifierParams):
             num_features=num_features,
         )
 
-    def _directions(self, gl):
-        label, raw = F.col("label"), F.col(RAW)
-        if isinstance(gl, LogLoss):
-            grad = gl.gradient_arr(label, raw)
-            hess = gl.hessian_arr(label, raw)
-            return (
-                [-F.element_at(grad, j + 1) for j in range(gl.dim)],
-                [F.element_at(hess, j + 1) for j in range(gl.dim)],
-            )
-        y, p = gl.encode_label(label), F.element_at(raw, 1)
-        return [-gl.gradient(y, p)], [gl.hessian(y, p)] if gl.has_hessian else None
-
-    def _row_loss(self, gl) -> Column:
-        if isinstance(gl, LogLoss):
-            return gl.loss_arr(F.col("label"), F.col(RAW))
-        return gl.loss(gl.encode_label(F.col("label")), F.element_at(RAW, 1))
+    def _raw_score(self, j: int) -> str:
+        return f"element_at({RAW}, {j + 1})"
 
     def _raw_advance(self, weights: List[float], dirs: List[str]) -> Column:
         steps = F.array(*[F.lit(w) * F.col(d) for w, d in zip(weights, dirs)])
@@ -128,93 +114,15 @@ class GBMClassifier(GBMEstimator, _GBMClassifierParams):
 
     def _step_search(self, gl, bag: DataFrame, dirs: List[str]) -> List[float]:
         """Bound-constrained step-size optimization (reference breeze LBFGSB,
-        ``GBMClassifier.scala:290-292,413-431``), evaluated Spark-side.
-
-        r6 plan shape (measured 28s → ~7s of line search per sf0.1 fit, same
-        fitted quality):
-
-        * **Scalar-unrolled loss/grad expressions.** ``zip_with`` /
-          ``aggregate`` higher-order functions are CodegenFallback —
-          interpreted per row, no whole-stage codegen — so the array-typed
-          softmax cost ~1.1s per 600k-row evaluation. The line search
-          unrolls ``newp_j = raw[j] + x_j·dir_j`` and the logsumexp into
-          plain scalar arithmetic (``element_at`` indexing is codegen-able;
-          dim ≤ num_classes keeps the tree small).
-        * **The whole Armijo backtracking ladder is ONE batched agg** (the
-          sequential version burned up to 12 sequential aggs inside a
-          single backtracking loop), plus one gradient agg at the accepted
-          point, with Barzilai-Borwein step sizing cutting the outer
-          iteration count (see ``minimize_nonneg_batched``).
-
-        DELIBERATE DEVIATION: loss and gradient are instance-WEIGHTED
-        (Σ w·f / Σ w), while the reference's GBMLossAggregator accumulates
-        unweighted and divides by weightSum — step sizes differ when
-        weightCol is set (same convention as GBMRegressor's line search)."""
-        dim = gl.dim
-        label, w = F.col("label"), F.col("weight")
-
-        def newp_scalars(x):
-            return [
-                F.element_at(RAW, j + 1) + F.lit(float(x[j])) * F.col(dirs[j])
-                for j in range(dim)
-            ]
-
-        def loss_terms(x):
-            """(loss_expr, per-class probability exprs) at step vector x —
-            all scalar arithmetic, fully inside whole-stage codegen."""
-            newp = newp_scalars(x)
-            if isinstance(gl, LogLoss):
-                mx = F.greatest(*newp) if dim > 1 else newp[0]
-                lse = mx + F.log(
-                    sum((F.exp(p - mx) for p in newp[1:]), F.exp(newp[0] - mx))
-                )
-                py = F.when(label == 0, newp[0])
-                for j in range(1, dim):
-                    py = py.when(label == j, newp[j])
-                probs = [F.exp(p - lse) for p in newp]
-                return lse - py.otherwise(F.lit(0.0)), probs
-            y = gl.encode_label(label)
-            return gl.loss(y, newp[0]), None
-
-        def grad_sums(x, probs):
-            """Gradient sum expressions at step vector x."""
-            if isinstance(gl, LogLoss):
-                # ∂loss/∂p_j = softmax_j − 1[label=j]
-                return [
-                    F.sum(w * F.col(dirs[j]) * (probs[j] - (label == j).cast("double")))
-                    for j in range(dim)
-                ]
-            y = gl.encode_label(label)
-            return [F.sum(w * F.col(dirs[0]) * gl.gradient(y, newp_scalars(x)[0]))]
-
-        def sums(points, with_grad: bool):
-            """ONE agg returning the mean loss at every point and, with
-            ``with_grad``, the mean gradient at ``points[0]`` (the reference
-            GBMLossAggregator's one-pass loss+grad trick,
-            GBMLoss.scala:34-76): BB step sizing accepts rung 0 almost
-            always, so the common-case line-search iteration pays a single
-            full-frame pass instead of ladder-agg + gradient-agg. Every
-            optimizer evaluation is built here, so the loss and gradient
-            expressions are the same in each of them."""
-            terms = [loss_terms(x) for x in points]
-            cols = [F.sum(w).alias("sw")]
-            cols += [F.sum(w * t[0]).alias(f"l{i}") for i, t in enumerate(terms)]
-            if with_grad:
-                cols += [
-                    e.alias(f"g{j}")
-                    for j, e in enumerate(grad_sums(points[0], terms[0][1]))
-                ]
-            row = bag.agg(*cols).first()
-            sw = row["sw"] or 1.0
-            n = len(points)
-            losses = [(row[1 + i] or 0.0) / sw for i in range(n)]
-            grad = [(row[1 + n + j] or 0.0) / sw for j in range(dim)] if with_grad else None
-            return losses, grad
-
+        ``GBMClassifier.scala:290-292,413-431``), evaluated Spark-side: the
+        whole Armijo backtracking ladder is ONE batched aggregate, which also
+        returns the gradient at its first rung, and Barzilai-Borwein step
+        sizing cuts the outer iteration count (see
+        ``minimize_nonneg_batched``)."""
         return minimize_nonneg_batched(
-            lambda points: sums(points, False)[0],
-            lambda points: sums(points, True),
-            [1.0] * dim,
+            lambda points: self._step_sums(gl, bag, dirs, points)[0],
+            lambda points: self._step_sums(gl, bag, dirs, points, with_grad=True),
+            [1.0] * gl.dim,
             min(self.getOrDefault(self.maxIter), 15),
             self.getOrDefault(self.tol),
         )
@@ -266,9 +174,9 @@ class GBMClassificationModel(HasMembers, EnsembleClassificationModel, _GBMClassi
             raw = F.array(*comp)
         return df, raw, tmp
 
-    def _probability_from_raw(self, raw: Column) -> Column:
+    def _probability_from_raw(self, raw: str) -> Column:
         gl = classification_loss(self.getLoss(), self.numClasses)
-        return gl.raw_to_probability(raw, self.numClasses)
+        return F.expr(gl.link([f"element_at({raw}, {j + 1})" for j in range(self.dim)]))
 
     # ``models`` is one list of ``dim`` members per round; on disk it is the
     # flat ``model-$i`` sequence, round-major.

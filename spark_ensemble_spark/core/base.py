@@ -232,7 +232,8 @@ class EnsembleClassificationModel(EnsembleModel, ClassifierParams):
     def _raw_array_setup(self, df: DataFrame) -> Tuple[DataFrame, Column, List[str]]:
         raise NotImplementedError
 
-    def _probability_from_raw(self, raw: Column) -> Column:
+    def _probability_from_raw(self, raw: str) -> Column:
+        """The probability array from the raw array column named ``raw``."""
         raise NotImplementedError
 
     def _transform(self, df: DataFrame) -> DataFrame:
@@ -241,7 +242,7 @@ class EnsembleClassificationModel(EnsembleModel, ClassifierParams):
         raw_col = "__ens_raw"
         df = df.withColumn(raw_col, raw)
         tmp = list(tmp) + [raw_col]
-        prob = self._probability_from_raw(F.col(raw_col))
+        prob = self._probability_from_raw(raw_col)
         prob_col = "__ens_prob"
         df = df.withColumn(prob_col, prob)
         tmp.append(prob_col)

@@ -167,8 +167,10 @@ class BoostingEstimator(EnsembleEstimator):
     through one :class:`DFIterationCache`. Every round normalises it by the
     last ``sum(__bw)`` to ``__wnorm``, fits a member on that weight, and
     hands the member, the state and the cache to the twin's round function,
-    which returns a :data:`RoundResult`. A next state is cached and summed
-    before the next round, also when the round ends the fit.
+    which returns a :data:`RoundResult`. The round function caches its
+    scored frame, the round's one cached frame; the next state is a
+    projection of it, summed before the next round, also when the round ends
+    the fit.
     """
 
     def _reweight(
@@ -210,7 +212,7 @@ class BoostingEstimator(EnsembleEstimator):
                     i, estimator_error=error, estimator_weight=weight, sum_weights=sum_weights
                 )
                 if next_state is not None:
-                    state = cache.update(next_state)
+                    state = next_state
                     sum_weights = state.agg(F.sum("__bw")).first()[0] or 0.0
                 if stop is not None:
                     stop_reason = stop

@@ -15,10 +15,9 @@ Semantic parity with
 
 The round itself is the GBM family's shared
 :class:`~spark_ensemble_spark.boosting.gbm_params.GBMEstimator` loop; this
-module holds the init model, the per-round huber δ, the loss expressions and
-the step search, which evaluates a whole grid of step sizes in ONE
-whole-stage-codegen'd ``agg`` per pass (the reference pays an
-``RDDLossFunction`` pass per evaluation).
+module holds the init model, the per-round huber δ and the step search, which
+evaluates a whole grid of step sizes in ONE whole-stage-codegen'd aggregate per
+pass (the reference pays an ``RDDLossFunction`` pass per evaluation).
 """
 
 from __future__ import annotations
@@ -125,53 +124,17 @@ class GBMRegressor(GBMEstimator, _GBMRegressorParams):
         delta = self._quantile(state, F.abs(F.col("label") - F.col(RAW)))
         return regression_loss("huber", self.getAlpha(), quantile_delta=delta)
 
-    def _directions(self, gl: GBMLoss):
-        label, raw = F.col("label"), F.col(RAW)
-        return [gl.neg_gradient(label, raw)], [gl.hessian(label, raw)] if gl.has_hessian else None
-
-    def _row_loss(self, gl: GBMLoss) -> Column:
-        return gl.loss(F.col("label"), F.col(RAW))
+    def _raw_score(self, j: int) -> str:
+        return RAW
 
     def _step_search(self, gl: GBMLoss, bag: DataFrame, dirs: List[str]) -> List[float]:
         """Brent's line search of the step in [0, 100] as batched grid
-        refinement: ONE agg evaluates every candidate of a grid."""
-        (d,) = dirs
-
-        def objective_batch(xs):
-            # DELIBERATE DEVIATION from the reference: the objective is the
-            # WEIGHTED mean loss Σ(w·loss)/Σw, while GBMLossAggregator
-            # accumulates loss unweighted and divides by weightSum — so step
-            # sizes differ from the reference when weightCol is set. Weighted
-            # is the consistent choice (the gradient the base learner fits is
-            # weighted the same way).
-            if gl.loss_sql("label", RAW) is not None:
-                # one selectExpr builds the whole grid in a single Py4J
-                # roundtrip (the Column form costs ~10 roundtrips per operator
-                # per candidate — measured ~25% of the fit's wall clock); the
-                # SQL mirrors parse to the same expressions
-                exprs = ["sum(weight) AS sw"] + [
-                    "sum(weight * ({})) AS l{}".format(
-                        gl.loss_sql("label", f"{RAW} + CAST('{float(x)!r}' AS DOUBLE) * {d}"),
-                        k,
-                    )
-                    for k, x in enumerate(xs)
-                ]
-                row = bag.selectExpr(*exprs).first()
-            else:
-                row = bag.agg(
-                    F.sum("weight").alias("sw"),
-                    *[
-                        F.sum(
-                            F.col("weight")
-                            * gl.loss(F.col("label"), F.col(RAW) + F.lit(float(x)) * F.col(d))
-                        ).alias(f"l{k}")
-                        for k, x in enumerate(xs)
-                    ],
-                ).first()
-            sw = row["sw"] or 1.0
-            return [(row[k + 1] or 0.0) / sw for k in range(len(xs))]
-
-        return [minimize_scalar_batched(objective_batch, 0.0, 100.0)]
+        refinement: ONE selectExpr evaluates every candidate of a grid."""
+        return [
+            minimize_scalar_batched(
+                lambda xs: self._step_sums(gl, bag, dirs, [[x] for x in xs])[0], 0.0, 100.0
+            )
+        ]
 
     def _raw_advance(self, weights: List[float], dirs: List[str]) -> Column:
         return F.col(RAW) + F.lit(weights[0]) * F.col(dirs[0])

@@ -119,8 +119,9 @@ def make_frames(spark):
     }
 
 
-# Subsampled and subspaced GBM fits, whose step search reads each round's
-# re-drawn bag: name -> (estimator factory, training frame).
+# GBM fits beyond ESTIMATORS: subsampled and subspaced ones, whose step
+# search reads each round's re-drawn bag, and one optimized fit for each loss
+# that no other pin fits: name -> (estimator factory, training frame).
 BAGGED_GBM = {
     "GBMClassifier(3-class, newton, bagged)": (
         lambda: GBMClassifier(
@@ -154,6 +155,28 @@ BAGGED_GBM = {
             updates="newton",
         ),
         "reg",
+    ),
+    **{
+        f"GBMRegressor({loss})": (
+            lambda loss=loss: GBMRegressor(
+                baseLearner=DecisionTreeRegressor(maxDepth=2),
+                numBaseLearners=2,
+                loss=loss,
+                optimizedWeights=True,
+                seed=3,
+            ),
+            "reg",
+        )
+        for loss in ("absolute", "quantile", "logcosh", "scaledlogcosh")
+    },
+    "GBMClassifier(exponential)": (
+        lambda: GBMClassifier(
+            baseLearner=DecisionTreeRegressor(maxDepth=2),
+            numBaseLearners=2,
+            loss="exponential",
+            optimizedWeights=True,
+        ),
+        "bin",
     ),
 }
 
@@ -467,6 +490,50 @@ FITTED_VALUES = {
         },
         151.78093838889953,
     ),
+    # the rest of BAGGED_GBM, captured before each loss was written once
+    "GBMRegressor(absolute)": (
+        {
+            "numFeatures": 4,
+            "subspaces": [[0, 1, 2, 3], [0, 1, 2, 3]],
+            "weights": [3.003173828125, 1.934814453125],
+        },
+        156.16083984375,
+    ),
+    "GBMRegressor(quantile)": (
+        {
+            "numFeatures": 4,
+            "subspaces": [[0, 1, 2, 3], [0, 1, 2, 3]],
+            "weights": [3.955078125, 7.03125],
+        },
+        485.74453124999985,
+    ),
+    "GBMRegressor(logcosh)": (
+        {
+            "numFeatures": 4,
+            "subspaces": [[0, 1, 2, 3], [0, 1, 2, 3]],
+            "weights": [3.61328125, 2.201904296875],
+        },
+        143.47105232160723,
+    ),
+    "GBMRegressor(scaledlogcosh)": (
+        {
+            "numFeatures": 4,
+            "subspaces": [[0, 1, 2, 3], [0, 1, 2, 3]],
+            "weights": [6.689453125, 8.8623046875],
+        },
+        335.04975297108825,
+    ),
+    "GBMClassifier(exponential)": (
+        {
+            "dim": 1,
+            "initRaw": [0.6007738604289304],
+            "numClasses": 2,
+            "numFeatures": 4,
+            "subspaces": [[0, 1, 2, 3], [0, 1, 2, 3]],
+            "weights": [[1.262335867092154], [2.2202071416617644]],
+        },
+        60.0,
+    ),
 }
 
 
@@ -680,7 +747,8 @@ def test_optimized_gbm_classifier_values_are_pinned(fitted):
 @pytest.mark.parametrize("key", sorted(BAGGED_GBM))
 def test_bagged_gbm_values_are_pinned(fitted, key):
     """Each round's step search reads exactly the rows its members were fit
-    on, so subsampled, subspaced fits keep their step sizes."""
+    on, so subsampled, subspaced fits keep their step sizes; and each loss
+    keeps its fitted values."""
     frames, _ = fitted
     make, kind = BAGGED_GBM[key]
     _check_fitted_values(make().fit(frames[kind]), frames[kind], key)
@@ -736,10 +804,13 @@ def test_fit_without_members_fails(fitted, name):
         est.fit(frames[_kind(name)])
 
 
-@pytest.mark.parametrize("name", ["GBMRegressor", "BoostingRegressor"])
+@pytest.mark.parametrize(
+    "name", ["GBMRegressor", "BoostingRegressor", "GBMClassifier", "BoostingClassifier"]
+)
 def test_checkpoint_interval_minus_one_never_truncates(fitted, monkeypatch, name):
     """``checkpointInterval=-1`` disables lineage truncation, as in Spark ML:
-    the fit persists its states and checkpoints none of them."""
+    the fit persists its states and checkpoints none of them. At interval 1
+    every cached frame is a checkpoint: the first state and one a round."""
     frames, _ = fitted
     frame_cls = type(frames["reg"])  # the session's DataFrame implementation
     calls = []
@@ -751,6 +822,9 @@ def test_checkpoint_interval_minus_one_never_truncates(fitted, monkeypatch, name
             return _real(self, *args, **kwargs)
 
         monkeypatch.setattr(frame_cls, method, counting)
-    est = ESTIMATORS[name][0]().setNumBaseLearners(3).setCheckpointInterval(-1)
-    assert est.fit(frames["reg"]).numModels == 3
-    assert calls == []
+    rounds = 3
+    for interval, truncations in ((-1, 0), (1, 1 + rounds)):
+        calls.clear()
+        est = ESTIMATORS[name][0]().setNumBaseLearners(rounds).setCheckpointInterval(interval)
+        assert est.fit(frames[_kind(name)]).numModels == rounds
+        assert len(calls) == truncations, f"checkpointInterval={interval}"

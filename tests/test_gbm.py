@@ -21,6 +21,7 @@ from spark_ensemble_spark.boosting.losses import (
     ExponentialLoss,
     HuberLoss,
     LogCoshLoss,
+    LogLoss,
     QuantileLoss,
     ScaledLogCoshLoss,
     SquaredLoss,
@@ -36,6 +37,28 @@ from spark_ensemble_spark.sources.datasets import multiclass_dataset, regression
 # ---- gradient checking (reference GBMLossSuite.scala:84-125) ---------------
 
 
+def _finite_difference_frame(spark, loss, rows, eps):
+    """One selectExpr of the loss's own expressions, the ones a fit runs,
+    over ``rows`` of (label, p0, …): per dim j, the loss at p ± eps·e_j, the
+    gradient and, with a hessian, gradient j at p ± eps·e_j and hessian j."""
+    cols = [f"p{j}" for j in range(loss.dim)]
+    y = loss.encode_label("label")
+    hessians = loss.hessian(y, cols)
+
+    def moved(j, sign):
+        step = f"{sign} CAST('{eps!r}' AS DOUBLE)"
+        return [f"{c} {step}" if k == j else c for k, c in enumerate(cols)]
+
+    exprs = [f"({g}) AS g{j}" for j, g in enumerate(loss.gradient(y, cols))]
+    for j in range(loss.dim):
+        steps = (("+", "p"), ("-", "m"))
+        exprs += [f"({loss.loss(y, moved(j, s))}) AS l{n}{j}" for s, n in steps]
+        if hessians is not None:
+            exprs += [f"({loss.gradient(y, moved(j, s))[j]}) AS g{n}{j}" for s, n in steps]
+            exprs.append(f"({hessians[j]}) AS h{j}")
+    return spark.createDataFrame(rows, ["label", *cols]).selectExpr(*exprs)
+
+
 @pytest.mark.parametrize(
     "loss",
     [
@@ -47,18 +70,20 @@ from spark_ensemble_spark.sources.datasets import multiclass_dataset, regression
         QuantileLoss(0.3),
         ExponentialLoss(),
         BernoulliLoss(),
+        LogLoss(3),
     ],
     ids=lambda l: type(l).__name__,
 )
-def test_gradient_finite_difference(loss):
+def test_gradient_finite_difference(spark, loss):
+    """The central difference of each loss, evaluated by Spark, matches its
+    gradient, and that of the gradient its hessian (per dim for logloss)."""
     rng = random.Random(42)
     eps = 1e-6
-    checked = 0
+    rows = []
     for _ in range(500):
         y = rng.gauss(0, 1)
-        p = rng.gauss(0, 1)
-        if isinstance(loss, (ExponentialLoss, BernoulliLoss)):
-            y = 1.0 if y > 0 else -1.0  # encoded margin labels
+        ps = [rng.gauss(0, 1) for _ in range(loss.dim)]
+        p = ps[0]
         # skip non-differentiable kinks
         if isinstance(loss, (AbsoluteLoss, QuantileLoss)) and abs(y - p) < 1e-4:
             continue
@@ -66,14 +91,20 @@ def test_gradient_finite_difference(loss):
             continue
         if isinstance(loss, ScaledLogCoshLoss) and abs(y - p) < 1e-4:
             continue
-        num = (loss.loss_py(y, p + eps) - loss.loss_py(y, p - eps)) / (2 * eps)
-        ana = loss.gradient_py(y, p)
-        assert num == pytest.approx(ana, abs=1e-4), f"y={y} p={p}"
-        if loss.has_hessian:
-            numh = (loss.gradient_py(y, p + eps) - loss.gradient_py(y, p - eps)) / (
-                2 * eps
-            )
-            assert numh == pytest.approx(loss.hessian_py(y, p), abs=1e-4)
+        if isinstance(loss, (ExponentialLoss, BernoulliLoss)):
+            y = 1.0 if y > 0 else 0.0  # encoded to the margin label ±1
+        elif isinstance(loss, LogLoss):
+            y = float(sum(y > t for t in (-0.43, 0.43)))  # 3 classes of ~1/3 each
+        rows.append((y, *ps))
+    checked = 0
+    for row in _finite_difference_frame(spark, loss, rows, eps).collect():
+        r = row.asDict()
+        for j in range(loss.dim):
+            num = (r[f"lp{j}"] - r[f"lm{j}"]) / (2 * eps)
+            assert num == pytest.approx(r[f"g{j}"], abs=1e-4), f"{r} dim {j}"
+            if f"h{j}" in r:
+                numh = (r[f"gp{j}"] - r[f"gm{j}"]) / (2 * eps)
+                assert numh == pytest.approx(r[f"h{j}"], abs=1e-4), f"{r} dim {j}"
         checked += 1
     assert checked > 400
 
