@@ -38,10 +38,13 @@ from spark_ensemble_spark.core.params import (
 )
 from spark_ensemble_spark.core.subbag import draw_subspace, sample_bag, slice_features
 from spark_ensemble_spark.core.utils import DFIterationCache, fit_base_learner, run_parallel
+from spark_ensemble_spark.functions.detmath import double_literal_sql
 
-# The running raw score of a GBM fit's state: a double for the regressor, an
-# array of ``dim`` doubles for the classifier.
-RAW = "__raw"
+
+def raw_columns(dim: int) -> List[str]:
+    """The running raw scores of a GBM fit's state, one double per dim."""
+    return [f"__raw{j}" for j in range(dim)]
+
 
 _UPDATES = ("gradient", "newton")
 
@@ -209,18 +212,17 @@ class EarlyStopping:
 class GBMEstimator(EnsembleEstimator):
     """The GBM twins' fit: :meth:`_boost` runs the one boosting round.
 
-    The state is the training instances plus the running raw score
-    :data:`RAW`. The round reads its loss through :meth:`_directions`,
-    :meth:`_row_loss` and :meth:`_step_sums`, generic over the loss's
-    ``dim``. A twin supplies these hooks:
+    The state is the training instances plus the running raw scores
+    :func:`raw_columns`, one double per dim, each advanced by its member's
+    output ``__dir{j}`` times its weight. The round reads its loss through
+    :meth:`_directions`, :meth:`_row_loss` and :meth:`_step_sums`, generic
+    over the loss's ``dim``. A twin supplies these hooks:
 
-    * ``_raw_score(j)``: the SQL text of raw score ``j`` of :data:`RAW`;
     * ``_round_loss(gl, state)``: the loss of the round about to run (the
       regressor re-estimates huber's δ); ``gl`` unchanged by default;
     * ``_step_search(gl, bag, dirs)``: ``dim`` step sizes for the members'
       outputs ``dirs`` over the rows they were fit on, found by the twin's
-      optimizer over :meth:`_step_sums`;
-    * ``_raw_advance(weights, dirs)``: the next raw score.
+      optimizer over :meth:`_step_sums`.
     """
 
     def _split_instances(self, df: DataFrame) -> Tuple[DataFrame, Optional[DataFrame]]:
@@ -242,10 +244,10 @@ class GBMEstimator(EnsembleEstimator):
     ) -> List[str]:
         """The ``dim`` raw scores as SQL text, each advanced by
         ``point[j]·dirs[j]`` when a step ``point`` is given."""
-        ps = [self._raw_score(j) for j in range(dim)]
+        ps = raw_columns(dim)
         if point is None:
             return ps
-        return [f"{p} + CAST('{float(x)!r}' AS DOUBLE) * {d}" for p, x, d in zip(ps, point, dirs)]
+        return [f"{p} + {double_literal_sql(float(x))} * {d}" for p, x, d in zip(ps, point, dirs)]
 
     def _directions(self, gl: GBMLoss) -> Tuple[List[Column], Optional[List[Column]]]:
         """``dim`` negative-gradient expressions, and ``dim`` hessian
@@ -325,6 +327,7 @@ class GBMEstimator(EnsembleEstimator):
         learning_rate = self.getLearningRate()
         seed = self.getOrDefault(self.seed)
         dim = gl.dim
+        raws = raw_columns(dim)
         dirs = [f"__dir{j}" for j in range(dim)]
         num_features = get_num_features(train, FEATURES)
 
@@ -387,7 +390,7 @@ class GBMEstimator(EnsembleEstimator):
 
                 # The round's only cached frame: every member scored once.
                 scored = cache.update(
-                    score(state, subspace, members).select(LABEL, WEIGHT, FEATURES, RAW, *dirs)
+                    score(state, subspace, members).select(LABEL, WEIGHT, FEATURES, *raws, *dirs)
                 )
                 if self.getOptimizedWeights():
                     own_bag = sample_bag(
@@ -402,10 +405,13 @@ class GBMEstimator(EnsembleEstimator):
                 models.append(members)
                 subspaces.append(list(subspace))
                 weights.append(iweights)
-                raw = self._raw_advance(iweights, dirs).alias(RAW)
-                state = scored.select(LABEL, WEIGHT, FEATURES, raw)
+                advanced = [
+                    (F.col(r) + F.lit(w) * F.col(d)).alias(r)
+                    for r, w, d in zip(raws, iweights, dirs)
+                ]
+                state = scored.select(LABEL, WEIGHT, FEATURES, *advanced)
                 val_error = stop.update(
-                    lambda vs: score(vs, subspace, members).select(LABEL, WEIGHT, FEATURES, raw),
+                    lambda vs: score(vs, subspace, members).select(LABEL, WEIGHT, FEATURES, *advanced),
                     lambda: self._row_loss(gl),
                 )
                 instr.iteration(

@@ -5,24 +5,23 @@ Semantic parity with
 Every method returns SQL text over SQL text arguments: ``y``, the encoded
 label, and ``ps``, its ``dim`` raw scores. A loss gives ``encode_label``,
 ``loss`` (one expression), ``gradient`` and ``hessian`` (one per dim; None for
-a loss without a hessian); classification losses add ``link``, the
-probability array at scoring.
+a loss without a hessian); classification losses add ``link``, the K
+class probabilities at scoring.
 
 A fit takes the Column forms with ``F.expr``; the step search puts the text
 straight into ONE ``selectExpr`` of every candidate (composing Columns costs
 ~10 Py4J roundtrips per operator per candidate, measured as ~25% of a GBM
 fit's wall clock). Every literal is a double (``2.0D``, ``CAST('<repr>' AS
-DOUBLE)``): a bare ``2.0`` is a DECIMAL in Spark SQL.
+DOUBLE)`` from ``double_literal_sql``): a bare ``2.0`` is a DECIMAL in Spark
+SQL.
 """
 
 from __future__ import annotations
 
 from typing import List, Optional, Sequence
 
-
-def _double(v: float) -> str:
-    """A SQL literal that parses to exactly the double ``v``."""
-    return f"CAST('{float(v)!r}' AS DOUBLE)"
+from spark_ensemble_spark.core.utils import softmax
+from spark_ensemble_spark.functions.detmath import double_literal_sql as _double
 
 
 class GBMLoss:
@@ -147,16 +146,16 @@ class QuantileLoss(ScalarLoss):
 
 class MarginLoss(ScalarLoss):
     """A binary margin loss: labels encoded 2y−1 (``GBMLoss.scala:272-273,
-    297-298``). Its ``link`` reads the FIRST component of the binary raw
-    array (−r, r), as the reference does; prediction uses argmax(raw) and is
+    297-298``). Its ``link`` reads the FIRST of the binary raw scores
+    (−r, r), as the reference does; prediction uses argmax(raw) and is
     unaffected."""
 
     def encode_label(self, label):
         return f"2.0D * ({label}) - 1.0D"
 
-    def link(self, ps: Sequence[str]) -> str:
+    def link(self, ps: Sequence[str]) -> List[str]:
         p1 = self._positive(f"({ps[0]})")
-        return f"array(1.0D - {p1}, {p1})"
+        return [f"1.0D - {p1}", p1]
 
 
 class ExponentialLoss(MarginLoss):
@@ -205,18 +204,9 @@ class LogLoss(GBMLoss):
     def __init__(self, num_classes: int) -> None:
         self.dim = int(num_classes)
 
-    @staticmethod
-    def _softmax(ps: Sequence[str]):
-        """(max, Σ_j exp(p_j − max), [exp(p_j − max) / Σ])."""
-        ps = [f"({p})" for p in ps]
-        m = f"greatest({', '.join(ps)})" if len(ps) > 1 else ps[0]
-        exps = [f"exp({p} - {m})" for p in ps]
-        total = f"({' + '.join(exps)})"
-        return m, total, [f"{e} / {total}" for e in exps]
-
     def loss(self, y, ps):
         """logsumexp(p) − p[label]."""
-        m, total, _ = self._softmax(ps)
+        m, total, _ = softmax(ps)
         py = " ".join(f"WHEN ({y}) = {j} THEN ({p})" for j, p in enumerate(ps))
         return f"({m} + ln({total})) - (CASE {py} ELSE 0.0D END)"
 
@@ -224,14 +214,14 @@ class LogLoss(GBMLoss):
         """softmax(p)_j − 1[j = label]."""
         return [
             f"{s} - CASE WHEN ({y}) = {j} THEN 1.0D ELSE 0.0D END"
-            for j, s in enumerate(self._softmax(ps)[2])
+            for j, s in enumerate(softmax(ps)[2])
         ]
 
     def hessian(self, y, ps):
-        return [f"{s} * (1.0D - {s})" for s in self._softmax(ps)[2]]
+        return [f"{s} * (1.0D - {s})" for s in softmax(ps)[2]]
 
-    def link(self, ps: Sequence[str]) -> str:
-        return f"array({', '.join(self._softmax(ps)[2])})"
+    def link(self, ps: Sequence[str]) -> List[str]:
+        return softmax(ps)[2]
 
 
 def regression_loss(name: str, alpha: float, quantile_delta: Optional[float] = None) -> GBMLoss:

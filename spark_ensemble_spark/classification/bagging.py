@@ -5,19 +5,23 @@ Semantic parity with
 hard vote = sum of one-hot predicted classes; soft vote = sum of base
 ``probability`` vectors; probability = raw / numModels; prediction = argmax.
 
-Votes are combined as array-column expressions (one K-vector per model via
-``F.transform`` over a class-index sequence, summed with ``zip_with``) — all
-JVM-side, no per-row Python. The fit is the bagging family's shared
+Votes are combined per class, one scalar expression each: the hard vote of
+class c is ``Σ_i CASE WHEN p_i = c THEN 1 ELSE 0 END``, the soft vote
+``Σ_i a_i[c]`` over each member's probability array ``a_i``, projected once.
+All of it is JVM-side and whole-stage-codegen'd, with no per-row Python. The
+fit is the bagging family's shared
 :func:`~spark_ensemble_spark.core.subbag.fit_bagged_models`; this twin adds
 the class count and the vote.
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import List, Optional, Sequence
 
 from pyspark.ml.functions import vector_to_array
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_ensemble_spark.core.base import (
@@ -30,7 +34,7 @@ from spark_ensemble_spark.core.base import (
 from spark_ensemble_spark.core.instances import get_num_classes
 from spark_ensemble_spark.core.params import BaggingParams, HasVotingStrategy
 from spark_ensemble_spark.core.subbag import fit_bagged_models
-from spark_ensemble_spark.core.utils import scale_array, sum_arrays
+from spark_ensemble_spark.functions.detmath import double_literal_sql
 
 
 class _BaggingClassifierParams(ClassifierParams, BaggingParams, HasVotingStrategy):
@@ -65,9 +69,8 @@ class BaggingClassificationModel(
         self.models = list(models or [])
         self.numFeatures = int(num_features)
 
-    def _raw_array_setup(self, df: DataFrame):
-        voting = self.getVotingStrategy()
-        want_probability = voting == "soft"
+    def _raw_scores(self, df: DataFrame):
+        soft = self.getVotingStrategy() == "soft"
         df, outs, tmp = score_base_models(
             df,
             self.getFeaturesCol(),
@@ -75,26 +78,25 @@ class BaggingClassificationModel(
             self.subspaces,
             self.numFeatures,
             prefix="__bag_",
-            want_probability=want_probability,
+            want_probability=soft,
         )
-        votes = []
-        for o in outs:
-            if voting == "soft":
-                if "probability" not in o:
-                    raise ValueError(
-                        "votingStrategy='soft' requires probabilistic base learners"
-                    )
-                votes.append(vector_to_array(F.col(o["probability"])))
-            else:
-                pred = F.col(o["prediction"])
-                classes = F.sequence(F.lit(0), F.lit(self.numClasses - 1))
-                votes.append(
-                    F.transform(
-                        classes,
-                        lambda c: F.when(pred == c.cast("double"), 1.0).otherwise(0.0),
-                    )
-                )
-        return df, sum_arrays(votes), tmp
+        if soft:
+            if any("probability" not in o for o in outs):
+                raise ValueError("votingStrategy='soft' requires probabilistic base learners")
+            # each member's probability vector as an array, projected once
+            arrays = [f"__bag_a{i}" for i in range(len(outs))]
+            df = df.select(
+                "*",
+                *[vector_to_array(F.col(o["probability"])).alias(a) for o, a in zip(outs, arrays)],
+            )
+            tmp += arrays
+            votes = [[F.element_at(a, c + 1) for a in arrays] for c in range(self.numClasses)]
+        else:
+            votes = [
+                [F.when(F.col(o["prediction"]) == float(c), 1.0).otherwise(0.0) for o in outs]
+                for c in range(self.numClasses)
+            ]
+        return df, [reduce(operator.add, v) for v in votes], tmp
 
-    def _probability_from_raw(self, raw: str) -> Column:
-        return scale_array(F.col(raw), F.lit(1.0 / self.numModels))
+    def _probabilities(self, raw: List[str]) -> List[str]:
+        return [f"{r} * {double_literal_sql(1.0 / self.numModels)}" for r in raw]

@@ -12,10 +12,10 @@ Semantic parity with
   boosting stops; decision = Σ wᵢ (one-hot ± 1/(K−1)).
 * probability = softmax(raw / (K−1)).
 
-All per-row math is array-column expressions over the base models'
-probability/prediction columns. The reweighting loop (the ``__bw`` weight
-column, its per-round normalisation, caching and instrumentation) is the
-AdaBoost family's shared
+All per-row math is per class: each class's raw score and probability is
+one scalar expression over the base models' probability/prediction columns.
+The reweighting loop (the ``__bw`` weight column, its per-round
+normalisation, caching and instrumentation) is the AdaBoost family's shared
 :class:`~spark_ensemble_spark.core.families.BoostingEstimator`; this twin
 supplies the SAMME and SAMME.R rounds. A round with no weighted error ends the
 fit after its weight update.
@@ -24,7 +24,9 @@ fit after its weight update.
 from __future__ import annotations
 
 import math
-from typing import Optional, Sequence
+import operator
+from functools import reduce
+from typing import List, Optional, Sequence
 
 from pyspark.ml.functions import vector_to_array
 from pyspark.ml.param import Param, Params, TypeConverters
@@ -40,7 +42,8 @@ from spark_ensemble_spark.core.base import (
 from spark_ensemble_spark.core.families import BoostingEstimator, RoundResult
 from spark_ensemble_spark.core.instances import get_num_classes
 from spark_ensemble_spark.core.params import BoostingParams, one_of
-from spark_ensemble_spark.core.utils import EPSILON, scale_array, softmax_array, sum_arrays
+from spark_ensemble_spark.core.utils import EPSILON, softmax
+from spark_ensemble_spark.functions.detmath import double_literal_sql
 
 _ALGORITHMS = ("real", "discrete")
 
@@ -62,18 +65,14 @@ class _BoostingClassifierParams(ClassifierParams, BoostingParams):
 
 
 def _samme_r_loss_expr(prob_arr: Column, label: Column, num_classes: int) -> Column:
-    """Σ_c code_c · log(max(p_c, ε)) with code_c = 1 / −1/(K−1)."""
+    """Σ_c code_c · log(max(p_c, ε)) with code_c = 1 / −1/(K−1), summed
+    from 0.0 in class order."""
     k = num_classes
-    idx = F.sequence(F.lit(0), F.lit(k - 1))
-    return F.aggregate(
-        idx,
-        F.lit(0.0),
-        lambda acc, c: acc
-        + F.when(label == c.cast("double"), F.lit(1.0)).otherwise(
-            F.lit(-1.0 / (k - 1))
-        )
-        * F.log(F.greatest(F.element_at(prob_arr, c + 1), F.lit(EPSILON))),
-    )
+    loss = F.lit(0.0)
+    for c in range(k):
+        code = F.when(label == float(c), F.lit(1.0)).otherwise(F.lit(-1.0 / (k - 1)))
+        loss = loss + code * F.log(F.greatest(F.element_at(prob_arr, c + 1), F.lit(EPSILON)))
+    return loss
 
 
 class BoostingClassifier(BoostingEstimator, _BoostingClassifierParams):
@@ -155,8 +154,8 @@ class BoostingClassificationModel(
         self.models = list(models or [])
         self.numFeatures = int(num_features)
 
-    def _raw_array_setup(self, df: DataFrame):
-        algorithm = self.getAlgorithm()
+    def _raw_scores(self, df: DataFrame):
+        real = self.getAlgorithm() == "real"
         k = self.numClasses
         df, outs, tmp = score_base_models(
             df,
@@ -165,35 +164,39 @@ class BoostingClassificationModel(
             None,
             self.numFeatures,
             prefix="__boost_",
-            want_probability=(algorithm == "real"),
+            want_probability=real,
         )
-        contribs = []
-        for o, w in zip(outs, self.weights):
-            if algorithm == "real":
-                # (K−1)(log p_c − mean_c log p)  (reference :348-364)
-                logs = F.transform(
-                    vector_to_array(F.col(o["probability"])),
-                    lambda p: F.log(F.greatest(p, F.lit(EPSILON))),
-                )
-                mean_log = (
-                    F.aggregate(logs, F.lit(0.0), lambda a, x: a + x) / F.lit(float(k))
-                )
-                contribs.append(
-                    F.transform(logs, lambda lp: F.lit(k - 1.0) * (lp - mean_log))
-                )
-            else:
-                pred = F.col(o["prediction"])
-                classes = F.sequence(F.lit(0), F.lit(k - 1))
-                contribs.append(
-                    F.transform(
-                        classes,
-                        lambda c: F.when(pred == c.cast("double"), F.lit(w)).otherwise(
-                            F.lit(-w / (k - 1.0))
-                        ),
-                    )
-                )
-        return df, sum_arrays(contribs), tmp
+        if real:
+            # (K−1)(log p_c − mean_c log p)  (reference :348-364); each
+            # member's probability array and log probabilities projected once
+            arrays = [f"__boost_a{i}" for i in range(len(outs))]
+            logs = [[f"__boost_l{i}_{c}" for c in range(k)] for i in range(len(outs))]
+            df = df.select(
+                "*",
+                *[vector_to_array(F.col(o["probability"])).alias(a) for o, a in zip(outs, arrays)],
+            ).select(
+                "*",
+                *[
+                    F.log(F.greatest(F.element_at(a, c + 1), F.lit(EPSILON))).alias(name)
+                    for a, names in zip(arrays, logs)
+                    for c, name in enumerate(names)
+                ],
+            )
+            tmp += arrays + sum(logs, [])
+            logs = [list(map(F.col, names)) for names in logs]
+            means = [reduce(operator.add, ls, F.lit(0.0)) / F.lit(float(k)) for ls in logs]
+            votes = [[F.lit(k - 1.0) * (ls[c] - m) for ls, m in zip(logs, means)] for c in range(k)]
+        else:
+            votes = [
+                [
+                    F.when(F.col(o["prediction"]) == float(c), w).otherwise(-w / (k - 1.0))
+                    for o, w in zip(outs, self.weights)
+                ]
+                for c in range(k)
+            ]
+        return df, [reduce(operator.add, v) for v in votes], tmp
 
-    def _probability_from_raw(self, raw: str) -> Column:
+    def _probabilities(self, raw: List[str]) -> List[str]:
         # softmax(raw / (K−1))  (reference :341-346)
-        return softmax_array(scale_array(F.col(raw), F.lit(1.0 / (self.numClasses - 1.0))))
+        scale = double_literal_sql(1.0 / (self.numClasses - 1.0))
+        return softmax([f"{r} * {scale}" for r in raw])[2]

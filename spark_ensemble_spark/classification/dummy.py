@@ -13,7 +13,7 @@ import math
 from typing import List
 
 from pyspark.ml.param import Param, Params, TypeConverters
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_ensemble_spark.core.base import (
@@ -23,6 +23,7 @@ from spark_ensemble_spark.core.base import (
 )
 from spark_ensemble_spark.core.instances import get_num_classes
 from spark_ensemble_spark.core.params import one_of
+from spark_ensemble_spark.functions.detmath import double_literal_sql
 
 _STRATEGIES = ("uniform", "prior", "constant")
 
@@ -94,12 +95,11 @@ class DummyClassificationModel(EnsembleClassificationModel, _DummyClassifierPara
         self.rawPrediction = list(raw_prediction or [0.0] * num_classes)
         self.probability = list(probability or [1.0 / num_classes] * num_classes)
 
-    def _raw_array_setup(self, df: DataFrame):
-        raw = F.array(*[F.lit(v) for v in self.rawPrediction])
-        return df, raw, []
+    def _raw_scores(self, df: DataFrame):
+        return df, [F.lit(v) for v in self.rawPrediction], []
 
-    def _probability_from_raw(self, raw: str) -> Column:
-        return F.array(*[F.lit(v) for v in self.probability])
+    def _probabilities(self, raw: List[str]) -> List[str]:
+        return [double_literal_sql(float(v)) for v in self.probability]
 
     def predict(self, features=None) -> float:
         return float(max(range(self.numClasses), key=lambda i: self.probability[i]))

@@ -17,7 +17,7 @@ Semantic parity with
 
 The round itself is the GBM family's shared
 :class:`~spark_ensemble_spark.boosting.gbm_params.GBMEstimator` loop, whose
-running raw score is here an array of ``dim`` doubles; this module holds the
+running raw scores are here ``dim`` double columns; this module holds the
 init raw scores and the L-BFGS-B step search.
 """
 
@@ -28,10 +28,10 @@ from typing import List, Optional, Sequence
 
 from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.ml.param.shared import HasParallelism
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_ensemble_spark.boosting.gbm_params import RAW, GBMEstimator, GBMParams
+from spark_ensemble_spark.boosting.gbm_params import GBMEstimator, GBMParams, raw_columns
 from spark_ensemble_spark.boosting.losses import classification_loss
 from spark_ensemble_spark.core.base import (
     ClassifierParams,
@@ -87,11 +87,11 @@ class GBMClassifier(GBMEstimator, _GBMClassifierParams):
             raise ValueError(f"loss='{loss_name}' supports binary labels only")
         gl = classification_loss(loss_name, num_classes)
         init_raw = self._init_raw(train, num_classes, gl.dim)
-        raw0 = F.array(*[F.lit(v) for v in init_raw])
+        raw0 = [F.lit(v).alias(r) for v, r in zip(init_raw, raw_columns(gl.dim))]
         models, subspaces, weights, num_features = self._boost(
             train,
             val_rows,
-            lambda instances: instances.withColumn(RAW, raw0),
+            lambda instances: instances.select("*", *raw0),
             gl,
             self.getOrDefault(self.parallelism),
         )
@@ -104,13 +104,6 @@ class GBMClassifier(GBMEstimator, _GBMClassifierParams):
             models=models,
             num_features=num_features,
         )
-
-    def _raw_score(self, j: int) -> str:
-        return f"element_at({RAW}, {j + 1})"
-
-    def _raw_advance(self, weights: List[float], dirs: List[str]) -> Column:
-        steps = F.array(*[F.lit(w) * F.col(d) for w, d in zip(weights, dirs)])
-        return F.zip_with(F.col(RAW), steps, lambda p, d: p + d)
 
     def _step_search(self, gl, bag: DataFrame, dirs: List[str]) -> List[float]:
         """Bound-constrained step-size optimization (reference breeze LBFGSB,
@@ -150,7 +143,7 @@ class GBMClassificationModel(HasMembers, EnsembleClassificationModel, _GBMClassi
         self.models = [list(ms) for ms in (models or [])]
         self.numFeatures = int(num_features)
 
-    def _raw_array_setup(self, df: DataFrame):
+    def _raw_scores(self, df: DataFrame):
         flat_models = [m for ms in self.models for m in ms]
         flat_subspaces = [s for s in self.subspaces for _ in range(self.dim)]
         df, outs, tmp = score_base_models(
@@ -164,19 +157,15 @@ class GBMClassificationModel(HasMembers, EnsembleClassificationModel, _GBMClassi
         comp = []
         for j in range(self.dim):
             e = F.lit(self.initRaw[j])
-            for i in range(self.numModels):
-                o = outs[i * self.dim + j]
-                e = e + F.lit(self.weights[i][j]) * F.col(o["prediction"])
+            for ws, o in zip(self.weights, outs[j :: self.dim]):
+                e = e + F.lit(ws[j]) * F.col(o["prediction"])
             comp.append(e)
         if self.dim == 1 and self.numClasses == 2:
-            raw = F.array(-comp[0], comp[0])
-        else:
-            raw = F.array(*comp)
-        return df, raw, tmp
+            comp = [-comp[0], comp[0]]
+        return df, comp, tmp
 
-    def _probability_from_raw(self, raw: str) -> Column:
-        gl = classification_loss(self.getLoss(), self.numClasses)
-        return F.expr(gl.link([f"element_at({raw}, {j + 1})" for j in range(self.dim)]))
+    def _probabilities(self, raw: List[str]) -> List[str]:
+        return classification_loss(self.getLoss(), self.numClasses).link(raw)
 
     # ``models`` is one list of ``dim`` members per round; on disk it is the
     # flat ``model-$i`` sequence, round-major.

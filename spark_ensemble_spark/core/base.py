@@ -25,8 +25,12 @@ AdaBoost's are in :mod:`~spark_ensemble_spark.core.families`, and GBM's is
 
 Scoring strategy (SURVEY.md §3.2): the reference evaluates every base model
 per row inside one executor closure; we instead chain N JVM ``transform``s,
-each writing uniquely-named columns, and combine them with Catalyst array
-expressions. No Python round-trip, plans stay whole-stage-codegen'd, and any
+each writing uniquely-named columns, and combine them with scalar Catalyst
+expressions: a regressor's one prediction, and a classifier's K raw scores
+and K probabilities, one expression per class. No Python round-trip and no
+higher-order-function lambda (those are CodegenFallback and run interpreted
+per row), so the combine is whole-stage-codegen'd; only a median vote folds
+an array (:func:`~spark_ensemble_spark.core.utils.weighted_median`). Any
 pyspark.ml base learner (Java- or Python-backed) works unmodified.
 """
 
@@ -222,31 +226,33 @@ class EnsembleRegressionModel(EnsembleModel, PredictorParams):
 class EnsembleClassificationModel(EnsembleModel, ClassifierParams):
     """Base for probabilistic classification ensembles.
 
-    Subclasses produce a raw-prediction array column (``_raw_array_setup``) and
-    the raw→probability link (``_probability_from_raw``); this base turns them
-    into Spark-ML-conventional ``rawPrediction``/``probability`` vectors and an
-    argmax-of-probability ``prediction`` (first-max tie-break, matching
-    ``Vector.argmax``).
+    Subclasses produce the K raw scores (``_raw_scores``) and the
+    raw→probability link over them (``_probabilities``), each class's score
+    one scalar expression; this base builds each vector once, as Spark-ML-
+    conventional ``rawPrediction``/``probability`` vectors, and an argmax
+    ``prediction`` (first-max tie-break, matching ``Vector.argmax``).
     """
 
-    def _raw_array_setup(self, df: DataFrame) -> Tuple[DataFrame, Column, List[str]]:
+    def _raw_scores(self, df: DataFrame) -> Tuple[DataFrame, List[Column], List[str]]:
+        """``(df, the K raw-score Columns, temp columns to drop)``."""
         raise NotImplementedError
 
-    def _probability_from_raw(self, raw: str) -> Column:
-        """The probability array from the raw array column named ``raw``."""
+    def _probabilities(self, raw: List[str]) -> List[str]:
+        """The K probabilities as SQL text over the raw-score columns
+        named ``raw``."""
         raise NotImplementedError
 
     def _transform(self, df: DataFrame) -> DataFrame:
         self._validate_input(df, fitting=False)
-        df, raw, tmp = self._raw_array_setup(df)
-        raw_col = "__ens_raw"
-        df = df.withColumn(raw_col, raw)
-        tmp = list(tmp) + [raw_col]
-        prob = self._probability_from_raw(raw_col)
-        prob_col = "__ens_prob"
-        df = df.withColumn(prob_col, prob)
-        tmp.append(prob_col)
-        out = df
+        df, scores, tmp = self._raw_scores(df)
+        raw = [f"__ens_r{j}" for j in range(len(scores))]
+        df = df.select("*", *[s.alias(r) for s, r in zip(scores, raw)])
+        raw_col, prob_col = "__ens_raw", "__ens_prob"
+        out = df.select(
+            "*",
+            F.array(*raw).alias(raw_col),
+            F.array(*[F.expr(p) for p in self._probabilities(raw)]).alias(prob_col),
+        )
         if self.getRawPredictionCol():
             out = out.withColumn(self.getRawPredictionCol(), array_to_vector(F.col(raw_col)))
         if self.getProbabilityCol():
@@ -256,4 +262,4 @@ class EnsembleClassificationModel(EnsembleModel, ClassifierParams):
         # they can disagree for non-monotone probability links (GBM margin
         # losses), and the reference inherits exactly this behavior.
         out = out.withColumn(self.getPredictionCol(), argmax_array(F.col(raw_col)))
-        return out.drop(*tmp)
+        return out.drop(*tmp, *raw, raw_col, prob_col)

@@ -2,13 +2,15 @@
 
 Everything here builds Catalyst expressions (JVM-side, whole-stage codegen) —
 the reference's per-row closures (``ensemble/Utils.scala:26-40`` weighted
-median, BLAS vector loops in the models) become array-column expressions.
+median, BLAS vector loops in the models) become column expressions.
 """
 
 from __future__ import annotations
 
+import operator
 from concurrent.futures import ThreadPoolExecutor
-from typing import Callable, List, Optional, Sequence
+from functools import reduce
+from typing import Callable, List, Optional, Sequence, Tuple
 
 from pyspark.ml.base import Estimator
 from pyspark.sql import Column, DataFrame
@@ -87,19 +89,13 @@ def run_parallel(thunks: Sequence[Callable[[], object]], parallelism: int) -> Li
 def array_mean(cols: Sequence[str]) -> Column:
     """Mean of N prediction columns — bagging-regressor combine
     (``BaggingRegressor.scala:221-228``)."""
-    total = None
-    for c in cols:
-        total = F.col(c) if total is None else total + F.col(c)
-    return total / float(len(cols))
+    return reduce(operator.add, map(F.col, cols)) / float(len(cols))
 
 
 def weighted_mean(cols: Sequence[str], weights: Sequence[float]) -> Column:
     """Weighted mean of N prediction columns — boosting mean vote
     (``BoostingRegressor.scala:338-340``)."""
-    total = None
-    for c, w in zip(cols, weights):
-        term = F.col(c) * float(w)
-        total = term if total is None else total + term
+    total = reduce(operator.add, (F.col(c) * float(w) for c, w in zip(cols, weights)))
     return total / float(sum(weights))
 
 
@@ -150,27 +146,16 @@ def argmax_array(arr: Column) -> Column:
     return (F.array_position(arr, F.array_max(arr)) - F.lit(1)).cast("double")
 
 
-def softmax_array(arr: Column) -> Column:
-    """Numerically-stable softmax over an array<double> column."""
-    mx = F.array_max(arr)
-    exps = F.transform(arr, lambda x: F.exp(x - mx))
-    total = F.aggregate(exps, F.lit(0.0), lambda a, x: a + x)
-    return F.transform(exps, lambda x: x / total)
-
-
-def scale_array(arr: Column, factor: Column) -> Column:
-    return F.transform(arr, lambda x: x * factor)
-
-
-def add_arrays(a: Column, b: Column) -> Column:
-    return F.zip_with(a, b, lambda x, y: x + y)
-
-
-def sum_arrays(arrs: Sequence[Column]) -> Column:
-    total = arrs[0]
-    for a in arrs[1:]:
-        total = add_arrays(total, a)
-    return total
+def softmax(ps: Sequence[str]) -> Tuple[str, str, List[str]]:
+    """Numerically stable softmax of ``K`` scores given as SQL text:
+    ``(max, Σ_j exp(p_j − max), [exp(p_j − max) / Σ])``. Scalar arithmetic
+    over the K scores, so whole-stage codegen compiles it; an array form
+    would need higher-order-function lambdas, which run interpreted."""
+    ps = [f"({p})" for p in ps]
+    m = f"greatest({', '.join(ps)})" if len(ps) > 1 else ps[0]
+    exps = [f"exp({p} - {m})" for p in ps]
+    total = f"({' + '.join(exps)})"
+    return m, total, [f"{e} / {total}" for e in exps]
 
 
 class DFIterationCache:

@@ -28,7 +28,7 @@ from pyspark.ml.param import Param, Params, TypeConverters
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from spark_ensemble_spark.boosting.gbm_params import RAW, GBMEstimator, GBMParams
+from spark_ensemble_spark.boosting.gbm_params import GBMEstimator, GBMParams, raw_columns
 from spark_ensemble_spark.boosting.losses import GBMLoss, regression_loss
 from spark_ensemble_spark.core.base import (
     EnsembleRegressionModel,
@@ -39,6 +39,8 @@ from spark_ensemble_spark.core.base import (
 from spark_ensemble_spark.core.optim import minimize_scalar_batched
 from spark_ensemble_spark.core.params import one_of
 from spark_ensemble_spark.core.utils import fit_base_learner
+
+_RAW = raw_columns(1)[0]
 
 _LOSSES = ("squared", "absolute", "huber", "quantile", "logcosh", "scaledlogcosh")
 _INIT = ("constant", "zero", "base")
@@ -99,8 +101,8 @@ class GBMRegressor(GBMEstimator, _GBMRegressorParams):
 
         def start(instances: DataFrame) -> DataFrame:
             return init.transform(
-                instances, {init.getParam("predictionCol"): RAW}
-            ).select("label", "weight", "features", RAW)
+                instances, {init.getParam("predictionCol"): _RAW}
+            ).select("label", "weight", "features", _RAW)
 
         gl = regression_loss(self.getLoss(), self.getAlpha(), quantile_delta=delta)
         models, subspaces, weights, num_features = self._boost(train, val_rows, start, gl)
@@ -121,11 +123,8 @@ class GBMRegressor(GBMEstimator, _GBMRegressorParams):
         """Huber re-estimates δ each round as the α-quantile of |residual|."""
         if self.getLoss() != "huber":
             return gl
-        delta = self._quantile(state, F.abs(F.col("label") - F.col(RAW)))
+        delta = self._quantile(state, F.abs(F.col("label") - F.col(_RAW)))
         return regression_loss("huber", self.getAlpha(), quantile_delta=delta)
-
-    def _raw_score(self, j: int) -> str:
-        return RAW
 
     def _step_search(self, gl: GBMLoss, bag: DataFrame, dirs: List[str]) -> List[float]:
         """Brent's line search of the step in [0, 100] as batched grid
@@ -135,9 +134,6 @@ class GBMRegressor(GBMEstimator, _GBMRegressorParams):
                 lambda xs: self._step_sums(gl, bag, dirs, [[x] for x in xs])[0], 0.0, 100.0
             )
         ]
-
-    def _raw_advance(self, weights: List[float], dirs: List[str]) -> Column:
-        return F.col(RAW) + F.lit(weights[0]) * F.col(dirs[0])
 
 
 class GBMRegressionModel(HasMembers, EnsembleRegressionModel, _GBMRegressorParams):

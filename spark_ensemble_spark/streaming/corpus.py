@@ -17,7 +17,7 @@ from pyspark.sql import types as T
 from spark_ensemble_spark.functions.rounding import floor_round as _floor_round
 
 from spark_ensemble_spark.operators.dedup import _shingle_strings
-from spark_ensemble_spark.streaming.runner import replay_session, run_to_memory
+from spark_ensemble_spark.streaming.runner import int_setting, replay_session, run_to_memory
 
 def decontaminate_stream(
     docs: DataFrame,
@@ -49,8 +49,8 @@ bloom_contamination` (explode → groupBy, the high-throughput shape), the
 
     * the per-gram probe ran as CodegenFallback higher-order lambdas —
       interpreted, no subexpression elimination (measured 2.2s/pass at
-      sf0.1 after the r6 fixes; native ``hashlib`` + integer probes do the
-      same 1M grams in ~60ms/task);
+      sf0.1 after the r6 fixes; native ``hashlib`` + integer probes cost
+      ~2 µs/gram single-threaded, i.e. ~2.1s per 1M grams over all tasks);
     * the 2^20-bit mask rode the PLAN as a 16384-element array literal
       referenced from every probe — and a STREAMING query re-analyzes its
       plan every micro-batch, so each trigger re-walked a multi-MB
@@ -127,6 +127,12 @@ def read_documents_stream(
     return reader.parquet(path)
 
 
+def _replay_width(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions``, or ``defaultParallelism`` for ``auto``."""
+    key = "spark.sql.shuffle.partitions"
+    return int_setting(spark.conf.get(key), spark.sparkContext.defaultParallelism, key)
+
+
 def streaming_decontaminate(
     spark: SparkSession,
     sf_dir: str,
@@ -166,7 +172,7 @@ def streaming_decontaminate(
     stream = (
         read_documents_stream(spark, sf_dir)
         .select("doc_id", "text")
-        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")))
+        .repartition(_replay_width(spark))
     )
     kept = decontaminate_stream(
         stream,

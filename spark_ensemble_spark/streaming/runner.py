@@ -18,6 +18,7 @@ it exists purely for the replay-verification harness.
 from __future__ import annotations
 
 import itertools
+import logging
 import os
 import shutil
 import tempfile
@@ -25,6 +26,18 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 _SEQ = itertools.count(1)
+_log = logging.getLogger(__name__)
+
+
+def int_setting(value, default: int, name: str) -> int:
+    """``int(value)``, or ``default`` (logged) for a non-integer such as
+    Databricks' ``spark.sql.shuffle.partitions=auto``."""
+    try:
+        return int(value)
+    except (TypeError, ValueError):
+        _log.warning("%s=%r is not an integer; using %d", name, value, default)
+        return default
+
 
 # Stateful streaming fixes its state-partition count to spark.sql.shuffle
 # .partitions at query start, and EVERY micro-batch (including the no-data
@@ -35,7 +48,9 @@ _SEQ = itertools.count(1)
 # harness therefore plans streams on a cloned session with a small state
 # partition count; production deployments size state partitions to sustained
 # load (thousands at 100 TB), which this module never dictates.
-_REPLAY_SHUFFLE = int(os.environ.get("SPARK_ENSEMBLE_STREAM_SHUFFLE", "8"))
+_REPLAY_SHUFFLE = int_setting(
+    os.environ.get("SPARK_ENSEMBLE_STREAM_SHUFFLE", "8"), 8, "SPARK_ENSEMBLE_STREAM_SHUFFLE"
+)
 
 
 def replay_session(spark: SparkSession, state_partitions: int | None = None) -> SparkSession:

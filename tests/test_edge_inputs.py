@@ -1,10 +1,15 @@
-"""Degenerate-input robustness: empty frames, single rows, null text.
+"""Degenerate-input robustness: empty frames, single rows, null text, and
+non-numeric width settings.
 
 At 100 TB a partition-pruned or freshly-bootstrapped pipeline routinely hands
 operators an EMPTY (or one-row) frame; an operator that throws on it takes
 the whole job down. Each test asserts the operator returns a well-formed
 (usually empty) result instead of raising.
 """
+
+import importlib
+import logging
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -229,3 +234,41 @@ def test_round7_ops_on_empty(empty_docs, spark):
     empty_vecs = spark.createDataFrame([], "vec_id long, embedding array<double>")
     out = pca_project(empty_vecs, proj)
     assert out.count() == 0 and out.columns == ["vec_id", "embedding", "pca"]
+
+
+_RUNNER_LOG = "spark_ensemble_spark.streaming.runner"
+
+
+@pytest.mark.parametrize("partitions, want", [("auto", 6), ("12", 12), ("4", 4)])
+def test_replay_width_survives_non_numeric_shuffle_partitions(caplog, partitions, want):
+    """``spark.sql.shuffle.partitions=auto`` (Databricks) falls back to
+    ``defaultParallelism`` with a warning; a number keeps its width."""
+    from spark_ensemble_spark.streaming.corpus import _replay_width
+
+    spark = SimpleNamespace(
+        conf=SimpleNamespace(get={"spark.sql.shuffle.partitions": partitions}.__getitem__),
+        sparkContext=SimpleNamespace(defaultParallelism=6),
+    )
+    with caplog.at_level(logging.WARNING, logger=_RUNNER_LOG):
+        assert _replay_width(spark) == want
+    assert ("not an integer" in caplog.text) == (partitions == "auto")
+
+
+@pytest.mark.parametrize("value, want", [("auto", 8), ("", 8), ("3", 3), (None, 8)])
+def test_replay_shuffle_env_survives_non_numeric_value(monkeypatch, caplog, value, want):
+    """A non-numeric ``SPARK_ENSEMBLE_STREAM_SHUFFLE`` no longer fails the
+    import of the streaming package: it falls back to 8 with a warning."""
+    from spark_ensemble_spark.streaming import runner
+
+    seq = runner._SEQ  # keep memory-sink names unique across the reloads
+    if value is None:
+        monkeypatch.delenv("SPARK_ENSEMBLE_STREAM_SHUFFLE", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_ENSEMBLE_STREAM_SHUFFLE", value)
+    try:
+        with caplog.at_level(logging.WARNING, logger=_RUNNER_LOG):
+            assert importlib.reload(runner)._REPLAY_SHUFFLE == want
+        assert ("not an integer" in caplog.text) == (value in ("auto", ""))
+    finally:
+        monkeypatch.undo()
+        importlib.reload(runner)._SEQ = seq

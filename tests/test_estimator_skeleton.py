@@ -537,6 +537,80 @@ FITTED_VALUES = {
 }
 
 
+# Classifier fits whose scored outputs are pinned below: name -> (estimator
+# factory, training frame).
+CLASSIFIER_OUTPUTS = {
+    "BaggingClassifier(hard)": (
+        lambda: BaggingClassifier(
+            baseLearner=DecisionTreeClassifier(maxDepth=2), numBaseLearners=3, seed=3
+        ),
+        "clf",
+    ),
+    "BaggingClassifier(soft)": ESTIMATORS["BaggingClassifier"],
+    "BoostingClassifier(real)": (
+        lambda: BoostingClassifier(
+            baseLearner=DecisionTreeClassifier(maxDepth=2), numBaseLearners=3
+        ),
+        "clf",
+    ),
+    "BoostingClassifier(discrete)": ESTIMATORS["BoostingClassifier"],
+    "GBMClassifier(logloss)": ESTIMATORS["GBMClassifier"],
+    "GBMClassifier(bernoulli, optimizedWeights=True)": (
+        lambda: GBMClassifier(
+            baseLearner=DecisionTreeRegressor(maxDepth=2),
+            numBaseLearners=2,
+            loss="bernoulli",
+            optimizedWeights=True,
+        ),
+        "bin",
+    ),
+    "DummyClassifier": ESTIMATORS["DummyClassifier"],
+    "StackingClassifier": ESTIMATORS["StackingClassifier"],
+}
+
+# Captured while each classifier still combined its members as arrays: the
+# exactly rounded sum (math.fsum) over the training frame of every
+# rawPrediction and probability component, and of prediction.
+CLASSIFIER_OUTPUT_SUMS = {
+    "BaggingClassifier(hard)": {
+        "rawPrediction": [105.0, 105.0, 78.0],
+        "probability": [35.0, 35.0, 26.0],
+        "prediction": 87.0,
+    },
+    "BaggingClassifier(soft)": {
+        "rawPrediction": [65.07954545454545, 68.45328282828284, 58.467171717171716],
+        "probability": [32.53977272727273, 34.22664141414142, 29.233585858585858],
+        "prediction": 87.0,
+    },
+    "BoostingClassifier(real)": {
+        "rawPrediction": [-290.5107403408543, 412.89086163973946, -122.38012129888529],
+        "probability": [14.000679168276179, 54.99934088389847, 26.99997994782535],
+        "prediction": 111.0,
+    },
+    "BoostingClassifier(discrete)": {
+        "rawPrediction": [24.227407628795515, -6.7303851843257005, -17.497022444469813],
+        "probability": [35.65873861216614, 31.658911850792602, 28.682349537041254],
+        "prediction": 87.0,
+    },
+    "GBMClassifier(logloss)": {
+        "rawPrediction": [-99.68445184754573, -96.58829112495322, -122.01517276768709],
+        "probability": [34.05683264588197, 34.51157113109157, 27.431596223026464],
+        "prediction": 87.0,
+    },
+    "GBMClassifier(bernoulli, optimizedWeights=True)": {
+        "rawPrediction": [-51.604686202961034, 51.604686202961034],
+        "probability": [38.27317109890459, 57.72682890109541],
+        "prediction": 62.0,
+    },
+    "DummyClassifier": {
+        "rawPrediction": [-99.64681601776078, -96.86401247792857, -121.7770872444967],
+        "probability": [34.0, 35.0, 27.0],
+        "prediction": 96.0,
+    },
+    "StackingClassifier": {"prediction": 87.0},
+}
+
+
 ENUMERATED = [
     (BaggingClassifier, "votingStrategy"),
     (BoostingRegressor, "lossType"),
@@ -608,9 +682,12 @@ def test_setter_surface(spark, name):
 def test_twins_hold_no_plumbing():
     """Setters, constructors, setParams, fit epilogues, copy, persistence,
     ``numModels`` and the stacking fit and scoring live in ``core/``; only
-    GBMClassificationModel keeps a save/load pair."""
+    GBMClassificationModel keeps a save/load pair. The GBM round's raw-score
+    columns and their advance are the family's, not a twin's."""
     import spark_ensemble_spark as pkg
 
+    for twin in (pkg.GBMRegressor, pkg.GBMClassifier):
+        assert not {"_raw_score", "_raw_advance"} & set(vars(twin)), twin.__name__
     assert pkg.StackingRegressor._fit_model is pkg.StackingClassifier._fit_model
     assert pkg.StackingRegressionModel._transform is pkg.StackingClassificationModel._transform
     for name in pkg.__all__:
@@ -752,6 +829,78 @@ def test_bagged_gbm_values_are_pinned(fitted, key):
     frames, _ = fitted
     make, kind = BAGGED_GBM[key]
     _check_fitted_values(make().fit(frames[kind]), frames[kind], key)
+
+
+@pytest.fixture(scope="module")
+def classifier_outputs(fitted):
+    frames, _ = fitted
+    return {
+        key: (make().fit(frames[kind]), frames[kind])
+        for key, (make, kind) in CLASSIFIER_OUTPUTS.items()
+    }
+
+
+@pytest.mark.parametrize("key", sorted(CLASSIFIER_OUTPUTS))
+def test_classifier_outputs_are_pinned(classifier_outputs, key):
+    """Every rawPrediction and probability component a classifier scores
+    stays bit-identical: a prediction sum alone is an integer that cannot see
+    a drift in the raw scores or their link."""
+    model, frame = classifier_outputs[key]
+    want = CLASSIFIER_OUTPUT_SUMS[key]
+    outputs = [c for c in ("rawPrediction", "probability") if c in want]
+    rows = model.transform(frame).select("prediction", *outputs).collect()
+    for c in outputs:
+        got = [math.fsum(r[c][j] for r in rows) for j in range(len(want[c]))]
+        assert len(rows[0][c]) == len(want[c]), f"{key} {c} size"
+        assert got == want[c], f"{key} sum({c})"
+    assert math.fsum(r["prediction"] for r in rows) == want["prediction"], key
+
+
+def _optimized_plan(df):
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_ml_plans_hold_no_lambda(fitted, classifier_outputs, monkeypatch):
+    """Every classifier combines its members as K scalar expressions, which
+    whole-stage codegen compiles; a higher-order-function lambda would run
+    interpreted per row. So neither a classification model's transform nor a
+    GBMClassifier round's state holds one. Among the regression models only
+    BoostingRegressionModel's median vote does: ``weighted_median`` is an
+    order statistic over the members."""
+    from spark_ensemble_spark.core.utils import DFIterationCache
+
+    frames, models = fitted
+    for key, (model, frame) in classifier_outputs.items():
+        assert "lambdafunction" not in _optimized_plan(model.transform(frame)), key
+
+    states = []
+    real_update = DFIterationCache.update
+
+    def recording(self, df):
+        states.append(df)
+        return real_update(self, df)
+
+    monkeypatch.setattr(DFIterationCache, "update", recording)
+    for loss, kind in (("logloss", "clf"), ("bernoulli", "bin")):
+        states.clear()
+        GBMClassifier(
+            baseLearner=DecisionTreeRegressor(maxDepth=2), numBaseLearners=2, loss=loss
+        ).fit(frames[kind])
+        assert len(states) == 3, loss  # the init state and one frame a round
+        for state in states:
+            assert "lambdafunction" not in _optimized_plan(state), loss
+    monkeypatch.undo()
+
+    regressors = {n: models[n] for n in NAMES if _kind(n) == "reg"}
+    regressors["BoostingRegressor(mean)"] = models["BoostingRegressor"].copy(
+        {models["BoostingRegressor"].votingStrategy: "mean"}
+    )
+    with_lambda = {
+        n for n, m in regressors.items()
+        if "lambdafunction" in _optimized_plan(m.transform(frames["reg"]))
+    }
+    assert models["BoostingRegressor"].getVotingStrategy() == "median"
+    assert with_lambda == {"BoostingRegressor"}
 
 
 # (estimator, size Param, out-of-range values); the docs give the ranges

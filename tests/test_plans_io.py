@@ -552,16 +552,32 @@ def test_ivfpq_residual_beats_no_residual_recall(spark):
 
 def test_verify_folds_evaluate_once(spark, sf_dir):
     """Structural pin for the r6 eval-once fix: the expensive verify
-    expressions (cosine folds, Bloom md5 fold) must appear exactly once in
-    the optimized plan — predicate pushdown used to clone them into the
-    Filter below the Project, re-running interpreted CodegenFallback folds
-    per candidate (2× on verify stages, ~6× on the decontamination chain).
-    If a future optimizer change collapses the explode(array(...)) barrier,
-    these counts catch it."""
+    expression (the cosine fold) must appear exactly once in the optimized
+    plan — predicate pushdown used to clone it into the Filter below the
+    Project, re-running an interpreted CodegenFallback fold per candidate
+    (2× on verify stages). If a future optimizer change collapses the
+    explode(array(...)) barrier, this catches it."""
     import re
 
-    from spark_ensemble_spark.operators.corpus import ngram_bloom_build
     from spark_ensemble_spark.operators.dedup import embedding_dup_pairs
+    from spark_ensemble_spark.sources.datasets import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    pairs = embedding_dup_pairs(emb, "embedding", "vec_id", threshold=0.9, dim=64)
+    pplan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    # the cosine fold (3 aggregates: dot + two norms) must not be cloned
+    # into any Filter node — filters may only reference the generated column
+    filter_lines = [ln for ln in pplan.split("\n") if re.match(r"\s*\+?-?\s*Filter ", ln)]
+    assert filter_lines, pplan
+    for ln in filter_lines:
+        assert "aggregate(" not in ln, ln[:300]
+
+
+def test_decontaminate_plan_is_literal_free(spark, sf_dir):
+    """The Bloom decontamination filter's plan carries no md5 and no mask
+    literal: the per-gram md5 + Bloom probes run in one Arrow seam, after
+    an r6-era shape that cloned an interpreted md5 fold ~6× per row."""
+    from spark_ensemble_spark.operators.corpus import ngram_bloom_build
     from spark_ensemble_spark.sources.datasets import load_table
     from spark_ensemble_spark.streaming.corpus import decontaminate_stream
 
@@ -584,16 +600,6 @@ def test_verify_folds_evaluate_once(spark, sf_dir):
     assert "MapInPandas" in plan, plan[:500]
     assert "regexp_replace" in plan, "JVM gram normalization left the plan"
     assert len(plan) < 100_000, f"plan tree ballooned: {len(plan)} chars"
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    pairs = embedding_dup_pairs(emb, "embedding", "vec_id", threshold=0.9, dim=64)
-    pplan = pairs._jdf.queryExecution().optimizedPlan().toString()
-    # the cosine fold (3 aggregates: dot + two norms) must not be cloned
-    # into any Filter node — filters may only reference the generated column
-    filter_lines = [ln for ln in pplan.split("\n") if re.match(r"\s*\+?-?\s*Filter ", ln)]
-    assert filter_lines, pplan
-    for ln in filter_lines:
-        assert "aggregate(" not in ln, ln[:300]
 
 
 def test_leakage_safe_splits_plan_single_equijoin(spark, sf_dir):

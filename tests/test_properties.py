@@ -143,15 +143,16 @@ def test_softmax_argmax_invariants(spark):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from spark_ensemble_spark.core.utils import argmax_array, softmax_array
+    from spark_ensemble_spark.core.utils import argmax_array, softmax
 
     rng = np.random.default_rng(3)
     rows = [(rng.normal(0, 5, size=6).tolist(),) for _ in range(50)]
     rows.append(([1.0, 3.0, 3.0, 0.0, 3.0, -1.0],))  # tie case
     df = spark.createDataFrame(rows, ["arr"])
+    probs = softmax([f"element_at(arr, {j + 1})" for j in range(6)])[2]
     out = df.select(
         "arr",
-        softmax_array(F.col("arr")).alias("sm"),
+        F.array(*[F.expr(p) for p in probs]).alias("sm"),
         argmax_array(F.col("arr")).alias("am"),
     ).collect()
     for row in out:
